@@ -35,9 +35,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2, in
-    driver-board order: the first 50 are one representative per
-    operator family (registry.BOARD), the rest are within-family
-    variants (registry.BACK) hash-checked locally."""
+    registration order."""
     return _registry.ordered_queries()
 
 

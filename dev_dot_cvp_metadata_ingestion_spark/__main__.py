@@ -116,7 +116,14 @@ def _pipeline_main(spark, args) -> int:
     if args.streaming:
         from .streaming.stream import stream_cv_pipeline
 
-        schema = spark.read.json(args.input).schema
+        # recursive like the stream's own read: partition inference
+        # over Hive-style k=v directories would otherwise raise
+        # CONFLICTING_DIRECTORY_STRUCTURES
+        schema = (
+            spark.read.option("recursiveFileLookup", "true")
+            .json(args.input)
+            .schema
+        )
 
         def sink(df, batch_id):
             df.write.mode("append").parquet(

@@ -1,11 +1,13 @@
 """End-to-end CVP pipeline (SURVEY §3.4) — the batch replacement for
 the reference's per-file Lambda: directory in → four tables out.
 
-    records  = scan (S3-S5) + provenance
-    results  = rule validation (compiled Columns) + sequential windows
-    metadata = per-file document incl. MessageCount (A1)
-    tallies  = per-file A2 aggregates
-    metrics  = CloudWatch counter shapes (A4-A6)
+    records     = scan (S3-S5) + provenance
+    results     = rule validation (compiled Columns) + sequential windows
+    tallies     = per-file A2 aggregates
+    file_counts = per-file record counts (A1)
+
+The metadata documents and CloudWatch counter shapes (A4-A6) come from
+operators/metadata.py over the file listing and these tallies.
 
 Everything is one lineage; Catalyst prunes record fields the rules
 never touch, and the only shuffles are the per-file window (sequential)
@@ -21,7 +23,6 @@ from pyspark.sql import functions as F
 
 from pyspark.sql.types import StructType
 
-from ..operators.metadata import file_metadata, file_metrics
 from ..operators.sequential import SequentialSpec, sequential_results
 from ..operators.validation import skip_flag_exprs, validate
 from ..sources.files import file_lines, file_lines_chunked
@@ -192,16 +193,6 @@ def log_progress(observations: dict, logger=None) -> dict[str, dict]:
     for name, vals in metrics.items():
         log.info("pipeline progress %s: %s", name, vals)
     return metrics
-
-
-def run_file_metadata_pipeline(
-    files: DataFrame, environment: str = "dev"
-) -> tuple[DataFrame, DataFrame]:
-    """Generic (Waze/curated) path §3.2: metadata docs + metric shapes
-    from a file catalog (bucket, key, content_length, last_modified,
-    content_type, etag)."""
-    meta = file_metadata(files, environment=environment, passthrough=("bucket",))
-    return meta, file_metrics(meta)
 
 
 def write_tables(result: PipelineResult, out_dir: str) -> dict[str, str]:

@@ -48,269 +48,9 @@ def query_names() -> list[str]:
     return sorted(QUERIES)
 
 
-# Driver-board curation: the correctness driver runs the FIRST 50
-# registered queries, so the surface is exposed in two explicit tiers.
-# BOARD (exactly 50) holds driver-verified CORRECTNESS rows; BACK holds
-# the rest, each still hash-checked against DuckDB locally by
-# tests/test_oracle_parity.py. Membership is asserted exhaustive
-# (BOARD + BACK == registered, no dupes) in
-# tests/test_registry_analyzes.py.
-#
-# Rotation policy: a board slot yields after 2+ consecutive fully
-# green driver rounds (its family coverage continues via the local
-# hash-parity suite); never-driver-checked variants rotate in. The
-# round-9 swap is annotated at the top of BOARD. No-oracle queries
-# (BPE, approximation twins) deliberately stay in BACK so every board
-# row keeps the strongest (hash) check. embedding_quantize stays for
-# its first green row after the r8 surface fix (long form).
-BOARD: tuple[str, ...] = (
-    # ROTATION (round 14, VERDICT r13 item 2): the 7 round-13
-    # additions rotate in for their FIRST driver rows (every one
-    # already green in the r13 judge's independent sf0.01 DuckDB
-    # check and in the local parity sweep). Yielding exactly 7
-    # slots, all with 2+ consecutive green driver rounds: the 5
-    # round-11 BACK additions (green r12+r13: ann_mmr_rerank_ivf,
-    # events_autocorrelation, text_bm25_prf, text_rake_keywords,
-    # events_hourly_forecast) and the 2 kept round-11 first-timers
-    # (green r11+r12+r13: events_seasonal_decomposition,
-    # ann_ivf_pq_residual_topk — the r13 recall monitor
-    # ann_pq_recall_report now holds that family's driver slot).
-    # The 16 round-12 additions stay for their second consecutive
-    # rows, and the 27 §2 re-audit reps stay so the reference's
-    # core surface keeps current driver rows.
-    # --- round-14 deliverables, first driver rows this round: the
-    # chunk-stitched sequential form (VERDICT r13 ask #1) and the
-    # capped weighted-jaccard (the sf1 spot-check's quadratic-bend
-    # fix) take immediate driver slots — the two queries whose
-    # driver evidence this round's work rides on. Yielded: two of
-    # the A7 aggregate family's FOUR board reps (orders_status_pivot,
-    # lineitem_status_cube — both green r12+r13; order_priority_rollup
-    # and orders_grouping_sets keep the family's driver presence). ---
-    "cv_sequential_checks_chunked",
-    "dedup_tfidf_weighted_jaccard_capped",
-    # --- round-13 additions, first driver rows this round ---
-    "ann_pq_recall_report",
-    "text_spelling_correction_d2",
-    "dedup_image_in_video",
-    "dedup_hub_cap_report",
-    "dedup_link_prediction_capped",
-    "dedup_link_prediction_ra",
-    "dedup_video_frame_pairs_capped",
-    # --- round-12 additions, second driver rows this round ---
-    "text_hybrid_rrf",
-    "dedup_phash_pairs",
-    "dedup_phash_clusters",
-    "dedup_sorted_neighborhood",
-    "dedup_snm_multipass",
-    "dedup_edit_distance_pairs",
-    "dedup_match_scores",
-    "dedup_link_prediction",
-    "dedup_clustering_coefficients",
-    "dedup_tfidf_weighted_jaccard",
-    "dedup_video_frame_pairs",
-    "embedding_dbscan",
-    "text_textrank_keywords",
-    "text_spelling_correction",
-    "events_theil_sen_trend",
-    "ann_ivf_recall_report",
-    # --- SURVEY §2 re-audit lap: longest-since-checked first ---
-    # (last driver rows r8 — rotated off in round 9)
-    "pricing_summary",
-    "revenue_by_nation",
-    "cv_validation_tallies",
-    "cv_sequential_checks_gated",
-    "file_metrics_counters",
-    "events_asof_last_signup",
-    "top_orders_per_priority",
-    "customers_without_orders",
-    "order_priority_rollup",
-    "part_brand_setops",
-    "supplier_balance_running",
-    "cv_now_token_validation",
-    "cv_conditional_validation",
-    "cv_message_metrics",
-    "cv_error_histogram",
-    "url_decoded_keys",
-    "events_props_map",
-    # (last driver rows r10 — rotated off in round 11)
-    "cv_validation_results",
-    "cv_sequential_checks",
-    "rules_catalog",
-    "csv_rule_validation",
-    "file_metadata_docs",
-    "suppliers_with_large_shipments",
-    "orders_grouping_sets",
-    "events_hourly_windows",
-)
-
-BACK: tuple[str, ...] = (
-    # --- rotated off mid-round-14 for the round-14 deliverables'
-    # first driver rows (A7 family keeps 2 of 4 reps on board) ---
-    "orders_status_pivot",
-    "lineitem_status_cube",
-    # --- rotated off the board in round 14 (2-3 consecutive green
-    # driver rounds each; family coverage continues via the local
-    # hash-parity suite and, for the IVF-PQ residual family, the
-    # promoted ann_pq_recall_report driver row) ---
-    "events_seasonal_decomposition",
-    "ann_ivf_pq_residual_topk",
-    "ann_mmr_rerank_ivf",
-    "events_autocorrelation",
-    "text_bm25_prf",
-    "text_rake_keywords",
-    "events_hourly_forecast",
-    # --- rotated off the board in round 13 (2 consecutive green
-    # driver rounds each, r11+r12; family coverage continues via the
-    # local hash-parity suite) ---
-    "events_cusum_alarm",
-    "events_seasonal_anomaly",
-    "events_mad_anomaly",
-    "events_hourly_trend",
-    "events_markov_stationary",
-    "events_user_outliers",
-    "events_association_rules",
-    "corpus_source_ab_test",
-    "corpus_source_robust_stats",
-    "text_collocations_pmi",
-    "text_phrase_search",
-    "ann_mmr_rerank",
-    "ann_range_search",
-    "dedup_graph_kcore",
-    "embedding_outliers",
-    "embedding_silhouette",
-    # --- rotated off the board in round 12 (2-3 green driver rounds
-    # each; family coverage continues via the local hash-parity
-    # suite, which sweeps every registered query each pytest run) ---
-    "documents_perplexity_buckets",
-    "documents_repeated_substrings",
-    "documents_substring_dup_stats",
-    "documents_substring_scrubbed",
-    "corpus_source_drift",
-    "documents_token_quantiles_hist",
-    "dedup_pagerank_centrality",
-    "dedup_graph_triangles",
-    "events_window_anomaly",
-    "events_window_anomaly_rolling",
-    "events_decayed_counts",
-    "text_bm25_topk",
-    "text_bm25_topk_and",
-    "text_rrf_fusion",
-    "corpus_heavy_hitters",
-    "corpus_bigram_heavy_hitters",
-    "embedding_pq_codes",
-    "ann_pq_adc_topk",
-    "ann_ivf_pq_topk",
-    "dedup_simhash_pairs",
-    "dedup_cluster_representatives",
-    "dedup_clusters_twostar",
-    "dedup_clusters_contracted",
-    "documents_boilerplate_removed",
-    "documents_shuffled_shards",
-    "documents_training_shards_packed",
-    "documents_gopher_rules",
-    "dedup_lsh_quality_report",
-    "dedup_ngram_pairs_capped",
-    "dedup_containment_pairs_capped",
-    "embedding_kmeans",
-    "embedding_quantize",
-    # --- rotated off the board in round 11 (2+ green driver rounds
-    # each, most since r6; family coverage continues via the promoted
-    # variants and the local hash-parity suite) ---
-    "documents_curation_funnel",
-    "documents_contamination",
-    "documents_budget_selected",
-    "dedup_keep_best",
-    "ann_ivf_kmeans_topk",
-    "embedding_label_propagation_ivf",
-    "embedding_contamination_semantic_ivf",
-    "events_range_join",
-    "multimodal_resized",
-    # --- rotated off the board in round 10 (2+ green driver rounds
-    # each — r8+r9; family coverage continues via the promoted variants
-    # and the local hash-parity suite) ---
-    "text_fingerprint_overlap",
-    "text_bigram_lm",
-    "documents_classifier_score",
-    "documents_lm_score",
-    "documents_training_examples",
-    "documents_mixture_sample",
-    "documents_rarity_score",
-    "documents_repetition_filter",
-    "corpus_source_overlap",
-    "documents_contamination_bloom",
-    "documents_paragraph_dedup",
-    "documents_importance_resampled",
-    "documents_training_shards",
-    "dedup_minhash_banded",
-    "corpus_dedup_report",
-    "embedding_centroids",
-    "embedding_zscore",
-    "events_sessionize",
-    "multimodal_frames",
-    # --- rotated off the board in round 9 (2+ green driver rounds
-    # each — r7+r8; the §2-core reps among them returned to the board
-    # for the round-12 re-audit lap) ---
-    "text_tfidf_top_terms",
-    "documents_chunked",
-    "documents_packed",
-    "documents_source_cap",
-    "dedup_ngram_pairs",
-    "dedup_containment_pairs",
-    "text_stats",
-    "documents_split",
-    "corpus_profile",
-    "documents_quality_filter",
-    "documents_curated",
-    "documents_contamination_fuzzy",
-    "dedup_exact",
-    "dedup_minhash_pairs",
-    "dedup_semantic_keep",
-    "dedup_clusters",
-    "ann_knn_join",
-    "events_top_transitions",
-    "multimodal_features",
-    "corpus_vocab_by_source",
-    "dedup_embedding_pairs",
-    "ann_bruteforce_topk",
-    "text_lang_id",
-    "text_fingerprints",
-    "text_token_counts",
-    "documents_length_histogram",
-    "dedup_simhash",
-    "ann_lsh_topk",
-    "events_funnel",
-    "events_sessionize_native",
-    "events_cohort_retention",
-    "embedding_label_propagation",
-    "embedding_contamination_semantic",
-    "text_bpe_merges",
-    "text_bpe_merges_batched",
-    "text_bpe_subwords",
-    "corpus_profile_approx",
-    "corpus_vocab_by_source_approx",
-    "corpus_source_overlap_approx",
-    # --- round-9 additions not board-eligible (no SQL oracle; PCA's
-    # driver-side eigensolve is Python-replica-pinned instead) ---
-    "embedding_pca_projected",
-    # --- round-14 additions (first driver row next rotation; the
-    # chunked sequential + capped weighted-jaccard deliverables are
-    # already on BOARD this round) ---
-    "dedup_frame_cap_report",
-    "dedup_wjaccard_cap_report",
-)
-
-
 def ordered_queries() -> dict[str, QueryFn]:
-    """Registered queries in driver-board order: BOARD first (one rep
-    per operator family — the driver's 50-run cap covers them all),
-    then BACK."""
-    missing = [n for n in BOARD + BACK if n not in QUERIES]
-    extra = [n for n in QUERIES if n not in BOARD and n not in BACK]
-    if missing or extra:
-        raise ValueError(
-            f"board curation out of sync: missing={missing} extra={extra}"
-        )
-    return {n: QUERIES[n] for n in BOARD + BACK}
+    """Registered queries in registration order."""
+    return dict(QUERIES)
 
 
 def load_all() -> None:

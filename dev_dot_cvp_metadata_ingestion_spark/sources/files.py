@@ -266,18 +266,6 @@ def file_lines_sniffed(
     return bin_df.mapInPandas(_gunzip_lines, out_schema)
 
 
-def parse_ndjson(lines: DataFrame, schema: StructType | None = None) -> DataFrame:
-    """S5: JSON-decode the line column. With an explicit (permissive,
-    all-nullable) schema this stays a single-pass from_json; without
-    one the caller should use spark.read.json for schema inference."""
-    if schema is None:
-        raise ValueError(
-            "provide an explicit schema (permissive StructType) — "
-            "schema-on-read inference belongs in spark.read.json"
-        )
-    return lines.withColumn("record", F.from_json("line", schema, {"mode": "PERMISSIVE"}))
-
-
 def records_from_dir(
     spark: SparkSession, path: str, schema: StructType | None = None
 ) -> DataFrame:

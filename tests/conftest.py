@@ -12,6 +12,34 @@ from dev_dot_cvp_metadata_ingestion_spark.session import get_spark
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
 
+# The CVP ingest queries of plans/cvp.py: registry-wide sweeps run these
+# in the default tier and the corpus/relational rest in the slow tier.
+CVP_QUERIES = (
+    "cv_validation_results",
+    "cv_now_token_validation",
+    "cv_conditional_validation",
+    "cv_validation_tallies",
+    "cv_message_metrics",
+    "cv_error_histogram",
+    "cv_sequential_checks",
+    "cv_sequential_checks_chunked",
+    "cv_sequential_checks_gated",
+    "file_metadata_docs",
+    "file_metrics_counters",
+    "url_decoded_keys",
+    "rules_catalog",
+    "csv_rule_validation",
+)
+
+
+def cvp_tiered(names):
+    """Parametrize values for a registry sweep: CVP queries as-is, every
+    other name marked ``slow``."""
+    return [
+        n if n in CVP_QUERIES else pytest.param(n, marks=pytest.mark.slow)
+        for n in names
+    ]
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -15,12 +15,23 @@ import pytest
 
 from dev_dot_cvp_metadata_ingestion_spark.plans import registry
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, cvp_tiered
 
 registry.load_all()
 
-# the partition-sensitive-by-construction designs, plus one window and
-# one iterative representative
+# the CVP queries whose plans shuffle or window: per-file/per-bundle
+# windows and per-file/per-dimension aggregates (default tier)
+CVP_SENSITIVE = [
+    "cv_sequential_checks",          # per-file window chain (+ rebalance)
+    "cv_sequential_checks_chunked",  # chunk-stitched bundle windows
+    "cv_sequential_checks_gated",    # per-file skip-flag OR in the window
+    "cv_validation_tallies",         # per-file aggregates + sequential join
+    "cv_error_histogram",            # per-(field, detail) error counts
+    "cv_message_metrics",            # per-file tallies folded per dimension
+]
+
+# the partition-sensitive-by-construction corpus designs, plus one
+# window and one iterative representative (slow tier)
 SENSITIVE = [
     "ann_knn_join",          # salted two-phase top-k
     "documents_source_cap",  # salted two-phase per-group cap
@@ -106,7 +117,7 @@ def _rows(spark, name):
     return sorted(tuple(r) for r in df.collect())
 
 
-@pytest.mark.parametrize("name", SENSITIVE)
+@pytest.mark.parametrize("name", cvp_tiered(CVP_SENSITIVE + SENSITIVE))
 def test_partition_count_invariance(spark, name):
     base = _rows(spark, name)
     assert base, name
@@ -117,12 +128,3 @@ def test_partition_count_invariance(spark, name):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     assert base == alt, f"{name} output depends on shuffle partitioning"
-
-
-# r16 fast-tier split (VERDICT r15 item 3): this module is in the SLOW
-# tier — long layout/stream/property sweeps excluded from the default
-# `-m "not slow"` run (pytest.ini) so the driver's verify-window pytest
-# completes; run the FULL suite with `pytest -m ""`.
-import pytest as _pytest_r16
-
-pytestmark = _pytest_r16.mark.slow

@@ -6,6 +6,8 @@ joins broadcast, and the sequential operator shuffles exactly once.
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
@@ -71,6 +73,8 @@ def _global_windows(df) -> list[str]:
     return found
 
 
+# whole-registry sweep (~2-3 min): slow tier
+@pytest.mark.slow
 def test_no_global_window_anywhere(spark):
     # No registered query may plan a partition-less Window — that moves
     # every row to a single task ("WindowExec: No Partition Defined").
@@ -342,6 +346,8 @@ def _is_global_sort(node) -> bool:
     ).endswith("true")
 
 
+# whole-registry sweep (~2-3 min): slow tier
+@pytest.mark.slow
 def test_no_topmost_global_sort_on_per_row_outputs(spark):
     # positive control: the detector must flag a planted global sort
     planted = spark.range(10).orderBy("id")
@@ -574,12 +580,3 @@ def test_residual_ivf_pq_serving_plan(spark):
     ]
     assert lookup, plan[:2000]
     assert plan.count("SortMergeJoin") <= 1
-
-
-# r16 fast-tier split (VERDICT r15 item 3): this module is in the SLOW
-# tier — long layout/stream/property sweeps excluded from the default
-# `-m "not slow"` run (pytest.ini) so the driver's verify-window pytest
-# completes; run the FULL suite with `pytest -m ""`.
-import pytest as _pytest_r16
-
-pytestmark = _pytest_r16.mark.slow

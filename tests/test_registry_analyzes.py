@@ -17,31 +17,19 @@ import pytest
 
 from dev_dot_cvp_metadata_ingestion_spark.plans import registry
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, cvp_tiered
 
 registry.load_all()
 
 
-@pytest.mark.parametrize("name", registry.query_names())
+@pytest.mark.parametrize("name", cvp_tiered(registry.query_names()))
 def test_query_analyzes(spark, name):
     df = registry.QUERIES[name](spark, SF_SMOKE)
     # .schema triggers full Catalyst analysis but zero execution
     assert len(df.schema.fields) > 0
 
 
-def test_board_curation_in_sync():
-    """BOARD (exactly 50 — the driver's run cap, one rep per operator
-    family) plus BACK must partition the registered set with no dupes;
-    ordered_queries() raises on drift, so a new @register without a
-    tier assignment fails here, not in the driver."""
-    assert len(registry.BOARD) == 50
-    tiers = registry.BOARD + registry.BACK
-    assert len(tiers) == len(set(tiers)), "duplicate name across tiers"
-    assert set(tiers) == set(registry.QUERIES)
-    assert list(registry.ordered_queries()) == list(tiers)
-
-
-@pytest.mark.parametrize("name", registry.query_names())
+@pytest.mark.parametrize("name", cvp_tiered(registry.query_names()))
 def test_registered_schemas_scalar_only(spark, name):
     """Every registered query's output schema must be scalar-only at
     the top level. The driver canonicalizes results via pandas
@@ -63,12 +51,3 @@ def test_registered_schemas_scalar_only(spark, name):
         f"{name} outputs driver-unhashable complex columns {complex_cols}; "
         "register a scalar surface (long form or serialized strings)"
     )
-
-
-# r16 fast-tier split (VERDICT r15 item 3): this module is in the SLOW
-# tier — long layout/stream/property sweeps excluded from the default
-# `-m "not slow"` run (pytest.ini) so the driver's verify-window pytest
-# completes; run the FULL suite with `pytest -m ""`.
-import pytest as _pytest_r16
-
-pytestmark = _pytest_r16.mark.slow

@@ -285,12 +285,3 @@ def test_offset_sn_domain_does_not_collapse_chunking(spark):
     spec = _spec(with_skip=False)
     single = _canon(sequential_results(df, spec))
     assert _canon(sequential_results(df, spec, n_chunks=8)) == single
-
-
-# r16 fast-tier split (VERDICT r15 item 3): this module is in the SLOW
-# tier — long layout/stream/property sweeps excluded from the default
-# `-m "not slow"` run (pytest.ini) so the driver's verify-window pytest
-# completes; run the FULL suite with `pytest -m ""`.
-import pytest as _pytest_r16
-
-pytestmark = _pytest_r16.mark.slow

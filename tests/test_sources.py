@@ -14,7 +14,10 @@ from dev_dot_cvp_metadata_ingestion_spark.sources.files import (
     file_lines_sniffed,
     records_from_dir,
 )
-from dev_dot_cvp_metadata_ingestion_spark.sources.rules import parse_rules_ini
+from dev_dot_cvp_metadata_ingestion_spark.sources.rules import (
+    fixture_rules_path,
+    parse_rules_ini,
+)
 
 
 def test_gzip_transparent_read(spark, tmp_path):
@@ -92,9 +95,7 @@ def test_header_audit(spark, tmp_path):
     (d / "bad.csv").write_text(
         "device,utc,wrong,blank,vsl_mph\n1,2019,2019,x,50\n"
     )
-    ruleset = parse_rules_ini(
-        open("/root/reference/odevalidator/csvconfig_2.ini").read()
-    )
+    ruleset = parse_rules_ini(open(fixture_rules_path("csvconfig_2.ini")).read())
     audits = audit_csv_headers(spark, str(d), ruleset)
     rows = {
         (r.file_path.split("/")[-1], r.position): (r.header_field, r.config_field)
