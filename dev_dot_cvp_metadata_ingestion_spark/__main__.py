@@ -160,6 +160,7 @@ def _pipeline_main(spark, args) -> int:
             }
             for r in result.tallies.collect()
         }
+        result.unpersist()
         print(
             json.dumps(
                 {

@@ -1,1 +1,1 @@
-from .validation import validate, validation_details, skip_flag_exprs  # noqa: F401
+from .validation import validate, skip_flag_exprs  # noqa: F401

@@ -1,11 +1,18 @@
-"""Rule compiler: declarative rules → native Column expressions (SURVEY §2.2).
+"""Rule compiler: declarative rules → Spark SQL expression text (SURVEY §2.2).
 
 The reference validates each record by interpreting every rule per row
 (odevalidator/validator.py:294-302, 391-406). Here rules compile ONCE,
-driver-side, into a single wide ``select`` of validation-verdict
-structs — whole-stage-codegen'd by Tungsten, no Python on the hot path.
-One explode turns the wide verdicts into the long results table
+driver-side and in pure Python, into the SQL text of one array of
+validation-verdict structs. That text crosses to the JVM in a single
+``selectExpr`` — one parse instead of one py4j round trip per Column
+node — and runs whole-stage-codegen'd by Tungsten, no Python on the hot
+path. One explode turns the wide verdicts into the long results table
 (file, record id, field_path, valid, details).
+
+Every INI value that reaches the SQL text goes through :func:`_lit`
+(string literals, with ``$`` escaped so the parser's ``${var}``
+substitution never fires) or :func:`_ident` (backtick-quoted field
+names).
 
 Replicated semantics (reference file:line):
 
@@ -37,17 +44,19 @@ Documented deviations (reference bugs not copied, SURVEY §7.5):
 
 from __future__ import annotations
 
+import math
 import re
-from datetime import timedelta
+from datetime import datetime, timedelta
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     DataType,
-    DecimalType,
+    IntegerType,
     NumericType,
     StringType,
+    StructField,
     StructType,
     TimestampType,
 )
@@ -63,7 +72,59 @@ from ..sources.rules import (
 
 _IDX_RE = re.compile(r"^([^{]*)\{(\d+)\}$")
 
-_DEC = DecimalType(38, 10)
+_DEC = "DECIMAL(38,10)"
+
+
+# ------------------------------------------------------------ SQL text
+
+
+def _lit(value) -> str:
+    """SQL string literal for ``str(value)``. Backslash and quote are
+    escaped for the parser; ``$`` becomes ``\\u0024`` so that the
+    parser's variable substitution cannot rewrite a ``${...}`` inside
+    rule text."""
+    s = str(value).replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+    return f"'{s}'"
+
+
+def _ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _ts_lit(ts: datetime) -> str:
+    """Timestamp literal with the instant ``F.lit(ts)`` would carry: an
+    aware datetime is absolute, a naive one is read in the Python
+    process's local zone (TimestampType.toInternal)."""
+    return f"timestamp_micros({TimestampType().toInternal(ts)})"
+
+
+def _num_lit(v) -> str:
+    """Literal for a JSON number (or bool) with the type ``F.lit(v)``
+    gives it: boolean, integral, or double."""
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if math.isfinite(v):
+        return f"{v!r}D"
+    return f"CAST({_lit(v)} AS DOUBLE)"
+
+
+def _in(expr: str, items: list[str]) -> str:
+    # an empty IN list is false, NULL operand included (Column.isin([]))
+    if not items:
+        return "false"
+    return f"({expr} IN ({', '.join(items)}))"
+
+
+def _case(branches: list[tuple[str, str]], otherwise: str | None = None) -> str:
+    body = " ".join(f"WHEN {c} THEN {v}" for c, v in branches)
+    tail = "" if otherwise is None else f" ELSE {otherwise}"
+    return f"CASE {body}{tail} END"
+
+
+def _str(expr: str) -> str:
+    return f"CAST({expr} AS STRING)"
 
 
 # ---------------------------------------------------------------- paths
@@ -87,154 +148,129 @@ def schema_type(schema: DataType, path: str) -> DataType | None:
     return cur
 
 
-def field_col(schema: DataType, path: str) -> Column:
-    """Column expression for a dotted path; missing paths become NULL
-    (native Spark semantics already match validator.py:191-193)."""
+def field_sql(schema: DataType, path: str) -> str:
+    """SQL for a dotted path; missing paths become NULL (native Spark
+    semantics already match validator.py:191-193)."""
     if schema_type(schema, path) is None:
-        return F.lit(None)
-    col: Column | None = None
+        return "NULL"
+    out = ""
     for seg in path.split("."):
         m = _IDX_RE.match(seg)
-        name = m.group(1) if m else seg
-        col = F.col(name) if col is None else col.getField(name)
+        name = _ident(m.group(1) if m else seg)
+        out = name if not out else f"{out}.{name}"
         if m:
-            col = F.element_at(col, int(m.group(2)) + 1)
-    assert col is not None
-    return col
+            out = f"element_at({out}, {int(m.group(2)) + 1})"
+    return out
 
 
 # ------------------------------------------------------------- helpers
 
 
-def _py_ts_str(ts: Column) -> Column:
+def _py_ts_str(ts: str) -> str:
     """Render a timestamp the way Python ``str(datetime)`` does:
     microseconds omitted when zero (deterministic, oracle-expressible)."""
-    return F.when(
-        F.date_format(ts, "SSSSSS") == "000000",
-        F.date_format(ts, "yyyy-MM-dd HH:mm:ss"),
-    ).otherwise(F.date_format(ts, "yyyy-MM-dd HH:mm:ss.SSSSSS"))
+    return _case(
+        [(f"date_format({ts}, 'SSSSSS') = '000000'",
+          f"date_format({ts}, 'yyyy-MM-dd HH:mm:ss')")],
+        f"date_format({ts}, 'yyyy-MM-dd HH:mm:ss.SSSSSS')",
+    )
 
 
-def _falsy(col: Column, dtype: DataType | None) -> Column:
+def _falsy(col: str, dtype: DataType | None) -> str:
     """Python truthiness test used by _is_condition_met (validator.py:137)."""
     if dtype is None:
-        return F.lit(True)
-    cond = col.isNull()
+        return "true"
     if isinstance(dtype, StringType):
-        cond = cond | (col == "")
-    elif isinstance(dtype, NumericType):
-        cond = cond | (col == 0)
-    return cond
+        return f"({col} IS NULL OR {col} = '')"
+    if isinstance(dtype, NumericType):
+        return f"({col} IS NULL OR {col} = 0)"
+    return f"({col} IS NULL)"
 
 
 # ------------------------------------------------- unconditional check
 
 
-def _type_check_details(rule: Rule, col: Column, dtype: DataType) -> Column:
+def _type_check_details(rule: Rule, col: str, dtype: DataType) -> str:
     """Details for the type-specific branch (validator.py:205-243);
     NULL means valid."""
     if rule.type == TYPE_ENUM and rule.values is not None:
-        lowered = [v.lower() for v in rule.values]
+        lowered = [_lit(v.lower()) for v in rule.values]
         joined = ", ".join(str(v) for v in rule.values)
-        return F.when(
-            ~F.lower(col.cast("string")).isin(lowered),
-            F.format_string(
-                "Value '%s' not in list of known values: [%s]",
-                col.cast("string"),
-                F.lit(joined),
-            ),
-        )
+        return _case([(
+            f"(NOT {_in(f'lower({_str(col)})', lowered)})",
+            "format_string('Value \\'%s\\' not in list of known values: [%s]', "
+            f"{_str(col)}, {_lit(joined)})",
+        )])
     if rule.type == TYPE_DECIMAL:
         if rule.upper_limit is None and rule.lower_limit is None:
             # the reference only attempts the Decimal parse when a
             # limit is declared (validator.py:210-215); a limit-less
             # decimal rule passes any present non-empty value
-            return F.lit(None)
+            return "NULL"
         # try_cast: ANSI mode (Spark 4 default) makes a plain cast THROW
         # on malformed input; the reference treats parse failure as an
         # invalid-field verdict (validator.py:214-215)
-        v = col.try_cast(_DEC)
-        parse_fail = v.isNull()  # non-null input that won't cast
-        details = F.when(
-            parse_fail,
-            F.format_string(
-                "failure to perform decimal validation on %s", col.cast("string")
-            ),
-        )
-        if rule.upper_limit is not None:
-            details = details.when(
-                v > F.lit(rule.upper_limit).cast(_DEC),
-                F.format_string(
-                    "Value '%d' is greater than upper limit '%d'",
-                    v.cast("long"),
-                    F.lit(int(rule.upper_limit)),
-                ),
-            )
-        if rule.lower_limit is not None:
-            details = details.when(
-                v < F.lit(rule.lower_limit).cast(_DEC),
-                F.format_string(
-                    "Value '%d' is less than lower limit '%d'",
-                    v.cast("long"),
-                    F.lit(int(rule.lower_limit)),
-                ),
-            )
-        return details
+        v = f"TRY_CAST({col} AS {_DEC})"
+        branches = [(
+            f"({v} IS NULL)",  # non-null input that won't cast
+            f"format_string('failure to perform decimal validation on %s', {_str(col)})",
+        )]
+        for limit, op, word in (
+            (rule.upper_limit, ">", "greater than upper"),
+            (rule.lower_limit, "<", "less than lower"),
+        ):
+            if limit is not None:
+                branches.append((
+                    f"({v} {op} CAST({format(limit, 'f')}BD AS {_DEC}))",
+                    f"format_string('Value \\'%d\\' is {word} limit \\'%d\\'', "
+                    f"CAST({v} AS BIGINT), {int(limit)})",
+                ))
+        return _case(branches)
     if rule.type == TYPE_TIMESTAMP:
         if isinstance(dtype, TimestampType):
-            t = col
-            parse_fail = F.lit(False)
+            t, parse_fail = col, "false"
         else:
             t = _parse_ts(col, rule.date_format)
-            parse_fail = t.isNull()
-        details = F.when(
-            parse_fail, F.lit("failure to perform timestamp validation")
-        )
-        if rule.earliest_time is not None:
-            details = details.when(
-                t < F.lit(rule.earliest_time),
-                F.format_string(
-                    "Timestamp value '%s' occurs before earliest limit '%s'",
-                    _py_ts_str(t),
-                    F.lit(str(rule.earliest_time)),
-                ),
-            )
-        if rule.latest_time is not None:
+            parse_fail = f"({t} IS NULL)"
+        branches = [(parse_fail, "'failure to perform timestamp validation'")]
+        for limit, op, slack, word in (
+            (rule.earliest_time, "<", timedelta(0), "before earliest"),
             # +1 minute slack on the upper bound (validator.py:226)
-            details = details.when(
-                t > F.lit(rule.latest_time + timedelta(minutes=1)),
-                F.format_string(
-                    "Timestamp value '%s' occurs after latest limit '%s'",
-                    _py_ts_str(t),
-                    F.lit(str(rule.latest_time)),
-                ),
-            )
-        return details
-    if rule.type == TYPE_CHOICE and rule.choices:
-        return None  # handled by caller (needs schema for child paths)
+            (rule.latest_time, ">", timedelta(minutes=1), "after latest"),
+        ):
+            if limit is not None:
+                branches.append((
+                    f"({t} {op} {_ts_lit(limit + slack)})",
+                    f"format_string('Timestamp value \\'%s\\' occurs {word} "
+                    f"limit \\'%s\\'', {_py_ts_str(t)}, {_lit(limit)})",
+                ))
+        return _case(branches)
     # string / serial / unknown: presence+empty already checked
-    return F.lit(None)
+    return "NULL"
 
 
-def _parse_ts(col: Column, date_format: str | None) -> Column:
+def _parse_ts(col: str, date_format: str | None) -> str:
     """String → timestamp. Without DateFormat the reference uses lenient
     dateutil parsing (validator.py:219) — approximated with a coalesce
     over common ISO shapes; with DateFormat, strptime (validator.py:221)
     mapped to the Spark pattern dialect."""
     if date_format:
-        return F.try_to_timestamp(col, F.lit(_strptime_to_spark(date_format)))
-    c = F.regexp_replace(col, "Z$", "+00:00")
-    return F.coalesce(
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSXXX")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ssXXX")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSSSSS")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss.SSS")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd'T'HH:mm:ss")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd HH:mm:ss.SSSSSS")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd HH:mm:ss")),
-        F.try_to_timestamp(c, F.lit("yyyy-MM-dd")),
-    )
+        return f"try_to_timestamp({col}, {_lit(_strptime_to_spark(date_format))})"
+    c = f"regexp_replace({col}, {_lit('Z$')}, '+00:00')"
+    return "coalesce(" + ", ".join(
+        f"try_to_timestamp({c}, {_lit(p)})"
+        for p in (
+            "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+            "yyyy-MM-dd'T'HH:mm:ss.SSSXXX",
+            "yyyy-MM-dd'T'HH:mm:ssXXX",
+            "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+            "yyyy-MM-dd'T'HH:mm:ss.SSS",
+            "yyyy-MM-dd'T'HH:mm:ss",
+            "yyyy-MM-dd HH:mm:ss.SSSSSS",
+            "yyyy-MM-dd HH:mm:ss",
+            "yyyy-MM-dd",
+        )
+    ) + ")"
 
 
 _STRPTIME_MAP = {
@@ -274,106 +310,96 @@ def _strptime_to_spark(fmt: str) -> str:
 
 
 def _unconditional_details(
-    rule: Rule, schema: DataType, path_label: Column | None = None
-) -> Column:
+    rule: Rule, schema: DataType, path_label: str | None = None
+) -> str:
     """Full _check_unconditional chain (validator.py:196-243); NULL = valid.
 
-    ``path_label`` overrides the path rendered into the missing-field
-    message — list rules pass the per-row expanded ``a{i}.b`` path the
-    reference's Field carries (validator.py:314, 197-198)."""
-    col = field_col(schema, rule.path)
+    ``path_label`` (SQL) overrides the path rendered into the
+    missing-field message — list rules pass the per-row expanded
+    ``a{i}.b`` path the reference's Field carries (validator.py:314,
+    197-198)."""
+    col = field_sql(schema, rule.path)
     dtype = schema_type(schema, rule.path)
 
-    missing = col.isNull()
-    details = F.when(
-        missing,
-        F.format_string(
-            "Field missing: %s",
-            F.lit(rule.path) if path_label is None else path_label,
-        ),
-    )
-
+    branches = [(
+        f"({col} IS NULL)",
+        "format_string('Field missing: %s', "
+        f"{_lit(rule.path) if path_label is None else path_label})",
+    )]
     if isinstance(dtype, StringType):
-        if rule.allow_empty:
-            details = details.when(col == "", F.lit(None))
-        else:
-            details = details.when(col == "", F.lit("Field empty"))
+        branches.append(
+            (f"({col} = '')", "NULL" if rule.allow_empty else "'Field empty'")
+        )
 
     if rule.type == TYPE_CHOICE and rule.choices:
-        present = [
-            field_col(schema, f"{rule.path}.{c}").isNotNull().cast("int")
+        cnt = "(" + " + ".join(
+            f"CAST(({field_sql(schema, f'{rule.path}.{c}')} IS NOT NULL) AS INT)"
             for c in rule.choices
-        ]
-        cnt = sum(present[1:], present[0])
-        choice_details = F.when(
-            cnt == 0, F.format_string("No choices found in '%s'", F.lit(rule.path))
-        ).when(
-            cnt > 1,
-            F.format_string(
-                "Found '%s' choices in '%s'", cnt.cast("string"), F.lit(rule.path)
-            ),
-        )
-        return details.otherwise(choice_details)
+        ) + ")"
+        choice_details = _case([
+            (f"({cnt} = 0)",
+             f"format_string('No choices found in \\'%s\\'', {_lit(rule.path)})"),
+            (f"({cnt} > 1)",
+             "format_string('Found \\'%s\\' choices in \\'%s\\'', "
+             f"{_str(cnt)}, {_lit(rule.path)})"),
+        ])
+        return _case(branches, choice_details)
 
-    type_details = _type_check_details(rule, col, dtype) if dtype else F.lit(None)
-    return details.otherwise(type_details)
+    type_details = _type_check_details(rule, col, dtype) if dtype else "NULL"
+    return _case(branches, type_details)
 
 
 # --------------------------------------------------- conditional check
 
 
-def _condition_met(cond: dict, rule: Rule, schema: DataType) -> Column:
+def _condition_met(cond: dict, rule: Rule, schema: DataType) -> str:
     """ifPart evaluation (validator.py:131-148)."""
     if_part = cond["ifPart"]
     ref_path = if_part["fieldName"]
-    ref_col = field_col(schema, ref_path)
+    ref_col = field_sql(schema, ref_path)
     ref_type = schema_type(schema, ref_path)
     expected = if_part.get("fieldValues")
     if expected is None:
         # existence-style: met iff referenced AND target both falsy
-        target = field_col(schema, rule.path)
+        target = field_sql(schema, rule.path)
         target_type = schema_type(schema, rule.path)
-        return _falsy(ref_col, ref_type) & _falsy(target, target_type)
-    return ref_col.cast("string").isin([str(v) for v in expected])
+        return f"({_falsy(ref_col, ref_type)} AND {_falsy(target, target_type)})"
+    return _in(_str(ref_col), [_lit(v) for v in expected])
 
 
-def _then_details(then_part: dict | None, rule: Rule, schema: DataType) -> Column:
+def _then_details(then_part: dict | None, rule: Rule, schema: DataType) -> str:
     """thenPart check (validator.py:150-170); NULL = valid."""
     if not then_part:
-        return F.lit(None)
-    col = field_col(schema, rule.path)
-    details = F.when(col.isNull(), F.lit("Required Field is missing."))
+        return "NULL"
+    col = field_sql(schema, rule.path)
+    branches = [(f"({col} IS NULL)", "'Required Field is missing.'")]
     if "startsWithField" in then_part:
-        sw = field_col(schema, then_part["startsWithField"])
+        sw = field_sql(schema, then_part["startsWithField"])
         sw_type = schema_type(schema, then_part["startsWithField"])
-        not_falsy = ~_falsy(sw, sw_type)
-        details = details.when(
-            not_falsy & ~col.cast("string").startswith(sw.cast("string")),
-            F.format_string(
-                "Value of Field ('%s') does not start with %s",
-                col.cast("string"),
-                sw.cast("string"),
-            ),
-        )
+        branches.append((
+            f"((NOT {_falsy(sw, sw_type)}) AND "
+            f"(NOT startswith({_str(col)}, {_str(sw)})))",
+            "format_string('Value of Field (\\'%s\\') does not start with %s', "
+            f"{_str(col)}, {_str(sw)})",
+        ))
     elif "matchAgainst" in then_part and isinstance(then_part["matchAgainst"], list):
         allowed = then_part["matchAgainst"]
         if allowed and all(isinstance(v, (int, float)) for v in allowed):
             # numeric lists compare numerically (Python 3.0 == 3,
             # validator.py:166)
-            member = col.try_cast(_DEC).isin(
-                [F.lit(v).cast(_DEC) for v in allowed]
+            member = _in(
+                f"TRY_CAST({col} AS {_DEC})",
+                [f"CAST({_num_lit(v)} AS {_DEC})" for v in allowed],
             )
         else:
-            member = col.cast("string").isin([str(v) for v in allowed])
-        details = details.when(
-            ~member,
-            F.format_string(
-                "Value of Field ('%s') is not one of the expected values (%s)",
-                col.cast("string"),
-                F.lit(repr(then_part["matchAgainst"])),
-            ),
-        )
-    return details
+            member = _in(_str(col), [_lit(v) for v in allowed])
+        branches.append((
+            f"(NOT {member})",
+            "format_string('Value of Field (\\'%s\\') is not one of the "
+            f"expected values (%s)', {_str(col)}, "
+            f"{_lit(repr(then_part['matchAgainst']))})",
+        ))
+    return _case(branches)
 
 
 def _is_skip_condition(cond: dict) -> bool:
@@ -382,25 +408,23 @@ def _is_skip_condition(cond: dict) -> bool:
 
 
 def rule_details(
-    rule: Rule, schema: DataType, path_label: Column | None = None
-) -> Column:
-    """Compile one rule to its details Column (NULL = valid) — the
+    rule: Rule, schema: DataType, path_label: str | None = None
+) -> str:
+    """Compile one rule to its details SQL (NULL = valid) — the
     Spark-native replacement for Field.validate (validator.py:83-94)."""
     if rule.noop:
-        return F.lit(None).cast("string")
+        return "CAST(NULL AS STRING)"
     uncond = _unconditional_details(rule, schema, path_label)
     if not rule.conditions:
         return uncond
-    chain: Column | None = None
-    for cond in rule.conditions:
-        if _is_skip_condition(cond):
-            continue  # participates in skip flags, not field validation
-        met = _condition_met(cond, rule, schema)
-        then = _then_details(cond.get("thenPart"), rule, schema)
-        chain = F.when(met, then) if chain is None else chain.when(met, then)
-    if chain is None:
-        return uncond
-    return chain.otherwise(uncond)
+    chain = [
+        (_condition_met(cond, rule, schema),
+         _then_details(cond.get("thenPart"), rule, schema))
+        for cond in rule.conditions
+        # skip conditions feed the skip flags, not field validation
+        if not _is_skip_condition(cond)
+    ]
+    return _case(chain, uncond) if chain else uncond
 
 
 def skip_flag_exprs(ruleset: RuleSet, schema: DataType) -> dict[str, Column]:
@@ -416,29 +440,32 @@ def skip_flag_exprs(ruleset: RuleSet, schema: DataType) -> dict[str, Column]:
     list-rule skip condition can never gate anything."""
     out: dict[str, Column] = {}
     for rule in ruleset.rules:
-        if not rule.conditions:
-            continue
         flags = [
             _condition_met(c, rule, schema)
-            for c in rule.conditions
+            for c in rule.conditions or ()
             if _is_skip_condition(c)
         ]
         if flags:
-            expr = flags[0]
-            for f in flags[1:]:
-                expr = expr | f
-            out[rule.path] = F.coalesce(expr, F.lit(False))
+            out[rule.path] = F.expr(f"coalesce({' OR '.join(flags)}, false)")
     return out
 
 
 # ------------------------------------------------------------ validate
 
 
-def validation_details(df: DataFrame, ruleset: RuleSet) -> list[tuple[str, Column]]:
-    """(field_path, details Column) per scalar rule, compiled against
-    df's schema. NULL details = valid."""
-    schema = df.schema
-    return [(r.path, rule_details(r, schema)) for r in ruleset.rules]
+def _long_rows(df: DataFrame, ids: list[str], verdicts: str) -> DataFrame:
+    """(id_cols, field_path, valid, details) from an SQL array of
+    (field_path, details) structs; NULL details = valid."""
+    return df.selectExpr(*ids, f"explode({verdicts}) AS v").selectExpr(
+        *ids,
+        "v.field_path AS field_path",
+        "v.details IS NULL AS valid",
+        "coalesce(v.details, '') AS details",
+    )
+
+
+def _verdict(path_sql: str, details: str) -> str:
+    return f"named_struct('field_path', {path_sql}, 'details', {details})"
 
 
 def validate(
@@ -450,26 +477,17 @@ def validate(
     Output: *id_cols, field_path, valid, details ('' when valid).
     Scale: a single project + explode — no shuffle, no UDF; the explode
     factor equals the rule count, pruned columns never leave the scan.
+    Plan build: the scalar rules reach the JVM as one SQL expression.
     """
-    pairs = validation_details(df, ruleset)
+    schema = df.schema
+    ids = [_ident(c) for c in id_cols]
     long_results = None
-    if pairs:
-        verdicts = F.array(
-            *[
-                F.struct(
-                    F.lit(path).alias("field_path"),
-                    details.alias("details"),
-                )
-                for path, details in pairs
-            ]
+    if ruleset.rules:
+        verdicts = ", ".join(
+            _verdict(_lit(r.path), rule_details(r, schema)) for r in ruleset.rules
         )
-        long_results = df.select(*id_cols, F.explode(verdicts).alias("v")).select(
-            *id_cols,
-            F.col("v.field_path").alias("field_path"),
-            F.col("v.details").isNull().alias("valid"),
-            F.coalesce(F.col("v.details"), F.lit("")).alias("details"),
-        )
-    list_results = _validate_list_rules(df, ruleset, id_cols)
+        long_results = _long_rows(df, ids, f"array({verdicts})")
+    list_results = _validate_list_rules(df, schema, ruleset, ids)
     if long_results is None and list_results is None:
         raise ValueError("ruleset declares no rules")
     if list_results is None:
@@ -489,18 +507,15 @@ def validation_summary(
     num_error_messages) — the explode-based ``validate`` + regroup path
     produces identical numbers at rule-count× the row volume.
     """
-    pairs = validation_details(df, ruleset)
-    inv = None
-    for _, details in pairs:
-        c = details.isNotNull().cast("int")
-        inv = c if inv is None else inv + c
-    n_rules = len(pairs)
-    per_record = df.select(
-        F.col(file_col).alias("file"), inv.alias("inv_cnt")
+    schema = df.schema
+    inv = " + ".join(
+        f"CAST(({rule_details(r, schema)}) IS NOT NULL AS INT)"
+        for r in ruleset.rules
     )
+    per_record = df.selectExpr(f"{_ident(file_col)} AS file", f"({inv}) AS inv_cnt")
     return per_record.groupBy("file").agg(
         F.count(F.lit(1)).alias("records"),
-        (F.count(F.lit(1)) * n_rules).alias("num_validations"),
+        (F.count(F.lit(1)) * len(ruleset.rules)).alias("num_validations"),
         F.sum("inv_cnt").alias("num_errors"),
         F.sum((F.col("inv_cnt") > 0).cast("long")).alias("num_error_messages"),
     )
@@ -539,7 +554,7 @@ def _expanded_path_fmt(levels: list[str], tail: str, markers: list[str]) -> str:
 
 
 def _validate_list_rules(
-    df: DataFrame, ruleset: RuleSet, id_cols: list[str]
+    df: DataFrame, schema: StructType, ruleset: RuleSet, ids: list[str]
 ) -> DataFrame | None:
     """P13: ``a.list.b`` rules expand per actual array element, one
     posexplode per exact ``list`` segment — the Spark generator form of
@@ -560,8 +575,6 @@ def _validate_list_rules(
     NULL row when a record's array is NULL) so absence can invalidate —
     the reference's "add 1 entry to allow invalidation later" branch
     (validator.py:327-332)."""
-    if not ruleset.list_rules:
-        return None
     outs = []
     for rule in ruleset.list_rules:
         levels, tail = _split_list_path(rule.path)
@@ -570,15 +583,8 @@ def _validate_list_rules(
             # substring classifier mis-binned; validate at the literal
             # path like the reference's no-marker walk (field_list_temp
             # ends up with the unexpanded path)
-            details = rule_details(rule, df.schema)
-            outs.append(
-                df.select(
-                    *id_cols,
-                    F.lit(rule.path).alias("field_path"),
-                    details.isNull().alias("valid"),
-                    F.coalesce(details, F.lit("")).alias("details"),
-                )
-            )
+            verdict = _verdict(_lit(rule.path), rule_details(rule, schema))
+            outs.append(_long_rows(df, ids, f"array({verdict})"))
             continue
         if not tail:
             # list at end of config field: the reference warns and emits
@@ -591,8 +597,9 @@ def _validate_list_rules(
 
         # walk the levels, posexploding each array; stop early if the
         # schema lacks an array at some level (static missing). All
-        # source columns are kept so condition references still resolve.
-        cur = df
+        # source columns are kept so condition references still resolve;
+        # the exploded schema is tracked here, not fetched from the JVM.
+        cur, cur_schema = df, schema
         parent: str | None = None
         pos_cols: list[str] = []
         static_missing_at: int | None = None
@@ -601,20 +608,23 @@ def _validate_list_rules(
                 base = lvl
             else:
                 base = f"{parent}.{lvl}" if lvl else parent
-            if not isinstance(schema_type(cur.schema, base), ArrayType):
+            arr_type = schema_type(cur_schema, base)
+            if not isinstance(arr_type, ArrayType):
                 static_missing_at = i
                 break
-            arr = field_col(cur.schema, base)
-            cur = cur.select(
+            cur = cur.selectExpr(
                 "*",
-                F.posexplode_outer(arr).alias(f"__pos{i}", f"__elem{i}"),
+                f"posexplode_outer({field_sql(cur_schema, base)}) "
+                f"AS (`__pos{i}`, `__elem{i}`)",
             )
+            cur_schema = StructType(cur_schema.fields + [
+                StructField(f"__pos{i}", IntegerType()),
+                StructField(f"__elem{i}", arr_type.elementType),
+            ])
             parent = f"__elem{i}"
             pos_cols.append(f"__pos{i}")
 
-        pos_exprs = [
-            F.coalesce(F.col(p), F.lit(0)).cast("string") for p in pos_cols
-        ]
+        pos_exprs = [f"CAST(coalesce(`{p}`, 0) AS STRING)" for p in pos_cols]
 
         if static_missing_at is not None:
             # schema lacks the array at level i → "Field missing" per
@@ -625,23 +635,20 @@ def _validate_list_rules(
             )
             fmt = _expanded_path_fmt(levels, tail, markers)
             path_expr = (
-                F.format_string(fmt, *pos_exprs) if pos_cols else F.lit(fmt)
+                f"format_string({_lit(fmt)}, {', '.join(pos_exprs)})"
+                if pos_cols else _lit(fmt)
             )
-            outs.append(
-                cur.select(
-                    *id_cols,
-                    path_expr.alias("field_path"),
-                    F.lit(False).alias("valid"),
-                    F.concat(F.lit("Field missing: "), path_expr).alias(
-                        "details"
-                    ),
-                )
-            )
+            outs.append(cur.selectExpr(
+                *ids,
+                f"{path_expr} AS field_path",
+                "false AS valid",
+                f"concat('Field missing: ', {path_expr}) AS details",
+            ))
             continue
 
         # per-row expanded path: "a{i}.b{j}.c" (validator.py:314)
         fmt = _expanded_path_fmt(levels, tail, ["%s"] * len(levels))
-        path_expr = F.format_string(fmt, *pos_exprs)
+        path_expr = f"format_string({_lit(fmt)}, {', '.join(pos_exprs)})"
         elem_rule = Rule(
             path=f"{parent}.{tail}",
             type=rule.type,
@@ -658,15 +665,8 @@ def _validate_list_rules(
             allow_empty=rule.allow_empty,
             noop=rule.noop,
         )
-        details = rule_details(elem_rule, cur.schema, path_label=path_expr)
-        outs.append(
-            cur.select(
-                *id_cols,
-                path_expr.alias("field_path"),
-                details.isNull().alias("valid"),
-                F.coalesce(details, F.lit("")).alias("details"),
-            )
-        )
+        details = rule_details(elem_rule, cur_schema, path_label=path_expr)
+        outs.append(_long_rows(cur, ids, f"array({_verdict(path_expr, details)})"))
     if not outs:
         return None
     res = outs[0]

@@ -480,7 +480,7 @@ def _dec_check_sql(x: str, path: str) -> str:
     """,
 )
 def cv_conditional_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P10-P13: conditional/choice/list rules compiled to Column trees
+    """P10-P13: conditional/choice/list rules compiled to SQL expressions
     over columns synthesized from events — first-met-wins condition
     chains (validator.py:96-129), existence-style ifParts (131-148),
     matchAgainst + startsWithField thenParts (150-170), choice rules

@@ -1,26 +1,31 @@
 """End-to-end CVP pipeline (SURVEY §3.4) — the batch replacement for
 the reference's per-file Lambda: directory in → four tables out.
 
-    records     = scan (S3-S5) + provenance
-    results     = rule validation (compiled Columns) + sequential windows
-    tallies     = per-file A2 aggregates
-    file_counts = per-file record counts (A1)
+    records     = scan (S3-S5) + provenance                    [persisted]
+    validation  = rule validation (one compiled SQL select)    [persisted]
+    sequential  = ordering checks over records (per-file windows)
+    tallies     = per-file A2 aggregates over validation
+    file_counts = per-file record counts (A1) over records
 
 The metadata documents and CloudWatch counter shapes (A4-A6) come from
 operators/metadata.py over the file listing and these tallies.
 
-Everything is one lineage; Catalyst prunes record fields the rules
-never touch, and the only shuffles are the per-file window (sequential)
-and the per-file/ per-dim aggregates.
+The input is read and parsed, and the rules evaluated, once: ``records``
+and ``validation`` are persisted (lazily, MEMORY_AND_DISK), so the four
+table writes and the tally collect read the cache instead of re-running
+the lineage from the files. The only shuffles are the per-file window
+(sequential) and the per-file aggregates. ``PipelineResult.unpersist``
+releases the cache once the caller is done with the frames.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
 from pyspark.sql.types import StructType
 
 from ..operators.sequential import SequentialSpec, sequential_results
@@ -38,6 +43,13 @@ class PipelineResult:
     sequential: DataFrame  # long sequential results
     tallies: DataFrame  # per-file A2
     file_counts: DataFrame  # per-file record counts (A1)
+    # the persisted frames the others read; released by unpersist()
+    persisted: tuple[DataFrame, ...] = ()
+
+    def unpersist(self) -> None:
+        """Drop the cached records and verdicts, dependents first."""
+        for df in reversed(self.persisted):
+            df.unpersist()
 
 
 def run_cv_pipeline(
@@ -66,6 +78,9 @@ def run_cv_pipeline(
     executor memory by the block-split size instead of the largest
     single object — the setting for corpora with multi-GB objects;
     output is identical.
+
+    ``records`` and ``validation`` come back persisted; call
+    :meth:`PipelineResult.unpersist` when done with the result.
     """
     if schema is None:
         schema = (
@@ -84,10 +99,13 @@ def run_cv_pipeline(
             F.from_json("line", schema, {"mode": "PERMISSIVE"}).alias("_rec"),
         )
         .select("file_path", "file_size", "file_mtime", "record_uid", "_rec.*")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     schema = records.schema
 
-    validation = validate(records, ruleset, ["file_path", "record_uid"])
+    validation = validate(records, ruleset, ["file_path", "record_uid"]).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
     ts = lambda c: F.to_timestamp(  # noqa: E731
         F.regexp_replace(F.col(c), "Z$", "+00:00")
@@ -135,6 +153,7 @@ def run_cv_pipeline(
         sequential=sequential,
         tallies=tallies,
         file_counts=file_counts,
+        persisted=(records, validation),
     )
 
 
@@ -178,6 +197,7 @@ def observe_pipeline(
         sequential=result.sequential,
         tallies=result.tallies,
         file_counts=file_counts,
+        persisted=result.persisted,
     )
     return observed, {"records": obs_records, "validation": obs_validation}
 
@@ -197,23 +217,38 @@ def log_progress(observations: dict, logger=None) -> dict[str, dict]:
 
 def write_tables(result: PipelineResult, out_dir: str) -> dict[str, str]:
     """S8/S9 as tables: the reference's Elasticsearch index and
-    CloudWatch puts become partition-friendly parquet appends —
-    idempotent re-runs overwrite per path, and the validation results
-    partition by file so downstream readers prune to one file's output.
+    CloudWatch puts become parquet tables — idempotent re-runs
+    overwrite per path.
+
+    The four writes run concurrently from a pool of four threads, each
+    job named ``write_tables:<table>``: where a job is one task (one
+    giant object) the others fill the idle cores. All four share the
+    persisted lineage, so none re-reads the input. A failed write's
+    error is raised once every write has finished.
 
     Returns {table_name: path}.
     """
-    paths = {}
-    for name, df, partition in [
-        ("validation_results", result.validation, None),
-        ("sequential_results", result.sequential, None),
-        ("file_tallies", result.tallies, None),
-        ("file_counts", result.file_counts, None),
-    ]:
+    spark = result.records.sparkSession
+
+    def write(name: str, df: DataFrame) -> str:
+        spark.sparkContext.setJobDescription(f"write_tables:{name}")
         path = f"{out_dir}/{name}"
-        writer = df.write.mode("overwrite")
-        if partition:
-            writer = writer.partitionBy(partition)
-        writer.parquet(path)
-        paths[name] = path
-    return paths
+        df.write.mode("overwrite").parquet(path)
+        return path
+
+    tables = {
+        "validation_results": result.validation,
+        "sequential_results": result.sequential,
+        "file_tallies": result.tallies,
+        "file_counts": result.file_counts,
+    }
+    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
+        # wrapped once per write: each wrapper hands its thread its own
+        # copy of the caller's job-local properties. A shared copy would
+        # let the writes overwrite each other's job description and nest
+        # their SQL executions under the first one.
+        futures = {
+            name: pool.submit(inheritable_thread_target(spark)(write), name, df)
+            for name, df in tables.items()
+        }
+    return {name: f.result() for name, f in futures.items()}

@@ -7,6 +7,7 @@ import json
 import os
 import subprocess
 import sys
+from collections import Counter
 
 import pytest
 
@@ -118,20 +119,86 @@ def test_streaming_matches_batch(spark, ndjson_dir, tmp_path):
     assert sorted(collected) == expected
 
 
+def _plan_leaves(df) -> list[str]:
+    """Leaf operators of the physical plan; a cached frame's leaf is
+    InMemoryTableScan, whose own plan is not a child."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+def _executions(spark, last: int = 20) -> list[tuple[int, int, str]]:
+    """(id, root id, description) of the ``last`` SQL executions the
+    status store holds, oldest first."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    ran = store.executionsList(max(store.executionsCount() - last, 0), last)
+    return [
+        (e.executionId(), e.rootExecutionId(), e.description())
+        for e in (ran.apply(i) for i in range(ran.size()))
+    ]
+
+
 def test_write_tables_roundtrip(spark, ndjson_dir, tmp_path):
+    from pyspark import StorageLevel
+
     from dev_dot_cvp_metadata_ingestion_spark.plans.pipeline import write_tables
 
     ruleset = parse_rules_ini(open(CONFIG).read())
     ruleset.sequential = True
     res = run_cv_pipeline(spark, ndjson_dir, ruleset)
+    # every output reads the persisted records/verdicts, not the files
+    for df in (res.tallies, res.file_counts, res.sequential):
+        leaves = _plan_leaves(df)
+        assert leaves and set(leaves) == {"InMemoryTableScan"}, leaves
+
+    before = max((i for i, _, _ in _executions(spark)), default=-1)
     paths = write_tables(res, str(tmp_path / "tables"))
-    assert set(paths) == {
-        "validation_results", "sequential_results", "file_tallies", "file_counts",
+    frames = {
+        "validation_results": res.validation,
+        "sequential_results": res.sequential,
+        "file_tallies": res.tallies,
+        "file_counts": res.file_counts,
     }
-    back = spark.read.parquet(paths["validation_results"])
-    assert back.count() == res.validation.count()
-    tallies = spark.read.parquet(paths["file_tallies"])
-    assert tallies.count() == 2
+    assert set(paths) == set(frames)
+    # each write is a SQL execution of its own, named after its table
+    writes = [d for i, root, d in _executions(spark) if i > before and i == root]
+    assert sorted(writes) == sorted(f"write_tables:{name}" for name in frames)
+    for name, df in frames.items():
+        back = spark.read.parquet(paths[name])
+        assert back.columns == df.columns
+        assert Counter(map(tuple, back.collect())) == Counter(
+            map(tuple, df.collect())
+        ), name
+
+    res.unpersist()
+    assert res.records.storageLevel == StorageLevel.NONE
+    assert res.validation.storageLevel == StorageLevel.NONE
+
+
+def test_write_tables_surfaces_a_failed_write(spark, ndjson_dir, tmp_path):
+    """One table's write fails; write_tables raises that error once the
+    other writes are done, and does not hang."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from dev_dot_cvp_metadata_ingestion_spark.plans.pipeline import write_tables
+
+    ruleset = parse_rules_ini(open(CONFIG).read())
+    ruleset.sequential = True
+    res = run_cv_pipeline(spark, ndjson_dir, ruleset)
+    out = tmp_path / "tables"
+    out.mkdir()
+    # overwrite mode deletes a regular file in a table's place, so the
+    # blocker is a dangling symlink, which Spark can neither remove nor
+    # create a directory at
+    (out / "file_tallies").symlink_to(tmp_path / "absent" / "target")
+    pool = ThreadPoolExecutor(1)
+    call = pool.submit(write_tables, res, str(out))
+    pool.shutdown(wait=False)
+    with pytest.raises(Exception, match="file_tallies"):
+        call.result(timeout=300)
+    for name in ("validation_results", "sequential_results", "file_counts"):
+        assert spark.read.parquet(str(out / name)).count() > 0, name
+    res.unpersist()
 
 
 def test_file_lines_and_prefix_filter(spark, ndjson_dir):
