@@ -8,7 +8,9 @@ The batch form replaces one reference Lambda sweep: validate every
 NDJSON file under --input against the INI rule schema, run sequential
 checks, and write validation_results / sequential_results /
 file_tallies / file_counts parquet tables under --output. --streaming
-watches --input as a file-source stream instead (availableNow drain).
+watches --input as a file-source stream instead (availableNow drain),
+writing validation_results_stream/ one ``batch_id=N`` partition per
+micro-batch, which a replayed micro-batch overwrites.
 
 Registry access (every operator from COVERAGE.md, same callables the
 driver runs):
@@ -114,28 +116,15 @@ def _pipeline_main(spark, args) -> int:
     ruleset = load_rules_file(args.config)
 
     if args.streaming:
-        from .streaming.stream import stream_cv_pipeline
-
-        # recursive like the stream's own read: partition inference
-        # over Hive-style k=v directories would otherwise raise
-        # CONFLICTING_DIRECTORY_STRUCTURES
-        schema = (
-            spark.read.option("recursiveFileLookup", "true")
-            .json(args.input)
-            .schema
-        )
-
-        def sink(df, batch_id):
-            df.write.mode("append").parquet(
-                f"{args.output}/validation_results_stream"
-            )
+        from .sources.files import infer_record_schema
+        from .streaming.stream import idempotent_parquet_sink, stream_cv_pipeline
 
         q = stream_cv_pipeline(
             spark,
             args.input,
             ruleset,
-            schema,
-            sink,
+            infer_record_schema(spark, args.input),
+            idempotent_parquet_sink(f"{args.output}/validation_results_stream"),
             f"{args.output}/_checkpoint",
             available_now=True,
         )

@@ -72,9 +72,11 @@ def _ts_str(col: Column) -> Column:
     return F.concat(F.date_format(col, "yyyy-MM-dd HH:mm:ss"), F.lit("+00:00"))
 
 
-def _base_projection(df: DataFrame, spec: SequentialSpec):
-    """Shared input normalization: the narrow validation columns plus
-    positional skip-flag columns. Returns (d, skip_names)."""
+def _windowed_checks(df: DataFrame, spec: SequentialSpec):
+    """The window stage: returns (d, checks) where ``d`` carries all
+    lag/first/last/count/skip columns plus the per-file error count, and
+    ``checks`` is the list of (field_path, serial_col, emit_cond,
+    details) tuples for W3-W6."""
     d = df.select(
         spec.file.alias("file"),
         spec.bundle_id.cast("long").alias("bid"),
@@ -90,15 +92,6 @@ def _base_projection(df: DataFrame, spec: SequentialSpec):
         ],
     )
     skip_names = {p: f"_skip_{i}" for i, p in enumerate(spec.skip_flags)}
-    return d, skip_names
-
-
-def _windowed_checks(df: DataFrame, spec: SequentialSpec):
-    """Shared window stage: returns (d, checks) where ``d`` carries all
-    lag/first/last/count/skip columns plus the per-file error count, and
-    ``checks`` is the list of (field_path, serial_col, emit_cond,
-    details) tuples for W3-W6."""
-    d, skip_names = _base_projection(df, spec)
 
     w_file = W.partitionBy("file").orderBy("sn")
     w_file_all = W.partitionBy("file").rowsBetween(
@@ -124,23 +117,8 @@ def _windowed_checks(df: DataFrame, spec: SequentialSpec):
             F.max(F.col(name).cast("int")).over(w_file_all) == 1, F.lit(False)
         )
 
-    d, checks = _group_stage(d, file_skip)
-    d = d.withColumn(
-        "file_err_cnt", F.sum(_row_error_count(checks)).over(w_file_all)
-    )
-    return d, checks
-
-
-def _group_stage(d: DataFrame, file_skip):
-    """The per-BUNDLE half of the validator, shared by the
-    single-window and chunk-stitched forms: given ``d`` carrying a
-    correct global ``grp`` (contiguous-run bundle id per file) and a
-    ``file_skip(path) -> Column`` resolver for the per-file W7 gates,
-    attach all lag/first/last/count/qualification columns and return
-    (d, checks). Every window here partitions by (file, grp) — state
-    bounded by the largest BUNDLE, never the largest file — so this
-    stage parallelizes across bundles regardless of how ``grp`` was
-    computed."""
+    # W3-W6 run per bundle: every window below partitions by
+    # (file, grp), a superset of the file clustering above
     w_b = W.partitionBy("file", "grp").orderBy("sn")
     w_b_all = W.partitionBy("file", "grp").rowsBetween(
         W.unboundedPreceding, W.unboundedFollowing
@@ -283,6 +261,9 @@ def _group_stage(d: DataFrame, file_skip):
             ),
         ),
     ]
+    d = d.withColumn(
+        "file_err_cnt", F.sum(_row_error_count(checks)).over(w_file_all)
+    )
     return d, checks
 
 
@@ -301,174 +282,7 @@ def _row_error_count(checks) -> Column:
     return err
 
 
-def _chunk_span(d: DataFrame, n_chunks: int) -> tuple[int, int]:
-    """(global_lo, span) for sn-span chunking: span = the largest
-    PER-FILE sn range divided by n_chunks — two collected scalars off
-    one partial-aggregated pass (the zorder writer's move)."""
-    row = (
-        d.groupBy("file")
-        .agg(F.min("sn").alias("flo"), F.max("sn").alias("fhi"))
-        .agg(
-            F.min("flo").alias("lo"),
-            F.max(F.col("fhi") - F.col("flo") + 1).alias("rng"),
-        )
-        .first()
-    )
-    lo = int(row["lo"]) if row["lo"] is not None else 0
-    rng = int(row["rng"]) if row["rng"] is not None else 1
-    return lo, max(1, rng // max(1, n_chunks))
-
-
-def _chunked_checks(df: DataFrame, spec: SequentialSpec, n_chunks: int):
-    """Chunk-stitched window prep for GIANT files (VERDICT r13 item 1):
-    the single-window form's ``partitionBy(file).orderBy(sn)`` windows
-    serialize each file onto one core — correct, but a multi-GB NDJSON
-    object funnels the whole W1-W8 stage through one task even though
-    the chunked reader (sources/files.py:85-186) already scans it in
-    parallel blocks. This form applies that reader's boundary-stitch
-    device to the bundling running sum, the only genuinely sequential
-    per-file computation:
-
-    1. The chunk id is a PURE FUNCTION of the serial number —
-       ``(sn - min_sn) div span`` with span sized from one cheap
-       global min/max aggregate (two scalars, the zorder writer's
-       move) — so every plan branch sees the identical assignment with
-       no sampling, no range exchange, and contiguous sn ranges per
-       chunk by construction.
-    2. Bundling (W2) runs LOCALLY per chunk (lag + running sum inside
-       the chunk window — the one hash exchange on (file, chunk) that
-       spreads a file across tasks); the narrow windowed relation is
-       materialized ONCE (localCheckpoint) because two consumers read
-       it. Then a per-(file, chunk) boundary relation — first/last
-       bundle id, local group count, per-chunk skip ORs; ONE ROW PER
-       CHUNK SLICE, tiny by construction — is aggregated, and
-       cumulative offsets over it (a window over chunks within a
-       file, O(n_chunks) state) stitch local group ids into the
-       global contiguous-run numbering: a chunk whose first bundle id
-       equals its predecessor's last CONTINUES that run, so its
-       offset drops by one; a bundle spanning k chunks collapses to
-       one global group through the chained continuation flags.
-    3. The offsets (and the per-file W7 skip ORs, folded over the same
-       boundary relation) join back on (file, chunk) — each file
-       spread across its chunk tasks, never funneled to one core.
-    4. The shared per-(file, grp) group stage runs unchanged: its
-       windows are bundle-bounded, so a giant file parallelizes across
-       its bundles from here on.
-
-    Output is BIT-IDENTICAL to the single-window form for any chunk
-    count (pinned across chunk counts in
-    tests/test_sequential_chunked.py); W8/stats emission avoids the
-    per-file window via a map-side-combinable groupBy in the
-    callers. Returns (d, checks)."""
-    d, skip_names = _base_projection(df, spec)
-
-    # 1: deterministic sn-span chunking (serial numbers are dense by
-    # domain, so equal spans give balanced chunks; skew only costs
-    # balance, never correctness). NULL sn → NULL chunk, one group
-    # ordered first — matching the single window's nulls-first sort.
-    # The span is sized from the LARGEST per-file sn range, not the
-    # global (min, max): a global span would let one file with an
-    # offset sn domain (epoch-scale serials) inflate the span and
-    # collapse a dense giant file back into ONE chunk — silently
-    # re-creating the funnel this form removes (r14 session review
-    # finding). With the max per-file range, the widest file always
-    # splits into ~n_chunks and every other file proportionally.
-    lo, span = _chunk_span(d, n_chunks)
-    # sentinel -1 for NULL sn: below every real chunk id in the
-    # boundary ordering AND equi-joinable (a NULL chunk key would drop
-    # its rows at the stitch join)
-    d = d.withColumn(
-        "chunk",
-        F.coalesce(F.expr(f"(sn - {lo}L) div {span}L"), F.lit(-1)),
-    )
-
-    # 2a: local bundling inside each chunk — then freeze the narrow
-    # relation once for the two consumers below (boundary aggregate +
-    # stitch join)
-    w_c = W.partitionBy("file", "chunk").orderBy("sn")
-    w_c_cum = w_c.rowsBetween(W.unboundedPreceding, W.currentRow)
-    prev_bid = F.lag("bid").over(w_c)
-    d = (
-        d.withColumn(
-            "_chg",
-            (prev_bid.isNull() | (prev_bid != F.col("bid"))).cast("int"),
-        )
-        .withColumn("grp_local", F.sum("_chg").over(w_c_cum))
-        .drop("_chg")
-        .localCheckpoint()
-    )
-
-    # 2b: the boundary relation — one row per (file, chunk) slice
-    # boundary bids ride inside structs so a NULL bid at a chunk edge
-    # is carried, not skipped by min_by/max_by null handling; the
-    # ORDERING key is likewise null-coalesced to long-min — min_by/
-    # max_by skip NULL ordering keys, which would blank the NULL-sn
-    # sentinel chunk's boundary bids and split a bundle starting with
-    # a NULL-sn record (r14 session review finding; matches the
-    # windows' nulls-FIRST sn order)
-    sn_ord = F.coalesce(F.col("sn"), F.lit(-(2 ** 63)))
-    bnd = d.groupBy("file", "chunk").agg(
-        F.min_by(F.struct("bid"), sn_ord).getField("bid").alias("first_bid"),
-        F.max_by(F.struct("bid"), sn_ord).getField("bid").alias("last_bid"),
-        F.max("grp_local").alias("n_groups"),
-        *[
-            F.max(F.col(c).cast("int")).alias(f"or_{c}")
-            for c in skip_names.values()
-        ],
-    )
-    w_f = W.partitionBy("file").orderBy("chunk")
-    w_f_prev = w_f.rowsBetween(W.unboundedPreceding, -1)
-    w_f_cum = w_f.rowsBetween(W.unboundedPreceding, W.currentRow)
-    w_f_all = W.partitionBy("file").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    # continuation iff the single-window change flag
-    # (prev.isNull() | (prev != cur)) would NOT be true at the boundary
-    # row — a NULL comparison means "not a change" there (the running
-    # sum adds 0 for null flags), so when() must route null to CONTINUE
-    prev_last = F.lag("last_bid").over(w_f)
-    boundary_chg = prev_last.isNull() | (prev_last != F.col("first_bid"))
-    cont = F.when(boundary_chg, F.lit(0)).otherwise(F.lit(1))
-    bnd = bnd.withColumn("_cont", cont).select(
-        "file",
-        "chunk",
-        (
-            F.coalesce(F.sum("n_groups").over(w_f_prev), F.lit(0))
-            - F.sum("_cont").over(w_f_cum)
-        ).alias("grp_offset"),
-        *[
-            (F.max(f"or_{c}").over(w_f_all) == 1).alias(f"fskip_{c}")
-            for c in skip_names.values()
-        ],
-    )
-
-    # 3: stitch — one (file, chunk)-keyed join, file spread over chunks
-    d = d.join(bnd, ["file", "chunk"]).select(
-        "file",
-        "bid",
-        "sn",
-        "rid",
-        "bs",
-        "gen",
-        "recv",
-        "has_logf",
-        (F.col("grp_local") + F.col("grp_offset")).alias("grp"),
-        *[F.col(f"fskip_{c}").alias(f"fskip_{c}") for c in skip_names.values()],
-    )
-
-    def file_skip(path: str) -> Column:
-        name = skip_names.get(path)
-        if name is None:
-            return F.lit(False)
-        return F.coalesce(F.col(f"fskip_{name}"), F.lit(False))
-
-    # 4: the shared bundle-bounded stage
-    return _group_stage(d, file_skip)
-
-
-def sequential_results(
-    df: DataFrame, spec: SequentialSpec, n_chunks: int | None = None
-) -> DataFrame:
+def sequential_results(df: DataFrame, spec: SequentialSpec) -> DataFrame:
     """Long-format sequential validation results:
     (file, serial_number, field_path, valid, details).
 
@@ -476,64 +290,9 @@ def sequential_results(
     bundle's last serialNumber (W6), mirroring which serialId the
     reference attaches (sequential.py:43-49 vs 77/84). Files with zero
     errors emit one synthetic (file, NULL, 'SequentialCheck', true, '')
-    row (W8).
-
-    ``n_chunks=None`` (default) is the single-exchange per-file window
-    form — right whenever files are Lambda-object-sized. Pass
-    ``n_chunks`` for GIANT files: the chunk-stitched form
-    (``_chunked_checks``) spreads each file's window work across
-    contiguous serial-number chunks and emits W8 from a
-    map-side-combinable per-file aggregate instead of a per-file
-    window, so no stage funnels one file through one task. Output is
-    bit-identical between the two forms for any chunk count
-    (tests/test_sequential_chunked.py)."""
-    if n_chunks is not None:
-        # the error explode and the per-file W8 aggregate both consume
-        # the stitched relation; its lineage is already cut at the
-        # narrow chunk-windowed base inside _chunked_checks, so the
-        # re-executed tail is one join + bundle-bounded windows over
-        # in-memory blocks — cheaper than materializing the wide
-        # fully-windowed relation
-        d, checks = _chunked_checks(df, spec, n_chunks)
-        verdicts = F.array(
-            *[
-                F.struct(
-                    F.lit(path).alias("field_path"),
-                    F.when(cond, sn).alias("serial_number"),
-                    F.lit(False).alias("valid"),
-                    cond.alias("emit"),
-                    details.alias("details"),
-                )
-                for path, sn, cond, details in checks
-            ]
-        )
-        errors = (
-            d.select("file", F.explode(verdicts).alias("v"))
-            .filter(F.col("v.emit"))
-            .select(
-                "file",
-                F.col("v.serial_number").alias("serial_number"),
-                F.col("v.field_path").alias("field_path"),
-                F.col("v.valid").alias("valid"),
-                F.col("v.details").alias("details"),
-            )
-        )
-        # W8 from a groupBy (partial-aggregated map-side — never a
-        # per-file window): one all-pass row per error-free file
-        allpass = (
-            d.groupBy("file")
-            .agg(F.sum(_row_error_count(checks)).alias("_n_err"))
-            .filter(F.col("_n_err") == 0)
-            .select(
-                "file",
-                F.lit(None).cast("long").alias("serial_number"),
-                F.lit(SEQUENTIAL_CHECK).alias("field_path"),
-                F.lit(True).alias("valid"),
-                F.lit("").alias("details"),
-            )
-        )
-        return errors.unionByName(allpass)
-
+    row (W8). A file's result-row count is therefore its error count,
+    or 1 when it has none — validate_queue's count
+    (sequential.py:22-25)."""
     d, checks = _windowed_checks(df, spec)
 
     # W8: the first row of an error-free file emits the all-pass row —
@@ -569,30 +328,3 @@ def sequential_results(
         )
     )
 
-
-def sequential_stats(
-    df: DataFrame, spec: SequentialSpec, n_chunks: int | None = None
-) -> DataFrame:
-    """Per-file (seq_rows, seq_errors) WITHOUT materializing the error
-    rows — for tally queries that only need counts. seq_rows mirrors
-    validate_queue's result-row count: the errors, or the single
-    all-pass row when there are none (sequential.py:22-25).
-    ``n_chunks`` selects the chunk-stitched form, same contract as
-    ``sequential_results``."""
-    if n_chunks is not None:
-        d, checks = _chunked_checks(df, spec, n_chunks)
-        agg = d.groupBy("file").agg(
-            F.sum(_row_error_count(checks)).alias("seq_errors")
-        )
-    else:
-        d, _ = _windowed_checks(df, spec)
-        agg = d.groupBy("file").agg(
-            F.max("file_err_cnt").alias("seq_errors")
-        )
-    return agg.select(
-        "file",
-        F.when(F.col("seq_errors") > 0, F.col("seq_errors"))
-        .otherwise(F.lit(1))
-        .alias("seq_rows"),
-        "seq_errors",
-    )

@@ -565,14 +565,19 @@ def cv_validation_tallies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _tallies_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-file tally frame shared by the A2 query and the A5 counters."""
-    from ..operators.sequential import sequential_stats
     from ..operators.validation import validation_summary
 
     d = _events_with_file(spark, sf_dir)
     f = validation_summary(d, _events_ruleset(), "file")
-    # stats-only sequential path: per-file counts from the window stage,
-    # no error-row materialization
-    s = sequential_stats(d, _events_seq_spec())
+    # seq_rows is the error rows, or the one all-pass row
+    s = (
+        sequential_results(d, _events_seq_spec())
+        .groupBy("file")
+        .agg(
+            F.count(F.lit(1)).alias("seq_rows"),
+            F.count_if(~F.col("valid")).alias("seq_errors"),
+        )
+    )
     seq_err_msg = F.when(F.col("seq_errors") > 0, F.lit(1)).otherwise(F.lit(0))
     return f.join(s, "file").select(
         "file",
@@ -714,29 +719,6 @@ def cv_sequential_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     serials/recordIds, chronological timestamps, bundle-size checks,
     per-file all-pass synthesis (odevalidator/sequential.py:14-110)."""
     return _seq_results(spark, sf_dir)
-
-
-@register(
-    "cv_sequential_checks_chunked",
-    oracle=f"""
-    WITH ev AS ({_EV_SQL}),
-    seq AS ({_SEQ_SQL})
-    SELECT * FROM seq
-    """,
-)
-def cv_sequential_checks_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CHUNK-STITCHED form of cv_sequential_checks (VERDICT r13
-    item 1) under the SAME oracle: contiguous-run bundling is computed
-    locally inside range-partitioned (file, serial) chunks, a tiny
-    per-chunk boundary relation stitches the global run numbering, and
-    W8 emission comes from a map-side-combinable per-file aggregate —
-    so a single multi-GB file's window work spreads across its chunks
-    instead of funneling through one task
-    (operators/sequential.py:_chunked_checks). Bit-identical to the
-    single-window form by construction; the shared DuckDB oracle
-    hash-proves it on the driver board."""
-    d = _events_with_file(spark, sf_dir)
-    return sequential_results(d, _events_seq_spec(), n_chunks=8)
 
 
 # W7: skipSequentialValidation conditions in the reference INI dialect

@@ -30,7 +30,7 @@ from pyspark.sql.types import StructType
 
 from ..operators.sequential import SequentialSpec, sequential_results
 from ..operators.validation import skip_flag_exprs, validate
-from ..sources.files import file_lines, file_lines_chunked
+from ..sources.files import file_lines, file_lines_chunked, infer_record_schema
 from ..sources.rules import RuleSet
 
 N_SEQ_ID = "metadata.serialId"
@@ -71,8 +71,7 @@ def run_cv_pipeline(
     over it also groups by ``file_path``.
 
     ``schema`` is the record schema; when omitted it is inferred with
-    one ``spark.read.json`` pass (same cost the previous inferred-read
-    paid).
+    one ``spark.read.json`` pass (:func:`infer_record_schema`).
 
     ``chunked=True`` reads via :func:`file_lines_chunked`, bounding
     executor memory by the block-split size instead of the largest
@@ -83,11 +82,7 @@ def run_cv_pipeline(
     :meth:`PipelineResult.unpersist` when done with the result.
     """
     if schema is None:
-        schema = (
-            spark.read.option("recursiveFileLookup", "true")
-            .json(input_dir)
-            .schema
-        )
+        schema = infer_record_schema(spark, input_dir)
     reader = file_lines_chunked if chunked else file_lines
     records = (
         reader(spark, input_dir)

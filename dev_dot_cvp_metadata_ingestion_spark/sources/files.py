@@ -13,7 +13,8 @@ behavior becomes a column computed from the hidden ``_metadata`` struct:
   streams have no names, cvp_bucket_event_lambda_handler.py:28-30)
 * S4 line scan     → ``spark.read.text`` + blank-line filter
   (cvp…:40-64)
-* S5 NDJSON parse  → ``spark.read.json`` (permissive) or from_json
+* S5 NDJSON parse  → ``from_json`` (permissive) over the lines, with
+  the schema from :func:`infer_record_schema`
 * S6 positional CSV → explicit schema in RULE ORDER, header skipped
   (validator.py:419-442)
 
@@ -25,7 +26,7 @@ skip directories before any read.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -33,6 +34,23 @@ from .rules import RuleSet
 
 # matches the text reader's record delimiters (\n, \r\n, bare \r)
 _LINE_SPLIT = r"\r\n|\r|\n"
+
+
+def split_lines(text: Column) -> Column:
+    """posexplode of a wholetext ``value`` into its non-blank lines, as
+    (pos, line) with a 0-based ``pos``: the line split shared by the
+    batch (:func:`file_lines`) and streaming wholetext reads."""
+    return F.posexplode(
+        F.filter(F.split(text, _LINE_SPLIT), lambda x: F.trim(x) != "")
+    ).alias("pos", "line")
+
+
+def infer_record_schema(spark: SparkSession, path: str) -> StructType:
+    """S5: the NDJSON record schema of every file under ``path``, from
+    one ``spark.read.json`` pass. Recursive like the line readers:
+    partition inference over Hive-style ``k=v`` directories would
+    otherwise raise CONFLICTING_DIRECTORY_STRUCTURES."""
+    return spark.read.option("recursiveFileLookup", "true").json(path).schema
 
 
 def file_lines(
@@ -65,12 +83,7 @@ def file_lines(
             F.col("_metadata.file_path").alias("file_path"),
             F.col("_metadata.file_size").alias("file_size"),
             F.col("_metadata.file_modification_time").alias("file_mtime"),
-            F.posexplode(
-                F.filter(
-                    F.split(F.col("value"), _LINE_SPLIT),
-                    lambda x: F.trim(x) != "",
-                )
-            ).alias("pos", "line"),
+            split_lines(F.col("value")),
         )
         .select(
             "file_path",
@@ -264,24 +277,6 @@ def file_lines_sniffed(
             )
 
     return bin_df.mapInPandas(_gunzip_lines, out_schema)
-
-
-def records_from_dir(
-    spark: SparkSession, path: str, schema: StructType | None = None
-) -> DataFrame:
-    """Convenience S3-S5 path: NDJSON records with file provenance.
-    Uses spark.read.json (schema inferred or given) so Catalyst prunes
-    unused record fields at the scan."""
-    reader = spark.read.option("recursiveFileLookup", "true")
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.json(path)
-    return df.select(
-        F.col("_metadata.file_path").alias("file_path"),
-        F.col("_metadata.file_size").alias("file_size"),
-        F.col("_metadata.file_modification_time").alias("file_mtime"),
-        "*",
-    )
 
 
 def csv_records(

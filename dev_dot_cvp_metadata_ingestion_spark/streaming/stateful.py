@@ -188,7 +188,7 @@ def _w6_close_rows(
     reference's full-bundle and tail-of-partial checks
     (odevalidator/sequential.py:61-86), one error per run of equal
     bundleSize among qualifying records, exactly the batch window
-    form's last-qualifying-bs dedup (operators/sequential.py:145-179).
+    form's last-qualifying-bs dedup (operators/sequential.py, W6).
     Runs over the validated-record summary, so it needs the CLOSED
     bundle: streaming closes a bundle when the watermark passes its
     max accepted event time."""

@@ -32,7 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..operators.validation import validate
-from ..sources.files import _LINE_SPLIT
+from ..sources.files import split_lines
 from ..sources.rules import RuleSet
 
 
@@ -62,12 +62,7 @@ def stream_cv_pipeline(
         .text(input_dir, wholetext=True, recursiveFileLookup=True)
         .select(
             F.col("_metadata.file_path").alias("file_path"),
-            F.posexplode(
-                F.filter(
-                    F.split(F.col("value"), _LINE_SPLIT),
-                    lambda x: F.trim(x) != "",
-                )
-            ).alias("pos", "line"),
+            split_lines(F.col("value")),
         )
         .select(
             "file_path",

@@ -22,7 +22,6 @@ CVP_QUERIES = (
     "cv_message_metrics",
     "cv_error_histogram",
     "cv_sequential_checks",
-    "cv_sequential_checks_chunked",
     "cv_sequential_checks_gated",
     "file_metadata_docs",
     "file_metrics_counters",

@@ -23,7 +23,6 @@ registry.load_all()
 # windows and per-file/per-dimension aggregates (default tier)
 CVP_SENSITIVE = [
     "cv_sequential_checks",          # per-file window chain (+ rebalance)
-    "cv_sequential_checks_chunked",  # chunk-stitched bundle windows
     "cv_sequential_checks_gated",    # per-file skip-flag OR in the window
     "cv_validation_tallies",         # per-file aggregates + sequential join
     "cv_error_histogram",            # per-(field, detail) error counts

@@ -347,24 +347,35 @@ def hive_dir(tmp_path_factory):
 )
 def test_cli_runs_on_hive_style_input(spark, hive_dir, tmp_path, mode, table):
     """The CLI, batch and --streaming, over a year=/month= tree writes
-    the same validation rows the batch pipeline computes."""
+    the same validation rows the batch pipeline computes. A streamed
+    micro-batch replayed after a crash between its sink and its
+    checkpoint commit rewrites its rows instead of appending them
+    again."""
     out = str(tmp_path / "out")
     argv = ["--input", hive_dir, "--config", CONFIG, "--output", out,
             "--cores", "2"]
     if mode == "streaming":
         argv.append("--streaming")
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    # a process of its own: main() stops the session it runs on
-    proc = subprocess.run(
-        [sys.executable, "-m", "dev_dot_cvp_metadata_ingestion_spark", *argv],
-        cwd=root, capture_output=True, text=True, timeout=600,
-    )
-    assert proc.returncode == 0, proc.stderr[-4000:]
+
+    def run_cli():
+        # a process of its own: main() stops the session it runs on
+        proc = subprocess.run(
+            [sys.executable, "-m", "dev_dot_cvp_metadata_ingestion_spark",
+             *argv],
+            cwd=root, capture_output=True, text=True, timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-4000:]
 
     key = lambda r: (  # noqa: E731
         r.file_path.split("/")[-1], r.record_uid, r.field_path, r.valid,
     )
-    got = sorted(map(key, spark.read.parquet(f"{out}/{table}").collect()))
+
+    def written():
+        return sorted(map(key, spark.read.parquet(f"{out}/{table}").collect()))
+
+    run_cli()
+    got = written()
     ruleset = parse_rules_ini(open(CONFIG).read())
     expected = sorted(
         map(key, run_cv_pipeline(spark, hive_dir, ruleset).validation.collect())
@@ -372,3 +383,16 @@ def test_cli_runs_on_hive_style_input(spark, hive_dir, tmp_path, mode, table):
     assert got == expected
     assert ("p1.json", 3, "metadata.receivedMessageDetails.locationData.latitude",
             False) in got
+
+    if mode == "streaming":
+        # the last micro-batch's commit is lost: the restart replays it
+        commits = os.path.join(out, "_checkpoint", "commits")
+        last = max(
+            (f for f in os.listdir(commits) if f.isdigit()), key=int
+        )
+        for name in (last, f".{last}.crc"):
+            if os.path.exists(os.path.join(commits, name)):
+                os.remove(os.path.join(commits, name))
+        run_cli()
+        assert os.path.exists(os.path.join(commits, last))
+        assert written() == expected

@@ -1,18 +1,15 @@
 """Parity for the sequential operator vs the reference Sequential class
-(odevalidator/sequential.py), compared as multisets of error-detail
-strings per scenario (the reference attaches serialId dicts; we attach
-serial numbers — the payload strings are the comparable surface)."""
+(odevalidator/sequential.py), modelled in plain Python by
+tests/sequential_model.py, compared as multisets of (valid, details)
+per scenario (the reference attaches serialId dicts; we attach serial
+numbers — the payload strings are the comparable surface)."""
 
 from __future__ import annotations
 
-import sys
 from collections import Counter
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
-import pkg_resources  # noqa: F401
 import pytest
-
-sys.path.append("/root/reference")
 
 from pyspark.sql import functions as F
 
@@ -21,7 +18,9 @@ from dev_dot_cvp_metadata_ingestion_spark.operators.sequential import (
     sequential_results,
 )
 
-T0 = datetime(2019, 1, 1, 0, 0, 0)
+from .sequential_model import validate_file
+
+T0 = datetime(2019, 1, 1, 0, 0, 0, tzinfo=timezone.utc)
 
 
 def rec(sn, rid, bid, bs, gen_off=None, recv_off=None, logf=True):
@@ -56,30 +55,8 @@ SCENARIOS = {
 
 
 def reference_errors(records, skips=()):
-    from odevalidator.sequential import Sequential
-
-    msgs = []
-    for r in sorted(records, key=lambda x: x["sn"]):
-        meta = {
-            "serialId": {
-                "recordId": r["rid"],
-                "serialNumber": r["sn"],
-                "bundleId": r["bid"],
-                "bundleSize": r["bs"],
-            },
-            "recordGeneratedAt": r["gen"].isoformat() + "Z",
-            "odeReceivedAt": r["recv"].isoformat() + "Z",
-        }
-        if r["logf"]:
-            meta["logFileName"] = "bsmTx.log"
-        msgs.append({"metadata": meta})
-    seq = Sequential(set(skips))
-    results = seq.perform_sequential_validations(msgs)
-    out = []
-    for rr in results:
-        for fv in rr.field_validations:
-            out.append((fv.valid, fv.details))
-    return Counter(out)
+    results = validate_file(records, set(skips))
+    return Counter((valid, details) for _, _, valid, details in results)
 
 
 def engine_errors(spark, records, skips=()):

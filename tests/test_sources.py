@@ -8,11 +8,11 @@ import json
 
 from pyspark.sql import functions as F
 
+from dev_dot_cvp_metadata_ingestion_spark.plans.pipeline import run_cv_pipeline
 from dev_dot_cvp_metadata_ingestion_spark.sources.files import (
     audit_csv_headers,
     file_lines,
     file_lines_sniffed,
-    records_from_dir,
 )
 from dev_dot_cvp_metadata_ingestion_spark.sources.rules import (
     fixture_rules_path,
@@ -38,11 +38,24 @@ def test_gzip_transparent_read(spark, tmp_path):
     }
     assert per_file == {"plain.json": 5, "compressed.json.gz": 5}
 
-    records = records_from_dir(spark, str(d))
-    assert records.count() == 10
+    ruleset = parse_rules_ini(
+        "[_settings]\nDataType = json\nSequential = False\n\n"
+        "[a]\nType = decimal\nLowerLimit = 0\nUpperLimit = 9\n"
+    )
+    result = run_cv_pipeline(spark, str(d), ruleset)
+    try:
+        got = {
+            (r.file_path.split("/")[-1], r.record_uid, r.a, r.b)
+            for r in result.records.collect()
+        }
+    finally:
+        result.unpersist()
     # identical record content from both codecs
-    agg = records.groupBy("a").count().collect()
-    assert all(r["count"] == 2 for r in agg)
+    assert got == {
+        (name, i + 1, i, f"x{i}")
+        for name in ("plain.json", "compressed.json.gz")
+        for i in range(5)
+    }
 
 
 def test_gzip_magic_byte_fallback(spark, tmp_path):

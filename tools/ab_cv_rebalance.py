@@ -27,7 +27,6 @@ QUERIES = [
     "cv_message_metrics",
     "cv_error_histogram",
     "cv_now_token_validation",
-    "cv_sequential_checks_chunked",
     "cv_sequential_checks_gated",
 ]
 
