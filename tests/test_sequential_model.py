@@ -152,29 +152,43 @@ def data(spark):
     return spark.createDataFrame(_rows(), SCHEMA).localCheckpoint()
 
 
-def test_results_match_model(spark, data):
-    single = _canon(sequential_results(data, _spec(with_skip=True)))
+def _split(data, parts: int):
+    """The fixture spread round-robin over ``parts`` input partitions, so
+    a file's records start out on several partitions and the window's
+    shuffle has to bring them back together."""
+    return data.repartition(parts)
+
+
+@pytest.mark.parametrize("parts", [1, 2, 3, 7, 32])
+def test_results_match_model(spark, data, parts):
+    single = _canon(
+        sequential_results(_split(data, parts), _spec(with_skip=True))
+    )
     assert single == _model(_rows(), with_skip=True)
     # sanity: the fixture actually exercises errors AND all-pass rows
     assert any(r[2] == "SequentialCheck" for r in single)
     assert any(not r[3] for r in single)
 
 
-def test_results_without_skip_flags(spark, data):
-    single = _canon(sequential_results(data, _spec(with_skip=False)))
+@pytest.mark.parametrize("parts", [1, 3, 17])
+def test_results_without_skip_flags(spark, data, parts):
+    single = _canon(
+        sequential_results(_split(data, parts), _spec(with_skip=False))
+    )
     assert single == _model(_rows(), with_skip=False)
     # without gating, f5's serial gap IS an error
     assert any(r[0] == "f5" and not r[3] for r in single)
 
 
-def test_file_counts_match_model(spark, data):
+@pytest.mark.parametrize("parts", [1, 2, 5, 32])
+def test_file_counts_match_model(spark, data, parts):
     """Per-file (seq_rows, seq_errors) as cv_validation_tallies counts
     them from the result rows: the error rows, or the one all-pass
     row."""
+    res = sequential_results(_split(data, parts), _spec(with_skip=True))
     counts = sorted(
         tuple(r)
-        for r in sequential_results(data, _spec(with_skip=True))
-        .groupBy("file")
+        for r in res.groupBy("file")
         .agg(F.count(F.lit(1)), F.count_if(~F.col("valid")))
         .collect()
     )
