@@ -1,19 +1,17 @@
-"""S1 event decode: parity with the reference's _fetchS3DetailsFromEvent
-(run in-process), for both the driver-side helper and the Column form."""
+"""S1 event decode: parity with the reference's _fetchS3DetailsFromEvent,
+as modelled in plain Python by tests/validator_model.py, for both the
+driver-side helper and the Column form."""
 
 from __future__ import annotations
 
 import json
-import sys
-
-import pkg_resources  # noqa: F401
-
-sys.path.append("/root/reference")
 
 from dev_dot_cvp_metadata_ingestion_spark.sources.events import (
     decode_s3_event,
     decode_s3_events,
 )
+
+from .validator_model import decode_event
 
 
 def make_event(bucket: str, key: str) -> dict:
@@ -29,12 +27,9 @@ CASES = [
 
 
 def test_driver_side_matches_reference():
-    from bucket_handler_lambda.bucket_event_lambda_handler import HandleBucketEvent
-
-    h = HandleBucketEvent()
     for bucket, key in CASES:
         event = make_event(bucket, key)
-        assert decode_s3_event(event) == h._fetchS3DetailsFromEvent(event)
+        assert decode_s3_event(event) == decode_event(event)
 
 
 def test_column_form_matches_driver_side(spark):

@@ -2,27 +2,28 @@
 expanded elements must carry the full config section — conditions
 included (validator.py:316) — so fuzzed records exercising if/then
 chains, matchAgainst, startsWithField and existence-style ifParts over
-nested arrays must agree verdict-for-verdict with the reference.
+nested arrays must agree verdict-for-verdict with the reference, as
+modelled in plain Python by tests/validator_model.py.
 
 Well-formed shapes only (outer keys present, lists non-empty): the
 reference's expander has documented bugs on missing/empty list data
 (duplicate rule paths via the fall-through at validator.py:322-332,
-TypeError on null parents) that are deliberately not replicated
-(SURVEY §7.5)."""
+TypeError on null parents) that the engine deliberately does not
+replicate (SURVEY §7.5). The model does carry the fall-through
+duplicate, which test_list2_segment_and_missing_inner_list_parity
+states exactly."""
 
 from __future__ import annotations
 
 import json
 import random
-import sys
 
-import pkg_resources  # noqa: F401
 import pytest
-
-sys.path.append("/root/reference")
 
 from dev_dot_cvp_metadata_ingestion_spark.operators.validation import validate
 from dev_dot_cvp_metadata_ingestion_spark.sources.rules import parse_rules_ini
+
+from .validator_model import validate_records
 
 FUZZ_CONFIG = """
 [_settings]
@@ -90,24 +91,14 @@ def gen_record(rng: random.Random, i: int) -> dict:
 
 @pytest.mark.parametrize("seed", [11, 97])
 def test_fuzzed_conditional_list_verdicts_match(spark, tmp_path, seed):
-    import queue
-
-    from odevalidator.validator import TestCase
-
     rng = random.Random(seed)
     records = [gen_record(rng, i) for i in range(1, 31)]
 
-    cfgfile = str(tmp_path / "fuzzlist.ini")
-    with open(cfgfile, "w") as fh:
-        fh.write(FUZZ_CONFIG)
-    tc = TestCase(cfgfile)
-    q = queue.Queue()
-    for rec in records:
-        q.put(json.dumps({k: v for k, v in rec.items() if k != "line_no"}))
-    ref = {}
-    for r in tc.validate_queue(q):
-        for fv in r.field_validations:
-            ref[(r.serial_id, fv.field_path)] = fv.valid
+    results, _ = validate_records(
+        FUZZ_CONFIG,
+        [{k: v for k, v in rec.items() if k != "line_no"} for rec in records],
+    )
+    ref = {(sid, path): valid for sid, path, valid, _ in results}
 
     path = tmp_path / "fuzzlist.json"
     with open(path, "w") as fh:
@@ -172,21 +163,11 @@ def test_list2_segment_and_missing_inner_list_parity(spark, tmp_path):
     a second recursion drops the scalar tail and emits a truncated
     duplicate like ``zones{0}.sensors{0}``) — those extra rows are a
     documented divergence (SURVEY §7.5) asserted exactly here."""
-    import queue
-
-    from odevalidator.validator import TestCase
-
-    cfgfile = str(tmp_path / "list2.ini")
-    with open(cfgfile, "w") as fh:
-        fh.write(LIST2_CFG)
-    tc = TestCase(cfgfile)
-    q = queue.Queue()
-    for rec in LIST2_RECORDS:
-        q.put(json.dumps({k: v for k, v in rec.items() if k != "line_no"}))
-    ref = {}
-    for r in tc.validate_queue(q):
-        for fv in r.field_validations:
-            ref[(r.serial_id, fv.field_path)] = (fv.valid, fv.details)
+    results, _ = validate_records(
+        LIST2_CFG,
+        [{k: v for k, v in rec.items() if k != "line_no"} for rec in LIST2_RECORDS],
+    )
+    ref = {(sid, path): (valid, details) for sid, path, valid, details in results}
 
     path = tmp_path / "list2.json"
     with open(path, "w") as fh:

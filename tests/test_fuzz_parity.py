@@ -1,27 +1,28 @@
 """Randomized reference parity (SURVEY §5.4): seeded random mutations
 of a valid ODE record — dropped fields, out-of-range numbers, wrong
 enums, empty strings, broken conditionals — validated by BOTH the
-reference validator and this engine in one batch; every (record, rule)
-verdict must agree."""
+reference validator (modelled in plain Python by
+tests/validator_model.py) and this engine in one batch; every
+(record, rule) verdict must agree."""
 
 from __future__ import annotations
 
 import copy
 import json
 import random
-import sys
 
-import pkg_resources  # noqa: F401
 import pytest
 
-sys.path.append("/root/reference")
-
 from dev_dot_cvp_metadata_ingestion_spark.operators.validation import validate
-from dev_dot_cvp_metadata_ingestion_spark.sources.rules import load_rules_file
+from dev_dot_cvp_metadata_ingestion_spark.sources.rules import (
+    fixture_rules_path,
+    load_rules_file,
+)
 
 from .test_validation_parity import NOW_RULES, make_record
+from .validator_model import validate_records
 
-CONFIG = "/root/reference/odevalidator/config_2.ini"
+CONFIG = fixture_rules_path("config_2.ini")
 
 MUTATIONS = [
     ("drop", "metadata.recordGeneratedBy"),
@@ -79,21 +80,14 @@ def gen_records(n: int, seed: int) -> list[dict]:
 
 @pytest.mark.parametrize("seed", [7, 42])
 def test_fuzzed_verdicts_match(spark, tmp_path, seed):
-    import queue
-
-    from odevalidator.validator import TestCase
-
     records = gen_records(40, seed)
 
-    tc = TestCase(CONFIG)
-    q = queue.Queue()
-    for rec in records:
-        clean = {k: v for k, v in rec.items() if k != "line_no"}
-        q.put(json.dumps(clean))
-    ref = {}
-    for r in tc.validate_queue(q):
-        for fv in r.field_validations:
-            ref[(r.serial_id, fv.field_path)] = fv.valid
+    with open(CONFIG, encoding="utf-8") as fh:
+        results, _ = validate_records(
+            fh.read(),
+            [{k: v for k, v in rec.items() if k != "line_no"} for rec in records],
+        )
+    ref = {(sid, path): valid for sid, path, valid, _ in results}
 
     path = tmp_path / f"fuzz{seed}.json"
     with open(path, "w") as fh:

@@ -1,5 +1,7 @@
 """P13: ``.list.`` rule expansion (validator.py:304-378) — per-element
-verdicts via posexplode, with reference parity on well-formed data.
+verdicts via posexplode, with reference parity on well-formed data
+against the plain-Python model of the reference in
+tests/validator_model.py.
 
 The reference's recursive expander has edge-case bugs on missing data
 (duplicate/odd rule paths, SURVEY §7.5); parity here is asserted on the
@@ -10,15 +12,13 @@ verdict for absent lists) are tested standalone.
 from __future__ import annotations
 
 import json
-import sys
 
-import pkg_resources  # noqa: F401
 import pytest
-
-sys.path.append("/root/reference")
 
 from dev_dot_cvp_metadata_ingestion_spark.operators.validation import validate
 from dev_dot_cvp_metadata_ingestion_spark.sources.rules import parse_rules_ini
+
+from .validator_model import validate_records
 
 LIST_CONFIG = """
 [_settings]
@@ -73,21 +73,8 @@ def test_per_element_expansion(engine_results):
 
 
 def test_reference_parity_well_formed(engine_results):
-    import queue
-
-    from odevalidator.validator import TestCase
-
-    cfgfile = "/tmp/_listcfg.ini"
-    with open(cfgfile, "w") as fh:
-        fh.write(LIST_CONFIG)
-    tc = TestCase(cfgfile)
-    q = queue.Queue()
-    for rec in RECORDS:
-        q.put(json.dumps(rec))
-    ref = {}
-    for r in tc.validate_queue(q):
-        for fv in r.field_validations:
-            ref[(r.serial_id, fv.field_path)] = fv.valid
+    results, _ = validate_records(LIST_CONFIG, RECORDS)
+    ref = {(sid, path): valid for sid, path, valid, _ in results}
 
     mine = {k: v for k, (v, _) in engine_results.items()}
     assert ref == mine, (
@@ -148,21 +135,8 @@ def test_depth2_expansion(nested_results):
 def test_depth2_reference_parity(nested_results):
     """Depth-2 fixture matches the reference validator field-for-field
     (validator.py:304-378 recurses to any depth)."""
-    import queue
-
-    from odevalidator.validator import TestCase
-
-    cfgfile = "/tmp/_nestedcfg.ini"
-    with open(cfgfile, "w") as fh:
-        fh.write(NESTED_CONFIG)
-    tc = TestCase(cfgfile)
-    q = queue.Queue()
-    for rec in NESTED_RECORDS:
-        q.put(json.dumps(rec))
-    ref = {}
-    for r in tc.validate_queue(q):
-        for fv in r.field_validations:
-            ref[(r.serial_id, fv.field_path)] = fv.valid
+    results, _ = validate_records(NESTED_CONFIG, NESTED_RECORDS)
+    ref = {(sid, path): valid for sid, path, valid, _ in results}
 
     mine = {k: v for k, (v, _) in nested_results.items()}
     assert ref == mine, (
@@ -235,21 +209,8 @@ def test_conditional_list_rule(conditional_results):
 
 
 def test_conditional_list_reference_parity(conditional_results):
-    import queue
-
-    from odevalidator.validator import TestCase
-
-    cfgfile = "/tmp/_condlistcfg.ini"
-    with open(cfgfile, "w") as fh:
-        fh.write(CONDITIONAL_LIST_CONFIG)
-    tc = TestCase(cfgfile)
-    q = queue.Queue()
-    for rec in CONDITIONAL_RECORDS:
-        q.put(json.dumps(rec))
-    ref = {}
-    for r in tc.validate_queue(q):
-        for fv in r.field_validations:
-            ref[(r.serial_id, fv.field_path)] = fv.valid
+    results, _ = validate_records(CONDITIONAL_LIST_CONFIG, CONDITIONAL_RECORDS)
+    ref = {(sid, path): valid for sid, path, valid, _ in results}
 
     mine = {k: v for k, (v, _) in conditional_results.items()}
     assert ref == mine, (

@@ -1,6 +1,7 @@
-"""Reference-parity: run the ACTUAL reference validator (pure Python,
-importable from /root/reference) on fixture NDJSON and assert our
-compiled-Column engine produces the same verdicts field-for-field.
+"""Reference-parity: run a plain-Python model of the reference
+validator (tests/validator_model.py) on fixture NDJSON and assert the
+engine's SQL-text rule compiler produces the same verdicts
+field-for-field.
 
 This is the strongest correctness signal available (the reference ships
 no tests, SURVEY §5). Fixtures cover: valid records, range violations,
@@ -12,20 +13,21 @@ and the sequential skip set.
 from __future__ import annotations
 
 import json
-import sys
 
-import pkg_resources  # noqa: F401  (bind system copy before reference path)
 import pytest
-
-sys.path.append("/root/reference")
 
 from dev_dot_cvp_metadata_ingestion_spark.operators.validation import (
     skip_flag_exprs,
     validate,
 )
-from dev_dot_cvp_metadata_ingestion_spark.sources.rules import load_rules_file
+from dev_dot_cvp_metadata_ingestion_spark.sources.rules import (
+    fixture_rules_path,
+    load_rules_file,
+)
 
-CONFIG = "/root/reference/odevalidator/config_2.ini"
+from .validator_model import validate_records
+
+CONFIG = fixture_rules_path("config_2.ini")
 
 # rules whose invalid-details embed the frozen NOW (differs between the
 # two engines' parse instants) — verdicts compared, messages not
@@ -167,20 +169,10 @@ FIXTURES = [
 
 @pytest.fixture(scope="module")
 def reference_results():
-    import queue
-
-    from odevalidator.validator import TestCase
-
-    tc = TestCase(CONFIG)
-    q = queue.Queue()
-    for rec in FIXTURES:
-        q.put(json.dumps(rec))
-    results = tc.validate_queue(q)
-    out = {}
-    for r in results:
-        for fv in r.field_validations:
-            out[(r.serial_id, fv.field_path)] = (fv.valid, fv.details)
-    return out, set(tc.skip_sequential_checks)
+    with open(CONFIG, encoding="utf-8") as fh:
+        results, skips = validate_records(fh.read(), FIXTURES)
+    out = {(sid, path): (valid, details) for sid, path, valid, details in results}
+    return out, skips
 
 
 @pytest.fixture(scope="module")
