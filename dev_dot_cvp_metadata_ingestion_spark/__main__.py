@@ -4,12 +4,13 @@
         --input /path/to/files --config /path/to/config.ini \
         --output /path/to/tables [--streaming]
 
-The batch form replaces one reference Lambda sweep: validate every
-NDJSON file under --input against the INI rule schema, run sequential
-checks, and write validation_results / sequential_results /
-file_tallies / file_counts parquet tables under --output. --streaming
-watches --input as a file-source stream instead (availableNow drain),
-writing validation_results_stream/ one ``batch_id=N`` partition per
+The batch form replaces one reference Lambda sweep: parse each NDJSON
+line under --input once into a VARIANT record, validate it against the
+INI rule schema, run sequential checks, and write validation_results /
+sequential_results / file_tallies / file_counts parquet tables under
+--output. No pass infers a schema first. --streaming watches --input
+as a file-source stream instead (availableNow drain), writing
+validation_results_stream/ one ``batch_id=N`` partition per
 micro-batch, which a replayed micro-batch overwrites.
 
 Registry access (every operator from COVERAGE.md, same callables the
@@ -116,14 +117,13 @@ def _pipeline_main(spark, args) -> int:
     ruleset = load_rules_file(args.config)
 
     if args.streaming:
-        from .sources.files import infer_record_schema
         from .streaming.stream import idempotent_parquet_sink, stream_cv_pipeline
 
         q = stream_cv_pipeline(
             spark,
             args.input,
             ruleset,
-            infer_record_schema(spark, args.input),
+            None,
             idempotent_parquet_sink(f"{args.output}/validation_results_stream"),
             f"{args.output}/_checkpoint",
             available_now=True,

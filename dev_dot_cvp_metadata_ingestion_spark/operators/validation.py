@@ -1,24 +1,27 @@
 """Rule compiler: declarative rules → Spark SQL expression text (SURVEY §2.2).
 
 The reference validates each record by interpreting every rule per row
-(odevalidator/validator.py:294-302, 391-406). Here rules compile ONCE,
-driver-side and in pure Python, into the SQL text of one array of
-validation-verdict structs. That text crosses to the JVM in a single
-``selectExpr`` — one parse instead of one py4j round trip per Column
-node — and runs whole-stage-codegen'd by Tungsten, no Python on the hot
-path. One explode turns the wide verdicts into the long results table
-(file, record id, field_path, valid, details).
+(odevalidator/validator.py:294-302, 391-406) over its ``json.loads``
+value (validator.py:265, 395). Here a record is one VARIANT column
+``rec``, so each value keeps its own JSON type: missing, empty, number
+or string is decided per row, and no other file can change it. Rules
+compile ONCE, driver-side and in pure Python, into the SQL text of one
+array of validation-verdict structs. That text crosses to the JVM in a
+single ``selectExpr`` — one parse instead of one py4j round trip per
+Column node — and runs whole-stage-codegen'd by Tungsten, no Python on
+the hot path. One explode turns the wide verdicts into the long results
+table (file, record id, field_path, valid, details).
 
 Every INI value that reaches the SQL text goes through :func:`_lit`
 (string literals, with ``$`` escaped so the parser's ``${var}``
-substitution never fires) or :func:`_ident` (backtick-quoted field
-names).
+substitution never fires) or :func:`_ident` (backtick-quoted names).
 
 Replicated semantics (reference file:line):
 
-* missing field → "Field missing: <path>"            (validator.py:197-198)
+* missing field → "Field missing: <path>"; a JSON null is missing, as
+  ``None`` is in the reference                       (validator.py:197-198)
 * empty string  → "Field empty" unless AllowEmpty    (validator.py:200-204)
-* enum: case-insensitive membership                  (validator.py:206-207)
+* enum: case-insensitive membership of str(value)    (validator.py:206-207)
 * decimal: Decimal compare against Upper/LowerLimit; the message
   renders %d-truncated values                        (validator.py:208-215)
 * timestamp: parse, then earliest ≤ t ≤ latest+1min  (validator.py:216-229)
@@ -27,7 +30,8 @@ Replicated semantics (reference file:line):
   vs config_2.ini:92)
 * conditional rules: first met non-skip condition wins, skip conditions
   accumulate a sequential-skip set, no met condition → unconditional
-  check                                              (validator.py:96-170)
+  check; existence-style conditions test Python falsiness
+                                                     (validator.py:96-170)
 * scalar EqualsValue (e.g. ``= 6``) short-circuits the whole rule to
   valid (non-Iterable → None, validator.py:99, 129) — replicated via
   Rule.conditions=None + noop detection in parse; here: a rule whose
@@ -40,26 +44,21 @@ Documented deviations (reference bugs not copied, SURVEY §7.5):
 * parse-failure messages omit the Python exception text (engine-neutral).
 * timestamp values in messages are rendered Python-style
   ("YYYY-MM-DD HH:MM:SS[.ffffff]", microseconds omitted when zero).
+* objects and lists render as JSON, not as Python reprs.
 """
 
 from __future__ import annotations
 
 import math
 import re
+from collections import namedtuple
+from dataclasses import replace
 from datetime import datetime, timedelta
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DataType,
-    IntegerType,
-    NumericType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import TimestampType
 
 from ..sources.rules import (
     Rule,
@@ -69,6 +68,8 @@ from ..sources.rules import (
     TYPE_ENUM,
     TYPE_TIMESTAMP,
 )
+
+REC = "rec"
 
 _IDX_RE = re.compile(r"^([^{]*)\{(\d+)\}$")
 
@@ -123,44 +124,156 @@ def _case(branches: list[tuple[str, str]], otherwise: str | None = None) -> str:
     return f"CASE {body}{tail} END"
 
 
-def _str(expr: str) -> str:
-    return f"CAST({expr} AS STRING)"
+# -------------------------------------------------------------- records
 
 
-# ---------------------------------------------------------------- paths
+def with_rec(df: DataFrame) -> DataFrame:
+    """``df`` with its record in the VARIANT column ``rec``: every
+    column folded into one object, each value keeping its type."""
+    if REC in df.columns:
+        return df
+    return df.withColumn(REC, F.expr("to_variant_object(struct(*))"))
 
 
-def schema_type(schema: DataType, path: str) -> DataType | None:
-    """Resolve a dotted path (with optional ``{i}`` indexes) against a
-    schema; None when the path doesn't exist (→ NULL per
-    validator.py:191-193)."""
-    cur = schema
+def _json_path(path: str) -> str:
+    """Dotted rule path → JSON path: ``a.b{0}`` → ``$["a"]["b"][0]``."""
+    out = "$"
     for seg in path.split("."):
         m = _IDX_RE.match(seg)
-        name = m.group(1) if m else seg
-        if not isinstance(cur, StructType) or name not in cur.fieldNames():
-            return None
-        cur = cur[name].dataType
-        if m:
-            if not isinstance(cur, ArrayType):
-                return None
-            cur = cur.elementType
-    return cur
-
-
-def field_sql(schema: DataType, path: str) -> str:
-    """SQL for a dotted path; missing paths become NULL (native Spark
-    semantics already match validator.py:191-193)."""
-    if schema_type(schema, path) is None:
-        return "NULL"
-    out = ""
-    for seg in path.split("."):
-        m = _IDX_RE.match(seg)
-        name = _ident(m.group(1) if m else seg)
-        out = name if not out else f"{out}.{name}"
-        if m:
-            out = f"element_at({out}, {int(m.group(2)) + 1})"
+        out += f'["{m.group(1) if m else seg}"]' + (f"[{m.group(2)}]" if m else "")
     return out
+
+
+def _base(path: str, bases: frozenset[str]) -> tuple[str, str]:
+    # (column, path in it): a list rule's element, or else the record
+    head, _, rest = path.partition(".")
+    return (_ident(head), rest) if head in bases else (REC, path)
+
+
+def _read(path: str, type_: str, bases: frozenset[str] = frozenset()) -> str:
+    # NULL when the path is absent (validator.py:191-193)
+    base, rel = _base(path, bases)
+    return f"try_variant_get({base}, {_lit(_json_path(rel))}, '{type_}')"
+
+
+def _struct_type(tree: dict) -> str:
+    return "struct<" + ", ".join(
+        f"{_ident(k)}: {_struct_type(sub) if sub else 'string'}"
+        for k, sub in tree.items()
+    ) + ">"
+
+
+_Val = namedtuple("_Val", "t v")
+
+
+class _Inline:
+    """Reads a rule path's value where it is tested (the skip flags
+    leave as Columns): ``t`` its text, a string unquoted and anything
+    else as JSON, NULL when missing or a JSON null; ``v`` its VARIANT."""
+
+    bases: frozenset[str] = frozenset()
+
+    def __call__(self, path: str) -> _Val:
+        return _Val(self.text(path), _read(path, "variant", self.bases))
+
+    def text(self, path: str) -> str:
+        return _read(path, "string", self.bases)
+
+    def once(self, expr: str) -> str:
+        return expr
+
+
+class _Fields(_Inline):
+    """Binds what the verdicts test to columns projected under them, so
+    each is computed once per record: ``field.once(expr)`` is such a
+    column. The texts under one column are read by ONE cast of it to a
+    struct of strings, a fraction of the cost of a read per path; a
+    path that indexes a list or holds another read path is read alone.
+    Placing a path needs all of them: see :func:`_bind`."""
+
+    def __init__(self, bases: frozenset[str], paths=()):
+        self.bases = bases
+        self.vals: dict[str, str] = {}
+        self.cols: dict[str, str] = {}  # projected column → its SQL
+        self.refs: dict[str, str] = {}  # path → SQL of its text
+        located = {p: _base(p, bases) for p in paths}
+        trees: dict[str, dict] = {}
+        for path, (base, rel) in located.items():
+            if "{" in rel or any(
+                b == base and q.startswith(rel + ".") for b, q in located.values()
+            ):
+                self.refs[path] = f"`_read{len(self.cols)}`"
+                self.cols[self.refs[path]] = _read(path, "string", bases)
+                continue
+            node = trees.setdefault(base, {})
+            for seg in rel.split("."):
+                node = node.setdefault(seg, {})
+            tree = f"`_tree{list(trees).index(base)}`"
+            self.refs[path] = ".".join([tree, *map(_ident, rel.split("."))])
+        for i, (base, tree) in enumerate(trees.items()):
+            self.cols[f"`_tree{i}`"] = (
+                f"try_variant_get({base}, '$', {_lit(_struct_type(tree))})"
+            )
+
+    def text(self, path: str) -> str:
+        # a first compile only learns the paths
+        return self.refs.setdefault(path, "NULL")
+
+    def once(self, expr: str) -> str:
+        return f"`_vals`.{self.vals.setdefault(expr, f'v{len(self.vals)}')}"
+
+    def project(self, df: DataFrame) -> DataFrame:
+        """``df`` plus the reads, then the values. Each ``selectExpr``
+        argument is a py4j call, so the columns ride along as ``*``."""
+        df = df.selectExpr("*", *(f"{e} AS {n}" for n, e in self.cols.items()))
+        if not self.vals:
+            return df
+        body = ", ".join(f"'{n}', {e}" for e, n in self.vals.items())
+        return df.selectExpr("*", f"named_struct({body}) AS `_vals`")
+
+
+def _bind(compile_, bases: frozenset[str] = frozenset()):
+    # compiled once to learn the paths, then bound to their columns
+    probe = _Fields(bases)
+    compile_(probe)
+    field = _Fields(bases, probe.refs)
+    return field, compile_(field)
+
+
+# ------------------------------------------------------------- values
+
+
+def _decimal(x: _Val) -> str:
+    # TRY_: ANSI mode (Spark 4 default) makes a plain cast THROW; the
+    # reference gives parse failure a verdict (validator.py:214-215)
+    return f"TRY_CAST({x.t} AS {_DEC})"
+
+
+# only a text that starts so can be a boolean's or a number's
+_SCALAR_HEADS = ", ".join(f"'{c}'" for c in "-0123456789tf")
+
+
+def _pystr(x: _Val) -> str:
+    """``str(value)`` of the JSON value, as the reference renders it in
+    comparisons and messages: True/False for booleans, and non-integral
+    numbers through DOUBLE (a VARIANT decimal ``3.0`` prints ``3``)."""
+    s = f"schema_of_variant({x.v})"
+    return _case([
+        (f"({x.t} IS NULL OR left({x.t}, 1) NOT IN ({_SCALAR_HEADS}))", x.t),
+        (f"({s} = 'BOOLEAN')", f"initcap({x.t})"),
+        (f"({s} IN ('DOUBLE', 'FLOAT') OR startswith({s}, 'DECIMAL'))",
+         f"CAST(CAST({x.t} AS DOUBLE) AS STRING)"),
+    ], x.t)
+
+
+def _falsy(x: _Val) -> str:
+    """Python falsiness (validator.py:137): missing/null, '', 0, False,
+    [] and {}; only the string '' prints as ''."""
+    return (
+        f"({x.t} IS NULL OR {x.t} = '' OR (({x.t} IN ('false', '[]', '{{}}') "
+        f"OR TRY_CAST({x.t} AS DOUBLE) = 0) "
+        f"AND schema_of_variant({x.v}) != 'STRING'))"
+    )
 
 
 # ------------------------------------------------------------- helpers
@@ -176,30 +289,20 @@ def _py_ts_str(ts: str) -> str:
     )
 
 
-def _falsy(col: str, dtype: DataType | None) -> str:
-    """Python truthiness test used by _is_condition_met (validator.py:137)."""
-    if dtype is None:
-        return "true"
-    if isinstance(dtype, StringType):
-        return f"({col} IS NULL OR {col} = '')"
-    if isinstance(dtype, NumericType):
-        return f"({col} IS NULL OR {col} = 0)"
-    return f"({col} IS NULL)"
-
-
 # ------------------------------------------------- unconditional check
 
 
-def _type_check_details(rule: Rule, col: str, dtype: DataType) -> str:
-    """Details for the type-specific branch (validator.py:205-243);
-    NULL means valid."""
+def _type_check_details(rule: Rule, x: _Val, field) -> str:
+    """Details for the type-specific branch (validator.py:205-243) of
+    the present, non-empty value ``x``; NULL means valid."""
     if rule.type == TYPE_ENUM and rule.values is not None:
-        lowered = [_lit(v.lower()) for v in rule.values]
-        joined = ", ".join(str(v) for v in rule.values)
+        lowered = [_lit(val.lower()) for val in rule.values]
+        joined = ", ".join(str(val) for val in rule.values)
+        s = field.once(_pystr(x))
         return _case([(
-            f"(NOT {_in(f'lower({_str(col)})', lowered)})",
+            f"(NOT {_in(f'lower({s})', lowered)})",
             "format_string('Value \\'%s\\' not in list of known values: [%s]', "
-            f"{_str(col)}, {_lit(joined)})",
+            f"{s}, {_lit(joined)})",
         )])
     if rule.type == TYPE_DECIMAL:
         if rule.upper_limit is None and rule.lower_limit is None:
@@ -207,13 +310,11 @@ def _type_check_details(rule: Rule, col: str, dtype: DataType) -> str:
             # limit is declared (validator.py:210-215); a limit-less
             # decimal rule passes any present non-empty value
             return "NULL"
-        # try_cast: ANSI mode (Spark 4 default) makes a plain cast THROW
-        # on malformed input; the reference treats parse failure as an
-        # invalid-field verdict (validator.py:214-215)
-        v = f"TRY_CAST({col} AS {_DEC})"
+        d = field.once(_decimal(x))
         branches = [(
-            f"({v} IS NULL)",  # non-null input that won't cast
-            f"format_string('failure to perform decimal validation on %s', {_str(col)})",
+            f"({d} IS NULL)",  # present value that won't cast
+            "format_string('failure to perform decimal validation on %s', "
+            f"{_pystr(x)})",
         )]
         for limit, op, word in (
             (rule.upper_limit, ">", "greater than upper"),
@@ -221,18 +322,19 @@ def _type_check_details(rule: Rule, col: str, dtype: DataType) -> str:
         ):
             if limit is not None:
                 branches.append((
-                    f"({v} {op} CAST({format(limit, 'f')}BD AS {_DEC}))",
+                    f"({d} {op} CAST({format(limit, 'f')}BD AS {_DEC}))",
                     f"format_string('Value \\'%d\\' is {word} limit \\'%d\\'', "
-                    f"CAST({v} AS BIGINT), {int(limit)})",
+                    f"CAST({d} AS BIGINT), {int(limit)})",
                 ))
         return _case(branches)
     if rule.type == TYPE_TIMESTAMP:
-        if isinstance(dtype, TimestampType):
-            t, parse_fail = col, "false"
-        else:
-            t = _parse_ts(col, rule.date_format)
-            parse_fail = f"({t} IS NULL)"
-        branches = [(parse_fail, "'failure to perform timestamp validation'")]
+        # a typed table's TIMESTAMP is taken as is
+        t = field.once(_case(
+            [(f"startswith(schema_of_variant({x.v}), 'TIMESTAMP')",
+              f"variant_get({x.v}, '$', 'timestamp')")],
+            _parse_ts(x.t, rule.date_format),
+        ))
+        branches = [(f"({t} IS NULL)", "'failure to perform timestamp validation'")]
         for limit, op, slack, word in (
             (rule.earliest_time, "<", timedelta(0), "before earliest"),
             # +1 minute slack on the upper bound (validator.py:226)
@@ -310,7 +412,7 @@ def _strptime_to_spark(fmt: str) -> str:
 
 
 def _unconditional_details(
-    rule: Rule, schema: DataType, path_label: str | None = None
+    rule: Rule, field, path_label: str | None = None
 ) -> str:
     """Full _check_unconditional chain (validator.py:196-243); NULL = valid.
 
@@ -318,22 +420,18 @@ def _unconditional_details(
     missing-field message — list rules pass the per-row expanded
     ``a{i}.b`` path the reference's Field carries (validator.py:314,
     197-198)."""
-    col = field_sql(schema, rule.path)
-    dtype = schema_type(schema, rule.path)
-
-    branches = [(
-        f"({col} IS NULL)",
-        "format_string('Field missing: %s', "
-        f"{_lit(rule.path) if path_label is None else path_label})",
-    )]
-    if isinstance(dtype, StringType):
-        branches.append(
-            (f"({col} = '')", "NULL" if rule.allow_empty else "'Field empty'")
-        )
+    x = field(rule.path)
+    branches = [
+        (f"({x.t} IS NULL)",
+         "format_string('Field missing: %s', "
+         f"{_lit(rule.path) if path_label is None else path_label})"),
+        # only the string '' prints as ''
+        (f"({x.t} = '')", "NULL" if rule.allow_empty else "'Field empty'"),
+    ]
 
     if rule.type == TYPE_CHOICE and rule.choices:
         cnt = "(" + " + ".join(
-            f"CAST(({field_sql(schema, f'{rule.path}.{c}')} IS NOT NULL) AS INT)"
+            f"CAST({field(f'{rule.path}.{c}').t} IS NOT NULL AS INT)"
             for c in rule.choices
         ) + ")"
         choice_details = _case([
@@ -341,62 +439,57 @@ def _unconditional_details(
              f"format_string('No choices found in \\'%s\\'', {_lit(rule.path)})"),
             (f"({cnt} > 1)",
              "format_string('Found \\'%s\\' choices in \\'%s\\'', "
-             f"{_str(cnt)}, {_lit(rule.path)})"),
+             f"{cnt}, {_lit(rule.path)})"),
         ])
         return _case(branches, choice_details)
 
-    type_details = _type_check_details(rule, col, dtype) if dtype else "NULL"
-    return _case(branches, type_details)
+    return _case(branches, _type_check_details(rule, x, field))
 
 
 # --------------------------------------------------- conditional check
 
 
-def _condition_met(cond: dict, rule: Rule, schema: DataType) -> str:
+def _condition_met(cond: dict, rule: Rule, field) -> str:
     """ifPart evaluation (validator.py:131-148)."""
     if_part = cond["ifPart"]
-    ref_path = if_part["fieldName"]
-    ref_col = field_sql(schema, ref_path)
-    ref_type = schema_type(schema, ref_path)
+    ref = field(if_part["fieldName"])
     expected = if_part.get("fieldValues")
     if expected is None:
         # existence-style: met iff referenced AND target both falsy
-        target = field_sql(schema, rule.path)
-        target_type = schema_type(schema, rule.path)
-        return f"({_falsy(ref_col, ref_type)} AND {_falsy(target, target_type)})"
-    return _in(_str(ref_col), [_lit(v) for v in expected])
+        return f"({field.once(_falsy(ref))} AND {field.once(_falsy(field(rule.path)))})"
+    return _in(field.once(_pystr(ref)), [_lit(v) for v in expected])
 
 
-def _then_details(then_part: dict | None, rule: Rule, schema: DataType) -> str:
+def _then_details(then_part: dict | None, rule: Rule, field) -> str:
     """thenPart check (validator.py:150-170); NULL = valid."""
     if not then_part:
         return "NULL"
-    col = field_sql(schema, rule.path)
-    branches = [(f"({col} IS NULL)", "'Required Field is missing.'")]
+    x = field(rule.path)
+    s = field.once(_pystr(x))
+    branches = [(f"({x.t} IS NULL)", "'Required Field is missing.'")]
     if "startsWithField" in then_part:
-        sw = field_sql(schema, then_part["startsWithField"])
-        sw_type = schema_type(schema, then_part["startsWithField"])
+        sw = field(then_part["startsWithField"])
+        sw_s = field.once(_pystr(sw))
         branches.append((
-            f"((NOT {_falsy(sw, sw_type)}) AND "
-            f"(NOT startswith({_str(col)}, {_str(sw)})))",
+            f"((NOT {field.once(_falsy(sw))}) AND (NOT startswith({s}, {sw_s})))",
             "format_string('Value of Field (\\'%s\\') does not start with %s', "
-            f"{_str(col)}, {_str(sw)})",
+            f"{s}, {sw_s})",
         ))
     elif "matchAgainst" in then_part and isinstance(then_part["matchAgainst"], list):
         allowed = then_part["matchAgainst"]
-        if allowed and all(isinstance(v, (int, float)) for v in allowed):
+        if allowed and all(isinstance(x, (int, float)) for x in allowed):
             # numeric lists compare numerically (Python 3.0 == 3,
             # validator.py:166)
             member = _in(
-                f"TRY_CAST({col} AS {_DEC})",
-                [f"CAST({_num_lit(v)} AS {_DEC})" for v in allowed],
+                field.once(_decimal(x)),
+                [f"CAST({_num_lit(x)} AS {_DEC})" for x in allowed],
             )
         else:
-            member = _in(_str(col), [_lit(v) for v in allowed])
+            member = _in(s, [_lit(x) for x in allowed])
         branches.append((
             f"(NOT {member})",
             "format_string('Value of Field (\\'%s\\') is not one of the "
-            f"expected values (%s)', {_str(col)}, "
+            f"expected values (%s)', {s}, "
             f"{_lit(repr(then_part['matchAgainst']))})",
         ))
     return _case(branches)
@@ -407,19 +500,19 @@ def _is_skip_condition(cond: dict) -> bool:
     return bool(tp and tp.get("skipSequentialValidation"))
 
 
-def rule_details(
-    rule: Rule, schema: DataType, path_label: str | None = None
-) -> str:
+def rule_details(rule: Rule, field, path_label: str | None = None) -> str:
     """Compile one rule to its details SQL (NULL = valid) — the
-    Spark-native replacement for Field.validate (validator.py:83-94)."""
+    Spark-native replacement for Field.validate (validator.py:83-94).
+    ``field`` maps a rule path to the SQL of its VARIANT value (see
+    :class:`_Fields`)."""
     if rule.noop:
         return "CAST(NULL AS STRING)"
-    uncond = _unconditional_details(rule, schema, path_label)
+    uncond = _unconditional_details(rule, field, path_label)
     if not rule.conditions:
         return uncond
     chain = [
-        (_condition_met(cond, rule, schema),
-         _then_details(cond.get("thenPart"), rule, schema))
+        (_condition_met(cond, rule, field),
+         _then_details(cond.get("thenPart"), rule, field))
         for cond in rule.conditions
         # skip conditions feed the skip flags, not field validation
         if not _is_skip_condition(cond)
@@ -427,7 +520,7 @@ def rule_details(
     return _case(chain, uncond) if chain else uncond
 
 
-def skip_flag_exprs(ruleset: RuleSet, schema: DataType) -> dict[str, Column]:
+def skip_flag_exprs(ruleset: RuleSet) -> dict[str, Column]:
     """Per-record boolean columns: rule path → 'this record meets a
     skipSequentialValidation condition for that path'
     (validator.py:110-112). The sequential operator ORs them per file —
@@ -437,11 +530,12 @@ def skip_flag_exprs(ruleset: RuleSet, schema: DataType) -> dict[str, Column]:
     EXPANDED path (``a{0}.b``) to its skip set, but the sequential
     checker only ever tests the five fixed ``metadata.serialId.*`` /
     timestamp paths against that set (sequential.py:42-56), so a
-    list-rule skip condition can never gate anything."""
+    list-rule skip condition can never gate anything. The flags read
+    ``rec``."""
     out: dict[str, Column] = {}
     for rule in ruleset.rules:
         flags = [
-            _condition_met(c, rule, schema)
+            _condition_met(c, rule, _Inline())
             for c in rule.conditions or ()
             if _is_skip_condition(c)
         ]
@@ -453,14 +547,20 @@ def skip_flag_exprs(ruleset: RuleSet, schema: DataType) -> dict[str, Column]:
 # ------------------------------------------------------------ validate
 
 
-def _long_rows(df: DataFrame, ids: list[str], verdicts: str) -> DataFrame:
-    """(id_cols, field_path, valid, details) from an SQL array of
-    (field_path, details) structs; NULL details = valid."""
-    return df.selectExpr(*ids, f"explode({verdicts}) AS v").selectExpr(
-        *ids,
-        "v.field_path AS field_path",
-        "v.details IS NULL AS valid",
-        "coalesce(v.details, '') AS details",
+def _long_rows(df, ids, verdicts, bases=frozenset()) -> DataFrame:
+    """(id_cols, field_path, valid, details) from the (field_path,
+    details) verdict structs that ``verdicts(field)`` compiles; NULL
+    details = valid."""
+    field, arr = _bind(verdicts, bases)
+    return (
+        field.project(df)
+        .selectExpr(*ids, f"explode(array({', '.join(arr)})) AS v")
+        .selectExpr(
+            *ids,
+            "v.field_path AS field_path",
+            "v.details IS NULL AS valid",
+            "coalesce(v.details, '') AS details",
+        )
     )
 
 
@@ -474,27 +574,28 @@ def validate(
     """Long-format validation results: one row per (record, rule), the
     Spark-native form of RecordValidationResult (result.py:19-32).
 
-    Output: *id_cols, field_path, valid, details ('' when valid).
-    Scale: a single project + explode — no shuffle, no UDF; the explode
-    factor equals the rule count, pruned columns never leave the scan.
+    ``df`` holds the record in ``rec`` or as typed columns (see
+    :func:`with_rec`). Output: *id_cols, field_path, valid, details
+    ('' when valid). Scale: projections + one explode — no shuffle, no
+    UDF; the explode factor equals the rule count.
     Plan build: the scalar rules reach the JVM as one SQL expression.
     """
-    schema = df.schema
+    df = with_rec(df)
     ids = [_ident(c) for c in id_cols]
-    long_results = None
-    if ruleset.rules:
-        verdicts = ", ".join(
-            _verdict(_lit(r.path), rule_details(r, schema)) for r in ruleset.rules
-        )
-        long_results = _long_rows(df, ids, f"array({verdicts})")
-    list_results = _validate_list_rules(df, schema, ruleset, ids)
-    if long_results is None and list_results is None:
+    # a list rule without an exact 'list' segment is an ordinary rule
+    # that the substring classifier mis-binned: it validates at the
+    # literal path, like the reference's no-marker walk
+    rules = ruleset.rules + [
+        r for r in ruleset.list_rules if not _split_list_path(r.path)[0]
+    ]
+    outs = _list_rule_rows(df, ruleset, ids)
+    if rules:
+        outs.insert(0, _long_rows(df, ids, lambda field: [
+            _verdict(_lit(r.path), rule_details(r, field)) for r in rules
+        ]))
+    if not outs:
         raise ValueError("ruleset declares no rules")
-    if list_results is None:
-        return long_results
-    if long_results is None:
-        return list_results
-    return long_results.unionByName(list_results)
+    return reduce(DataFrame.unionByName, outs)
 
 
 def validation_summary(
@@ -507,12 +608,11 @@ def validation_summary(
     num_error_messages) — the explode-based ``validate`` + regroup path
     produces identical numbers at rule-count× the row volume.
     """
-    schema = df.schema
-    inv = " + ".join(
-        f"CAST(({rule_details(r, schema)}) IS NOT NULL AS INT)"
-        for r in ruleset.rules
-    )
-    per_record = df.selectExpr(f"{_ident(file_col)} AS file", f"({inv}) AS inv_cnt")
+    field, details = _bind(lambda f: [rule_details(r, f) for r in ruleset.rules])
+    inv = " + ".join(f"CAST(({d}) IS NOT NULL AS INT)" for d in details)
+    per_record = field.project(
+        with_rec(df).selectExpr(f"{_ident(file_col)} AS file", REC)
+    ).selectExpr("file", f"({inv}) AS inv_cnt")
     return per_record.groupBy("file").agg(
         F.count(F.lit(1)).alias("records"),
         (F.count(F.lit(1)) * len(ruleset.rules)).alias("num_validations"),
@@ -540,136 +640,59 @@ def _split_list_path(path: str) -> tuple[list[str], str]:
     return [".".join(p) for p in parts[:-1]], ".".join(parts[-1])
 
 
-def _expanded_path_fmt(levels: list[str], tail: str, markers: list[str]) -> str:
-    """Render the expanded-path template: levels ["a","b"], tail "c",
-    markers ["%s","0"] → ``a{%s}.b{0}.c``. Empty level paths (directly
-    nested arrays, ``a.list.list.c``) contribute just their marker."""
-    out = [levels[0]]
-    rest = levels[1:] + [tail]
-    for marker, seg in zip(markers, rest):
-        out.append("{" + marker + "}")
-        if seg:
-            out.append("." + seg)
-    return "".join(out)
-
-
-def _validate_list_rules(
-    df: DataFrame, schema: StructType, ruleset: RuleSet, ids: list[str]
-) -> DataFrame | None:
-    """P13: ``a.list.b`` rules expand per actual array element, one
-    posexplode per exact ``list`` segment — the Spark generator form of
-    the reference's recursive expander (validator.py:304-378),
-    supporting arbitrary nesting depth (``a.list.b.list.c`` →
-    ``a{i}.b{j}.c``).
+def _list_rule_rows(
+    df: DataFrame, ruleset: RuleSet, ids: list[str]
+) -> list[DataFrame]:
+    """P13: ``a.list.b`` rules expand per actual list element, one
+    posexplode per exact ``list`` segment, to any depth
+    (``a.list.b.list.c`` → ``a{i}.b{j}.c``, validator.py:304-378).
 
     The expanded element rule carries the FULL config section —
-    conditions included — exactly as the reference's
-    ``Field(path, self.config[path_init], self)`` does
-    (validator.py:316); condition references (ifPart fieldName,
-    startsWithField) resolve from the record ROOT, so all original
-    columns ride through the explodes.
+    conditions included (validator.py:316); condition references
+    resolve from the record ROOT, so ``rec`` rides through the explodes.
 
-    Missing/non-list data yields a "Field missing" verdict per element
-    that DOES exist (real indices for exploded levels, ``{0}`` for the
-    levels absent from the schema; dynamically via posexplode_outer's
-    NULL row when a record's array is NULL) so absence can invalidate —
-    the reference's "add 1 entry to allow invalidation later" branch
-    (validator.py:327-332)."""
+    Each level explodes ``coalesce(list, array(NULL))``: ``[]`` expands
+    to no element, as in the reference; a missing, null or non-list
+    value expands to one NULL element at ``{0}``, so absence can
+    invalidate (validator.py:327-332)."""
     outs = []
     for rule in ruleset.list_rules:
         levels, tail = _split_list_path(rule.path)
-        if not levels:
-            # no exact 'list' segment: an ordinary scalar rule that the
-            # substring classifier mis-binned; validate at the literal
-            # path like the reference's no-marker walk (field_list_temp
-            # ends up with the unexpanded path)
-            verdict = _verdict(_lit(rule.path), rule_details(rule, schema))
-            outs.append(_long_rows(df, ids, f"array({verdict})"))
-            continue
-        if not tail:
-            # list at end of config field: the reference warns and emits
-            # nothing (validator.py:340-342)
-            continue
-        if not levels[0]:
-            # 'list.x' would make the record root an array — not
-            # expressible for struct records; nothing to emit
+        # no 'list' segment: validated with the scalar rules; none after
+        # the last: the reference warns and emits nothing
+        # (validator.py:340-342); 'list.x' would make the record a list
+        if not (levels and tail and levels[0]):
             continue
 
-        # walk the levels, posexploding each array; stop early if the
-        # schema lacks an array at some level (static missing). All
-        # source columns are kept so condition references still resolve;
-        # the exploded schema is tracked here, not fetched from the JVM.
-        cur, cur_schema = df, schema
-        parent: str | None = None
-        pos_cols: list[str] = []
-        static_missing_at: int | None = None
+        cur, parent = df.selectExpr(*ids, REC), REC
         for i, lvl in enumerate(levels):
-            if parent is None:
-                base = lvl
-            else:
-                base = f"{parent}.{lvl}" if lvl else parent
-            arr_type = schema_type(cur_schema, base)
-            if not isinstance(arr_type, ArrayType):
-                static_missing_at = i
-                break
+            arr = (
+                f"try_variant_get({parent}, "
+                f"{_lit(_json_path(lvl) if lvl else '$')}, 'array<variant>')"
+            )
             cur = cur.selectExpr(
                 "*",
-                f"posexplode_outer({field_sql(cur_schema, base)}) "
+                f"posexplode(coalesce({arr}, array(CAST(NULL AS VARIANT)))) "
                 f"AS (`__pos{i}`, `__elem{i}`)",
             )
-            cur_schema = StructType(cur_schema.fields + [
-                StructField(f"__pos{i}", IntegerType()),
-                StructField(f"__elem{i}", arr_type.elementType),
-            ])
-            parent = f"__elem{i}"
-            pos_cols.append(f"__pos{i}")
+            parent = f"`__elem{i}`"
+        pos = [f"`__pos{i}`" for i in range(len(levels))]
+        elem = f"__elem{len(levels) - 1}"
 
-        pos_exprs = [f"CAST(coalesce(`{p}`, 0) AS STRING)" for p in pos_cols]
-
-        if static_missing_at is not None:
-            # schema lacks the array at level i → "Field missing" per
-            # element of the levels that DO exist, with their real
-            # indices; {0} only for the truly absent levels
-            markers = ["%s"] * len(pos_cols) + ["0"] * (
-                len(levels) - len(pos_cols)
-            )
-            fmt = _expanded_path_fmt(levels, tail, markers)
-            path_expr = (
-                f"format_string({_lit(fmt)}, {', '.join(pos_exprs)})"
-                if pos_cols else _lit(fmt)
-            )
-            outs.append(cur.selectExpr(
-                *ids,
-                f"{path_expr} AS field_path",
-                "false AS valid",
-                f"concat('Field missing: ', {path_expr}) AS details",
-            ))
-            continue
-
-        # per-row expanded path: "a{i}.b{j}.c" (validator.py:314)
-        fmt = _expanded_path_fmt(levels, tail, ["%s"] * len(levels))
-        path_expr = f"format_string({_lit(fmt)}, {', '.join(pos_exprs)})"
-        elem_rule = Rule(
-            path=f"{parent}.{tail}",
-            type=rule.type,
-            upper_limit=rule.upper_limit,
-            lower_limit=rule.lower_limit,
-            values=rule.values,
-            choices=rule.choices,
-            # the reference hands the expanded Field the whole config
-            # section, conditions included (validator.py:316)
-            conditions=rule.conditions,
-            earliest_time=rule.earliest_time,
-            latest_time=rule.latest_time,
-            date_format=rule.date_format,
-            allow_empty=rule.allow_empty,
-            noop=rule.noop,
+        # per-row expanded path: "a{i}.b{j}.c" (validator.py:314); an
+        # empty level (``a.list.list.c``) adds just its marker
+        fmt = levels[0] + "".join(
+            "{%s}" + (f".{seg}" if seg else "") for seg in levels[1:] + [tail]
         )
-        details = rule_details(elem_rule, cur_schema, path_label=path_expr)
-        outs.append(_long_rows(cur, ids, f"array({_verdict(path_expr, details)})"))
-    if not outs:
-        return None
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    return res
+        path_expr = f"format_string({_lit(fmt)}, {', '.join(pos)})"
+        # the reference hands the expanded Field the whole config
+        # section, conditions included (validator.py:316)
+        elem_rule = replace(rule, path=f"{elem}.{tail}")
+        outs.append(_long_rows(
+            cur, ids,
+            lambda field, r=elem_rule, p=path_expr: [
+                _verdict(p, rule_details(r, field, path_label=p))
+            ],
+            bases=frozenset({elem}),
+        ))
+    return outs

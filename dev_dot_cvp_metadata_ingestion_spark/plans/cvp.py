@@ -761,12 +761,12 @@ def cv_sequential_checks_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     its whole file. Same W1-W8 plan as cv_sequential_checks; the
     per-record skip flags come from the rule compiler and are OR-ed
     per file inside the one-shuffle window stage."""
-    from ..operators.validation import skip_flag_exprs
+    from ..operators.validation import skip_flag_exprs, with_rec
 
-    d = _events_with_file(spark, sf_dir)
+    d = with_rec(_events_with_file(spark, sf_dir))
     ruleset = parse_rules_ini(GATED_SKIP_INI)
     spec = _events_seq_spec()
-    spec.skip_flags = skip_flag_exprs(ruleset, d.schema)
+    spec.skip_flags = skip_flag_exprs(ruleset)
     return sequential_results(d, spec)
 
 

@@ -1,7 +1,7 @@
 """End-to-end CVP pipeline (SURVEY §3.4) — the batch replacement for
 the reference's per-file Lambda: directory in → four tables out.
 
-    records     = scan (S3-S5) + provenance                    [persisted]
+    records     = scan (S3-S4) + provenance + the VARIANT ``rec`` [persisted]
     validation  = rule validation (one compiled SQL select)    [persisted]
     sequential  = ordering checks over records (per-file windows)
     tallies     = per-file A2 aggregates over validation
@@ -9,6 +9,10 @@ the reference's per-file Lambda: directory in → four tables out.
 
 The metadata documents and CloudWatch counter shapes (A4-A6) come from
 operators/metadata.py over the file listing and these tallies.
+
+Each line is parsed once, into one VARIANT column that the rules and
+the sequential fields read by JSON path: no pass infers a schema, and
+no file can change another file's verdicts.
 
 The input is read and parsed, and the rules evaluated, once: ``records``
 and ``validation`` are persisted (lazily, MEMORY_AND_DISK), so the four
@@ -26,14 +30,11 @@ from dataclasses import dataclass
 from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from ..operators.sequential import SequentialSpec, sequential_results
-from ..operators.validation import skip_flag_exprs, validate
-from ..sources.files import file_lines, file_lines_chunked, infer_record_schema
+from ..operators.validation import REC, skip_flag_exprs, validate
+from ..sources.files import file_lines, file_lines_chunked
 from ..sources.rules import RuleSet
-
-N_SEQ_ID = "metadata.serialId"
 
 
 @dataclass
@@ -56,7 +57,7 @@ def run_cv_pipeline(
     spark: SparkSession,
     input_dir: str,
     ruleset: RuleSet,
-    schema: StructType | None = None,
+    schema=None,  # unused; perfbench/run.py still passes it positionally
     *,
     chunked: bool = False,
 ) -> PipelineResult:
@@ -70,8 +71,8 @@ def run_cv_pipeline(
     SPARK-23207 class), and unique within a file; every aggregate
     over it also groups by ``file_path``.
 
-    ``schema`` is the record schema; when omitted it is inferred with
-    one ``spark.read.json`` pass (:func:`infer_record_schema`).
+    ``rec`` is ``try_parse_json(line)``: a malformed line parses to
+    NULL, so each of its rules reads "Field missing".
 
     ``chunked=True`` reads via :func:`file_lines_chunked`, bounding
     executor memory by the block-split size instead of the largest
@@ -81,8 +82,6 @@ def run_cv_pipeline(
     ``records`` and ``validation`` come back persisted; call
     :meth:`PipelineResult.unpersist` when done with the result.
     """
-    if schema is None:
-        schema = infer_record_schema(spark, input_dir)
     reader = file_lines_chunked if chunked else file_lines
     records = (
         reader(spark, input_dir)
@@ -91,33 +90,38 @@ def run_cv_pipeline(
             "file_size",
             "file_mtime",
             F.col("line_no").alias("record_uid"),
-            F.from_json("line", schema, {"mode": "PERMISSIVE"}).alias("_rec"),
+            F.try_parse_json("line").alias(REC),
         )
-        .select("file_path", "file_size", "file_mtime", "record_uid", "_rec.*")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    schema = records.schema
 
     validation = validate(records, ruleset, ["file_path", "record_uid"]).persist(
         StorageLevel.MEMORY_AND_DISK
     )
 
+    # one cast reads the sequential fields; a JSON null reads as NULL
+    fields = records.selectExpr("*", (
+        f"try_variant_get({REC}, '$.metadata', 'struct<serialId: struct<"
+        "bundleId: bigint, serialNumber: bigint, recordId: bigint, "
+        "bundleSize: bigint>, recordGeneratedAt: string, "
+        "odeReceivedAt: string, logFileName: string>') AS _seq"
+    ))
     ts = lambda c: F.to_timestamp(  # noqa: E731
-        F.regexp_replace(F.col(c), "Z$", "+00:00")
+        F.regexp_replace(F.col(f"_seq.{c}"), "Z$", "+00:00")
     )
     spec = SequentialSpec(
         file=F.col("file_path"),
-        bundle_id=F.col(f"{N_SEQ_ID}.bundleId"),
-        serial_number=F.col(f"{N_SEQ_ID}.serialNumber"),
-        record_id=F.col(f"{N_SEQ_ID}.recordId"),
-        bundle_size=F.col(f"{N_SEQ_ID}.bundleSize"),
-        record_generated_at=ts("metadata.recordGeneratedAt"),
-        ode_received_at=ts("metadata.odeReceivedAt"),
-        has_log_file_name=F.col("metadata.logFileName").isNotNull(),
-        skip_flags=skip_flag_exprs(ruleset, schema),
+        bundle_id=F.col("_seq.serialId.bundleId"),
+        serial_number=F.col("_seq.serialId.serialNumber"),
+        record_id=F.col("_seq.serialId.recordId"),
+        bundle_size=F.col("_seq.serialId.bundleSize"),
+        record_generated_at=ts("recordGeneratedAt"),
+        ode_received_at=ts("odeReceivedAt"),
+        has_log_file_name=F.col("_seq.logFileName").isNotNull(),
+        skip_flags=skip_flag_exprs(ruleset),
     )
     sequential = (
-        sequential_results(records, spec)
+        sequential_results(fields, spec)
         if ruleset.sequential
         else spark.createDataFrame(
             [],

@@ -13,8 +13,10 @@ behavior becomes a column computed from the hidden ``_metadata`` struct:
   streams have no names, cvp_bucket_event_lambda_handler.py:28-30)
 * S4 line scan     → ``spark.read.text`` + blank-line filter
   (cvp…:40-64)
-* S5 NDJSON parse  → ``from_json`` (permissive) over the lines, with
-  the schema from :func:`infer_record_schema`
+* S5 NDJSON parse  → ``try_parse_json`` of each line into one VARIANT
+  column (plans/pipeline.py), as the reference runs ``json.loads`` per
+  record (validator.py:265, 395): no schema scan, and each value keeps
+  its own JSON type
 * S6 positional CSV → explicit schema in RULE ORDER, header skipped
   (validator.py:419-442)
 
@@ -43,14 +45,6 @@ def split_lines(text: Column) -> Column:
     return F.posexplode(
         F.filter(F.split(text, _LINE_SPLIT), lambda x: F.trim(x) != "")
     ).alias("pos", "line")
-
-
-def infer_record_schema(spark: SparkSession, path: str) -> StructType:
-    """S5: the NDJSON record schema of every file under ``path``, from
-    one ``spark.read.json`` pass. Recursive like the line readers:
-    partition inference over Hive-style ``k=v`` directories would
-    otherwise raise CONFLICTING_DIRECTORY_STRUCTURES."""
-    return spark.read.option("recursiveFileLookup", "true").json(path).schema
 
 
 def file_lines(
@@ -284,7 +278,8 @@ def csv_records(
 ) -> DataFrame:
     """S6: positional CSV mapped to field names BY RULE ORDER (the
     header row is skipped, not trusted — validator.py:419-432). All
-    columns string-typed; rule checks cast as the reference does."""
+    columns string-typed; ``validate`` folds them into the VARIANT
+    record and the rule checks cast as the reference does."""
     schema = StructType(
         [StructField(rule.path, StringType(), True) for rule in ruleset.rules]
     )

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from ..operators.validation import validate
+from ..operators.validation import REC, validate
 from ..sources.files import split_lines
 from ..sources.rules import RuleSet
 
@@ -40,7 +40,7 @@ def stream_cv_pipeline(
     spark: SparkSession,
     input_dir: str,
     ruleset: RuleSet,
-    schema: StructType,
+    schema,  # unused; perfbench/stream.py still passes it positionally
     sink: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
     *,
@@ -56,7 +56,8 @@ def stream_cv_pipeline(
     fallback, validator.py:398-400): derived structurally from a
     wholetext read + posexplode, so a replayed micro-batch reproduces
     identical uids (monotonically_increasing_id would not —
-    SPARK-23207 class)."""
+    SPARK-23207 class). Each line parses to the VARIANT ``rec``, so a
+    field that first appears in a later file reads as present there."""
     stream = (
         spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
         .text(input_dir, wholetext=True, recursiveFileLookup=True)
@@ -67,9 +68,8 @@ def stream_cv_pipeline(
         .select(
             "file_path",
             (F.col("pos") + 1).alias("record_uid"),
-            F.from_json("line", schema, {"mode": "PERMISSIVE"}).alias("_rec"),
+            F.try_parse_json("line").alias(REC),
         )
-        .select("file_path", "record_uid", "_rec.*")
     )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:

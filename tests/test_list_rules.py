@@ -274,3 +274,41 @@ def test_static_missing_inner_emits_per_outer_element(spark, tmp_path):
     assert res[(1, "zones{1}.sensors{0}.reading")] == (
         "Field missing: zones{1}.sensors{0}.reading"
     )
+
+
+EDGE_RECORDS = [
+    {"rsus": []},                           # empty list: no element
+    {"rsus": None},                         # JSON null
+    {},                                     # absent
+    {"rsus": 5},                            # a number, not a list
+    {"rsus": "x"},                          # a string, not a list
+    {"rsus": {"rsuTarget": "10.0.0.1"}},    # an object, not a list
+    {"rsus": [None]},                       # a list holding null
+    {"rsus": [{"rsuTarget": "10.0.0.1", "rsuRetries": 1}]},
+]
+
+
+def test_empty_null_missing_and_non_list_values_match_model(spark):
+    """SURVEY P13 (validator.py:304-378): the expander walks the actual
+    elements, so ``[]`` yields no verdict, while a missing, null or
+    non-list value yields one ``{0}`` verdict so that absence can
+    invalidate. Each record is parsed on its own, as the file sources
+    parse each line, so no record's type changes another's.
+
+    The model also carries the reference's fall-through duplicate for
+    an absent or null list (``rsus{0}``, validator.py:322-332), which
+    the engine does not copy; those rows are stated exactly."""
+    df = spark.createDataFrame(
+        [(i, json.dumps(r)) for i, r in enumerate(EDGE_RECORDS, start=1)],
+        "line_no int, line string",
+    ).selectExpr("line_no", "try_parse_json(line) AS rec")
+    rows = validate(df, parse_rules_ini(LIST_CONFIG), ["line_no"]).collect()
+    mine = {(r.line_no, r.field_path): (r.valid, r.details) for r in rows}
+
+    results, _ = validate_records(LIST_CONFIG, EDGE_RECORDS)
+    ref = {(sid, path): (valid, details) for sid, path, valid, details in results}
+
+    assert set(ref) - set(mine) == {(2, "rsus{0}"), (3, "rsus{0}")}
+    assert not set(mine) - set(ref), sorted(set(mine) - set(ref))
+    assert {k: ref[k] for k in mine} == mine
+    assert not any(k[0] == 1 for k in mine)  # [] expands to nothing

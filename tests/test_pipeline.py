@@ -119,6 +119,22 @@ def test_streaming_matches_batch(spark, ndjson_dir, tmp_path):
     assert sorted(collected) == expected
 
 
+def test_plan_build_launches_no_job(spark, ndjson_dir):
+    """Building the pipeline's plan runs nothing: no pass over the
+    input infers a schema before the tables are written."""
+    ruleset = parse_rules_ini(open(CONFIG).read())
+    ruleset.sequential = True
+    sc = spark.sparkContext
+    group = "test_plan_build_launches_no_job"
+    sc.setJobGroup(group, "build the pipeline plan")
+    try:
+        res = run_cv_pipeline(spark, ndjson_dir, ruleset)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    res.unpersist()
+
+
 def _plan_leaves(df) -> list[str]:
     """Leaf operators of the physical plan; a cached frame's leaf is
     InMemoryTableScan, whose own plan is not a child."""

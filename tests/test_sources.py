@@ -46,7 +46,12 @@ def test_gzip_transparent_read(spark, tmp_path):
     try:
         got = {
             (r.file_path.split("/")[-1], r.record_uid, r.a, r.b)
-            for r in result.records.collect()
+            for r in result.records.selectExpr(
+                "file_path",
+                "record_uid",
+                "try_variant_get(rec, '$.a', 'bigint') AS a",
+                "try_variant_get(rec, '$.b', 'string') AS b",
+            ).collect()
         }
     finally:
         result.unpersist()

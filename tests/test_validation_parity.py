@@ -19,6 +19,7 @@ import pytest
 from dev_dot_cvp_metadata_ingestion_spark.operators.validation import (
     skip_flag_exprs,
     validate,
+    with_rec,
 )
 from dev_dot_cvp_metadata_ingestion_spark.sources.rules import (
     fixture_rules_path,
@@ -186,7 +187,8 @@ def engine_results(spark, tmp_path_factory):
     results = validate(df, ruleset, ["line_no"]).collect()
     out = {(r.line_no, r.field_path): (r.valid, r.details) for r in results}
 
-    flags = skip_flag_exprs(ruleset, df.schema)
+    flags = skip_flag_exprs(ruleset)
+    df = with_rec(df)
     if flags:
         row = df.agg(
             *[F_max(c).alias(p) for p, c in flags.items()]
