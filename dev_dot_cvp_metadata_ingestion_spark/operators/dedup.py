@@ -150,6 +150,28 @@ def exact_duplicates(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def minhash_signatures(
+    docs: DataFrame, id_col: str, text_col: str, num_hashes: int = 8, n: int = 3
+) -> DataFrame:
+    """(doc_id, minh_0..minh_{k-1}) — the per-document signature.
+    Base hashes are materialized as a column first so the md5 runs once
+    per shingle, not once per hash function."""
+    hs = docs.select(
+        F.col(id_col).alias("doc_id"),
+        F.transform(shingles(F.col(text_col), n), base_hash).alias("hs"),
+    )
+
+    return hs.select(
+        "doc_id",
+        *[
+            F.array_min(
+                F.transform("hs", _perm(2 * j + 3, 7919 * j + 1))
+            ).alias(f"minh_{j}")
+            for j in range(num_hashes)
+        ],
+    )
+
+
 def _shingle_hashes(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(doc_id, hs): shingle hashes as a real column — as inline
     expressions the md5 would be recomputed once per hash function. The

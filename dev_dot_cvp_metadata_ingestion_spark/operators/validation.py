@@ -71,7 +71,7 @@ from ..sources.rules import (
 
 REC = "rec"
 
-_IDX_RE = re.compile(r"^([^{]*)\{(\d+)\}$")
+_IDX_RE = re.compile(r"^(.*?)(?:\{(\d+)\})?$")
 
 _DEC = "DECIMAL(38,10)"
 
@@ -127,20 +127,42 @@ def _case(branches: list[tuple[str, str]], otherwise: str | None = None) -> str:
 # -------------------------------------------------------------- records
 
 
-def with_rec(df: DataFrame) -> DataFrame:
-    """``df`` with its record in the VARIANT column ``rec``: every
-    column folded into one object, each value keeping its type."""
+def _heads(ruleset: RuleSet) -> set[str]:
+    # the top-level names the rules read: their paths and the fields
+    # their conditions name
+    paths = set()
+    for rule in ruleset.rules + ruleset.list_rules:
+        paths.add(rule.path)
+        for cond in rule.conditions or ():
+            paths.add(cond["ifPart"]["fieldName"])
+            paths.add((cond.get("thenPart") or {}).get("startsWithField", ""))
+    return {p.split(".")[0] for p in paths}
+
+
+def with_rec(df: DataFrame, ruleset: RuleSet) -> DataFrame:
+    """``df`` with its record in the VARIANT column ``rec``: the columns
+    the rules read folded into one object, each value keeping its type.
+    No other column enters it, so the scan can still prune them."""
     if REC in df.columns:
         return df
-    return df.withColumn(REC, F.expr("to_variant_object(struct(*))"))
+    heads = _heads(ruleset)
+    body = ", ".join(f"{_lit(c)}, {_ident(c)}" for c in df.columns if c in heads)
+    return df.withColumn(REC, F.expr(
+        f"to_variant_object(named_struct({body}))" if body else "parse_json('{}')"
+    ))
 
 
 def _json_path(path: str) -> str:
-    """Dotted rule path → JSON path: ``a.b{0}`` → ``$["a"]["b"][0]``."""
+    """Dotted rule path → JSON path: ``a.b{0}`` → ``$["a"]["b"][0]``.
+    Spark's JSON path has no escapes: a key is quoted with the quote
+    character it does not hold."""
     out = "$"
     for seg in path.split("."):
-        m = _IDX_RE.match(seg)
-        out += f'["{m.group(1) if m else seg}"]' + (f"[{m.group(2)}]" if m else "")
+        key, idx = _IDX_RE.match(seg).groups()
+        q = "'" if '"' in key else '"'
+        if q in key:
+            raise ValueError(f"rule path {path!r}: a key holds both quote characters")
+        out += f"[{q}{key}{q}]" + (f"[{idx}]" if idx else "")
     return out
 
 
@@ -156,88 +178,42 @@ def _read(path: str, type_: str, bases: frozenset[str] = frozenset()) -> str:
     return f"try_variant_get({base}, {_lit(_json_path(rel))}, '{type_}')"
 
 
-def _struct_type(tree: dict) -> str:
-    return "struct<" + ", ".join(
-        f"{_ident(k)}: {_struct_type(sub) if sub else 'string'}"
-        for k, sub in tree.items()
-    ) + ">"
-
-
 _Val = namedtuple("_Val", "t v")
 
 
-class _Inline:
-    """Reads a rule path's value where it is tested (the skip flags
-    leave as Columns): ``t`` its text, a string unquoted and anything
-    else as JSON, NULL when missing or a JSON null; ``v`` its VARIANT."""
+class _Fields:
+    """What the verdicts test. ``field(path)`` is the path's value:
+    ``t`` its text (a string unquoted, anything else as JSON, NULL when
+    missing or a JSON null) and ``v`` its VARIANT. Bound, each distinct
+    path's text is read once per record and ``field.once(expr)`` is
+    computed once per record, in projections under the verdicts (see
+    :meth:`project`); unbound (the skip flags, which leave as Columns),
+    both stay where they are tested."""
 
-    bases: frozenset[str] = frozenset()
+    def __init__(self, bases: frozenset[str] = frozenset(), bound: bool = True):
+        self.bases, self.bound = bases, bound
+        self.reads: dict[str, str] = {}  # SQL → field of `_reads`
+        self.vals: dict[str, str] = {}  # SQL → field of `_vals`
 
     def __call__(self, path: str) -> _Val:
-        return _Val(self.text(path), _read(path, "variant", self.bases))
-
-    def text(self, path: str) -> str:
-        return _read(path, "string", self.bases)
-
-    def once(self, expr: str) -> str:
-        return expr
-
-
-class _Fields(_Inline):
-    """Binds what the verdicts test to columns projected under them, so
-    each is computed once per record: ``field.once(expr)`` is such a
-    column. The texts under one column are read by ONE cast of it to a
-    struct of strings, a fraction of the cost of a read per path; a
-    path that indexes a list or holds another read path is read alone.
-    Placing a path needs all of them: see :func:`_bind`."""
-
-    def __init__(self, bases: frozenset[str], paths=()):
-        self.bases = bases
-        self.vals: dict[str, str] = {}
-        self.cols: dict[str, str] = {}  # projected column → its SQL
-        self.refs: dict[str, str] = {}  # path → SQL of its text
-        located = {p: _base(p, bases) for p in paths}
-        trees: dict[str, dict] = {}
-        for path, (base, rel) in located.items():
-            if "{" in rel or any(
-                b == base and q.startswith(rel + ".") for b, q in located.values()
-            ):
-                self.refs[path] = f"`_read{len(self.cols)}`"
-                self.cols[self.refs[path]] = _read(path, "string", bases)
-                continue
-            node = trees.setdefault(base, {})
-            for seg in rel.split("."):
-                node = node.setdefault(seg, {})
-            tree = f"`_tree{list(trees).index(base)}`"
-            self.refs[path] = ".".join([tree, *map(_ident, rel.split("."))])
-        for i, (base, tree) in enumerate(trees.items()):
-            self.cols[f"`_tree{i}`"] = (
-                f"try_variant_get({base}, '$', {_lit(_struct_type(tree))})"
-            )
-
-    def text(self, path: str) -> str:
-        # a first compile only learns the paths
-        return self.refs.setdefault(path, "NULL")
+        t = _read(path, "string", self.bases)
+        if self.bound:
+            t = f"`_reads`.{self.reads.setdefault(t, f'r{len(self.reads)}')}"
+        return _Val(t, _read(path, "variant", self.bases))
 
     def once(self, expr: str) -> str:
+        if not self.bound:
+            return expr
         return f"`_vals`.{self.vals.setdefault(expr, f'v{len(self.vals)}')}"
 
     def project(self, df: DataFrame) -> DataFrame:
-        """``df`` plus the reads, then the values. Each ``selectExpr``
-        argument is a py4j call, so the columns ride along as ``*``."""
-        df = df.selectExpr("*", *(f"{e} AS {n}" for n, e in self.cols.items()))
-        if not self.vals:
-            return df
-        body = ", ".join(f"'{n}', {e}" for e, n in self.vals.items())
-        return df.selectExpr("*", f"named_struct({body}) AS `_vals`")
-
-
-def _bind(compile_, bases: frozenset[str] = frozenset()):
-    # compiled once to learn the paths, then bound to their columns
-    probe = _Fields(bases)
-    compile_(probe)
-    field = _Fields(bases, probe.refs)
-    return field, compile_(field)
+        """``df`` plus the reads, then the values, each as one struct:
+        every ``selectExpr`` argument is a py4j call."""
+        for name, exprs in (("_reads", self.reads), ("_vals", self.vals)):
+            if exprs:
+                body = ", ".join(f"'{n}', {e}" for e, n in exprs.items())
+                df = df.selectExpr("*", f"named_struct({body}) AS `{name}`")
+        return df
 
 
 # ------------------------------------------------------------- values
@@ -535,7 +511,7 @@ def skip_flag_exprs(ruleset: RuleSet) -> dict[str, Column]:
     out: dict[str, Column] = {}
     for rule in ruleset.rules:
         flags = [
-            _condition_met(c, rule, _Inline())
+            _condition_met(c, rule, _Fields(bound=False))
             for c in rule.conditions or ()
             if _is_skip_condition(c)
         ]
@@ -551,7 +527,8 @@ def _long_rows(df, ids, verdicts, bases=frozenset()) -> DataFrame:
     """(id_cols, field_path, valid, details) from the (field_path,
     details) verdict structs that ``verdicts(field)`` compiles; NULL
     details = valid."""
-    field, arr = _bind(verdicts, bases)
+    field = _Fields(bases)
+    arr = verdicts(field)
     return (
         field.project(df)
         .selectExpr(*ids, f"explode(array({', '.join(arr)})) AS v")
@@ -580,7 +557,7 @@ def validate(
     UDF; the explode factor equals the rule count.
     Plan build: the scalar rules reach the JVM as one SQL expression.
     """
-    df = with_rec(df)
+    df = with_rec(df, ruleset)
     ids = [_ident(c) for c in id_cols]
     # a list rule without an exact 'list' segment is an ordinary rule
     # that the substring classifier mis-binned: it validates at the
@@ -608,10 +585,11 @@ def validation_summary(
     num_error_messages) — the explode-based ``validate`` + regroup path
     produces identical numbers at rule-count× the row volume.
     """
-    field, details = _bind(lambda f: [rule_details(r, f) for r in ruleset.rules])
+    field = _Fields()
+    details = [rule_details(r, field) for r in ruleset.rules]
     inv = " + ".join(f"CAST(({d}) IS NOT NULL AS INT)" for d in details)
     per_record = field.project(
-        with_rec(df).selectExpr(f"{_ident(file_col)} AS file", REC)
+        with_rec(df, ruleset).selectExpr(f"{_ident(file_col)} AS file", REC)
     ).selectExpr("file", f"({inv}) AS inv_cnt")
     return per_record.groupBy("file").agg(
         F.count(F.lit(1)).alias("records"),

@@ -763,8 +763,8 @@ def cv_sequential_checks_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     per file inside the one-shuffle window stage."""
     from ..operators.validation import skip_flag_exprs, with_rec
 
-    d = with_rec(_events_with_file(spark, sf_dir))
     ruleset = parse_rules_ini(GATED_SKIP_INI)
+    d = with_rec(_events_with_file(spark, sf_dir), ruleset)
     spec = _events_seq_spec()
     spec.skip_flags = skip_flag_exprs(ruleset)
     return sequential_results(d, spec)

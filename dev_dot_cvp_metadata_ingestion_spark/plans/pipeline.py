@@ -72,7 +72,8 @@ def run_cv_pipeline(
     over it also groups by ``file_path``.
 
     ``rec`` is ``try_parse_json(line)``: a malformed line parses to
-    NULL, so each of its rules reads "Field missing".
+    NULL, so each of its rules reads "Field missing"; a repeated key
+    keeps its last value (``get_spark`` allows duplicate keys).
 
     ``chunked=True`` reads via :func:`file_lines_chunked`, bounding
     executor memory by the block-split size instead of the largest
@@ -99,29 +100,26 @@ def run_cv_pipeline(
         StorageLevel.MEMORY_AND_DISK
     )
 
-    # one cast reads the sequential fields; a JSON null reads as NULL
-    fields = records.selectExpr("*", (
-        f"try_variant_get({REC}, '$.metadata', 'struct<serialId: struct<"
-        "bundleId: bigint, serialNumber: bigint, recordId: bigint, "
-        "bundleSize: bigint>, recordGeneratedAt: string, "
-        "odeReceivedAt: string, logFileName: string>') AS _seq"
-    ))
-    ts = lambda c: F.to_timestamp(  # noqa: E731
-        F.regexp_replace(F.col(f"_seq.{c}"), "Z$", "+00:00")
+    # NULL when absent, a JSON null, or not of the type
+    meta = lambda p, t="bigint": F.expr(  # noqa: E731
+        f"try_variant_get({REC}, '$.metadata.{p}', '{t}')"
+    )
+    ts = lambda p: F.to_timestamp(  # noqa: E731
+        F.regexp_replace(meta(p, "string"), "Z$", "+00:00")
     )
     spec = SequentialSpec(
         file=F.col("file_path"),
-        bundle_id=F.col("_seq.serialId.bundleId"),
-        serial_number=F.col("_seq.serialId.serialNumber"),
-        record_id=F.col("_seq.serialId.recordId"),
-        bundle_size=F.col("_seq.serialId.bundleSize"),
+        bundle_id=meta("serialId.bundleId"),
+        serial_number=meta("serialId.serialNumber"),
+        record_id=meta("serialId.recordId"),
+        bundle_size=meta("serialId.bundleSize"),
         record_generated_at=ts("recordGeneratedAt"),
         ode_received_at=ts("odeReceivedAt"),
-        has_log_file_name=F.col("_seq.logFileName").isNotNull(),
+        has_log_file_name=meta("logFileName", "string").isNotNull(),
         skip_flags=skip_flag_exprs(ruleset),
     )
     sequential = (
-        sequential_results(fields, spec)
+        sequential_results(records, spec)
         if ruleset.sequential
         else spark.createDataFrame(
             [],

@@ -66,6 +66,8 @@ def get_spark(
         # catalog (sources/catalog.py) — exact integer division, no
         # double round-trip
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # a repeated JSON key keeps its last value, as in json.loads
+        .config("spark.sql.variant.allowDuplicateKeys", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", _default_driver_memory())
     )

@@ -2326,6 +2326,12 @@ def compact_pq_layout(spark: SparkSession, path: str) -> None:
     _compact_swap(spark, path, [("codes", codes, None, None, False)])
 
 
+def prune_pq_layout_generations(spark: SparkSession, path: str) -> None:
+    """Reclaim superseded code generations once in-flight readers of
+    the old generation have drained."""
+    prune_index_generations(path, ("codes",))
+
+
 def write_ivf_pq_layout(
     emb: DataFrame,
     path: str,
@@ -2503,6 +2509,12 @@ def compact_ivf_pq_layout(spark: SparkSession, path: str) -> None:
     _compact_swap(
         spark, path, [("codes", codes, ("cell",), "cell", False)]
     )
+
+
+def prune_ivf_pq_layout_generations(spark: SparkSession, path: str) -> None:
+    """Reclaim superseded code generations once in-flight readers of
+    the old generation have drained."""
+    prune_index_generations(path, ("codes",))
 
 
 def write_ivf_pq_residual_layout(

@@ -13,10 +13,8 @@ behavior becomes a column computed from the hidden ``_metadata`` struct:
   streams have no names, cvp_bucket_event_lambda_handler.py:28-30)
 * S4 line scan     → ``spark.read.text`` + blank-line filter
   (cvp…:40-64)
-* S5 NDJSON parse  → ``try_parse_json`` of each line into one VARIANT
-  column (plans/pipeline.py), as the reference runs ``json.loads`` per
-  record (validator.py:265, 395): no schema scan, and each value keeps
-  its own JSON type
+* S5 NDJSON parse  → ``try_parse_json`` per line into one VARIANT column
+  (plans/pipeline.py), the reference's ``json.loads`` (validator.py:265)
 * S6 positional CSV → explicit schema in RULE ORDER, header skipped
   (validator.py:419-442)
 
@@ -278,8 +276,7 @@ def csv_records(
 ) -> DataFrame:
     """S6: positional CSV mapped to field names BY RULE ORDER (the
     header row is skipped, not trusted — validator.py:419-432). All
-    columns string-typed; ``validate`` folds them into the VARIANT
-    record and the rule checks cast as the reference does."""
+    columns string-typed; rule checks cast as the reference does."""
     schema = StructType(
         [StructField(rule.path, StringType(), True) for rule in ruleset.rules]
     )

@@ -188,7 +188,7 @@ def engine_results(spark, tmp_path_factory):
     out = {(r.line_no, r.field_path): (r.valid, r.details) for r in results}
 
     flags = skip_flag_exprs(ruleset)
-    df = with_rec(df)
+    df = with_rec(df, ruleset)
     if flags:
         row = df.agg(
             *[F_max(c).alias(p) for p, c in flags.items()]

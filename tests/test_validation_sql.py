@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from dev_dot_cvp_metadata_ingestion_spark.operators.validation import validate
 from dev_dot_cvp_metadata_ingestion_spark.sources.rules import (
     fixture_rules_path,
@@ -89,6 +91,76 @@ def test_date_format_with_quoted_letters(spark, tmp_path):
                 "limit '2020-01-01 00:00:00+00:00'"),
         (False, "failure to perform timestamp validation"),
     ]
+
+
+# rule paths are JSON paths over the record: these keys need quoting
+QUOTED_INI = r"""
+[_settings]
+DataType = json
+Sequential = False
+
+[a.say"hi]
+Type = string
+
+[a.x]y]
+Type = string
+
+[a.back\slash.it's]
+Type = decimal
+UpperLimit = 10
+"""
+
+
+def test_field_names_with_quotes_brackets_and_backslash(spark, tmp_path):
+    got = _verdicts(spark, tmp_path, QUOTED_INI, [
+        {'say"hi': "x", "x]y": "", "back\\slash": {"it's": 11}},
+        {"back\\slash": {"it's": 3}},
+    ])
+    assert got[(0, 'a.say"hi')] == (True, "")
+    assert got[(0, "a.x]y")] == (False, "Field empty")
+    assert got[(0, "a.back\\slash.it's")] == (
+        False, "Value '11' is greater than upper limit '10'"
+    )
+    assert got[(1, 'a.say"hi')] == (False, 'Field missing: a.say"hi')
+    assert got[(1, "a.x]y")] == (False, "Field missing: a.x]y")
+    assert got[(1, "a.back\\slash.it's")] == (True, "")
+
+
+def test_field_name_with_both_quotes_is_refused(spark, tmp_path):
+    ini = QUOTED_INI + "\n[a.both\"'q]\nType = string\n"
+    with pytest.raises(ValueError, match="both quote characters"):
+        _verdicts(spark, tmp_path, ini, [{}])
+
+
+def test_repeated_key_keeps_its_last_value(spark):
+    """A line that repeats a key reads as ``json.loads`` reads it: the
+    last value wins (a NULL parse would read "Field missing")."""
+    lines = [
+        '{"a": {"kind": "nope", "kind": "it\'s"}}',
+        '{"a": {"kind": "it\'s", "kind": "nope"}}',
+    ]
+    assert [json.loads(x)["a"]["kind"] for x in lines] == ["it's", "nope"]
+    df = spark.createDataFrame(list(enumerate(lines)), "n int, line string")
+    rows = validate(
+        df.selectExpr("n", "try_parse_json(line) AS rec"),
+        parse_rules_ini(ESCAPE_INI), ["n"],
+    ).collect()
+    got = {(r.n, r.field_path): (r.valid, r.details) for r in rows}
+    assert got[(0, "a.kind")] == (True, "")
+    assert got[(1, "a.kind")] == (
+        False, f"Value 'nope' not in list of known values: {KNOWN}"
+    )
+
+
+def test_scan_reads_only_the_columns_rules_read(spark, tmp_path):
+    """A typed frame's columns that no rule names stay out of ``rec``,
+    so the scan prunes them."""
+    path = tmp_path / "records.json"
+    path.write_text(json.dumps({"a": {"kind": "x"}, "n": 0, "unread_col": "y"}) + "\n")
+    out = validate(spark.read.json(str(path)), parse_rules_ini(ESCAPE_INI), ["n"])
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ReadSchema" in plan and "unread_col" not in plan
+    assert out.count() == 4
 
 
 def test_plan_build_is_a_handful_of_jvm_calls(spark, tmp_path, monkeypatch):
