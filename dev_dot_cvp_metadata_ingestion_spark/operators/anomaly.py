@@ -1,8 +1,6 @@
-"""Windowed count-anomaly detection over event streams — shared by the
-batch ``events_window_anomaly`` query and the streaming anomaly monitor
-(streaming/stream.py:anomaly_monitor_sink), so the streaming report is
-pinned row-for-row to the batch semantics by construction (the same
-batch/stream-sharing doctrine as operators/drift.py).
+"""Windowed count-anomaly detection over event counts — shared by the
+``events_window_anomaly`` query and the persisted window-count
+layout's probes.
 
 The detector is the classic three-sigma rule on per-window event
 counts, computed WITHOUT any floating point: for an event type with

@@ -1,7 +1,6 @@
 """Distribution-drift computation over word-count relations — shared
-by the batch ``corpus_source_drift`` query and the streaming drift
-monitor (streaming/stream.py:drift_monitor_sink), so the streaming
-report is pinned row-for-row to the batch semantics by construction.
+by the ``corpus_source_drift`` query and the persisted word-count
+layout's probes.
 """
 
 from __future__ import annotations

@@ -6541,10 +6541,7 @@ def events_window_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one window-count aggregate over the raw events (the
     only corpus-sized pass, map-side combined), then a per-type moment
     relation of |event_types| rows broadcast back onto the counts — no
-    window function, no second shuffle of the count relation. The
-    streaming twin (``anomaly_monitor_sink``) shares
-    ``window_anomalies_from_counts`` verbatim, so continuous
-    monitoring is pinned to this query by construction."""
+    window function, no second shuffle of the count relation."""
     ev = load_table(spark, sf_dir, "events")
     return window_anomalies_from_counts(window_counts(ev)).orderBy(
         "event_type", "window_start"

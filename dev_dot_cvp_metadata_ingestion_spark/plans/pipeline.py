@@ -53,6 +53,42 @@ class PipelineResult:
             df.unpersist()
 
 
+def require_json(ruleset: RuleSet) -> None:
+    """Refuse a rule file whose lines are not NDJSON records: parsing a
+    CSV line as JSON would read every field as missing."""
+    if ruleset.data_type != "json":
+        raise ValueError(
+            f"DataType = {ruleset.data_type} is not supported by the CVP "
+            "pipeline; only DataType = json rule files can run"
+        )
+
+
+def cv_records(lines: DataFrame) -> DataFrame:
+    """Lines (batch or streaming) to records: provenance, ``record_uid``
+    and the VARIANT ``rec``.
+
+    ``record_uid`` is the file's 1-based non-blank line number — the
+    reference's own serial fallback (validator.py:398-400). It is
+    DETERMINISTIC under stage retry and micro-batch replay (derived
+    structurally from the line position, never from
+    monotonically_increasing_id, whose values change when a
+    shuffle-map stage is recomputed — SPARK-23207 class), and unique
+    within a file; every aggregate over it also groups by
+    ``file_path``.
+
+    ``rec`` is ``try_parse_json(line)``: a malformed line parses to
+    NULL, so each of its rules reads "Field missing"; a repeated key
+    keeps its last value (``get_spark`` allows duplicate keys).
+    """
+    return lines.select(
+        "file_path",
+        "file_size",
+        "file_mtime",
+        F.col("line_no").alias("record_uid"),
+        F.try_parse_json("line").alias(REC),
+    )
+
+
 def run_cv_pipeline(
     spark: SparkSession,
     input_dir: str,
@@ -61,19 +97,8 @@ def run_cv_pipeline(
     *,
     chunked: bool = False,
 ) -> PipelineResult:
-    """Batch pipeline over a directory of NDJSON CV files.
-
-    ``record_uid`` is the file's 1-based non-blank line number — the
-    reference's own serial fallback (validator.py:398-400). It is
-    DETERMINISTIC under stage retry (derived structurally from the
-    line position, never from monotonically_increasing_id, whose
-    values change when a shuffle-map stage is recomputed —
-    SPARK-23207 class), and unique within a file; every aggregate
-    over it also groups by ``file_path``.
-
-    ``rec`` is ``try_parse_json(line)``: a malformed line parses to
-    NULL, so each of its rules reads "Field missing"; a repeated key
-    keeps its last value (``get_spark`` allows duplicate keys).
+    """Batch pipeline over a directory of NDJSON CV files; records are
+    built by :func:`cv_records`, as the stream builds them.
 
     ``chunked=True`` reads via :func:`file_lines_chunked`, bounding
     executor memory by the block-split size instead of the largest
@@ -83,17 +108,10 @@ def run_cv_pipeline(
     ``records`` and ``validation`` come back persisted; call
     :meth:`PipelineResult.unpersist` when done with the result.
     """
+    require_json(ruleset)
     reader = file_lines_chunked if chunked else file_lines
-    records = (
-        reader(spark, input_dir)
-        .select(
-            "file_path",
-            "file_size",
-            "file_mtime",
-            F.col("line_no").alias("record_uid"),
-            F.try_parse_json("line").alias(REC),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    records = cv_records(reader(spark, input_dir)).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
 
     validation = validate(records, ruleset, ["file_path", "record_uid"]).persist(

@@ -1949,10 +1949,8 @@ def write_window_counts(
     orders of magnitude below the events table, so running ALL
     detectors costs one corpus pass total.
 
-    On-disk format = the delta-state format the streaming count
-    monitors (streaming/stream.py:_count_monitor_sink) already
-    maintain: batch_id-partitioned additive count deltas, re-aggregated
-    at read. A batch bootstrap writes the whole history as batch_id=0;
+    On-disk format: batch_id-partitioned additive count deltas,
+    re-aggregated at read. A batch bootstrap writes the whole history as batch_id=0;
     ``append_window_counts`` adds a shard as the next batch_id
     partition (idempotent per batch_id — dynamic partition overwrite,
     the streaming sinks' exactly-once device); a path GROWN BY a
@@ -2067,12 +2065,9 @@ def write_word_counts(
     raw tokens (the drift / heavy-hitters convention). The flag rides
     the ``meta`` sidecar so probes can't silently mix conventions.
 
-    On-disk format = the delta state the streaming drift monitor
-    (streaming/stream.py:drift_monitor_sink) already maintains:
-    batch_id-partitioned additive deltas re-aggregated at read, so a
-    sink-maintained path reads back with no conversion (pinned in
-    tests/test_word_counts_layout.py, with probe ≡ in-query pins for
-    drift, heavy hitters, vocab, and overlap)."""
+    On-disk format: batch_id-partitioned additive deltas re-aggregated
+    at read (probe ≡ in-query pins for drift, heavy hitters, vocab, and
+    overlap in tests/test_word_counts_layout.py)."""
     from pyspark.sql import functions as F
 
     from ..functions.text import ascii_lower, tokens
@@ -2103,9 +2098,8 @@ def _word_count_delta(
 ) -> DataFrame:
     """A document shard's (source, word, c_sw) delta, tokenized with
     the LAYOUT's recorded fold (meta sidecar) — convention drift
-    between build and append/delete is impossible. Bare sink dirs have
-    no sidecar and are always raw-token (``drift_monitor_sink``'s
-    convention)."""
+    between build and append/delete is impossible. Bare delta dirs have
+    no sidecar and are always raw-token."""
     import os
 
     from pyspark.sql import functions as F
@@ -2172,9 +2166,7 @@ def read_word_counts(spark: SparkSession, path: str) -> DataFrame:
     would produce. Every consumer in operators/drift.py (and the
     heavy-hitter / vocab / overlap probes) takes exactly this
     relation. Accepts either a full layout root (``counts/`` +
-    ``meta/``) or a BARE delta dir — the form ``drift_monitor_sink``
-    maintains at its counts_path — so streaming state reads back with
-    no conversion."""
+    ``meta/``) or a BARE delta dir."""
     from pyspark.sql import functions as F
 
     return (
@@ -2324,12 +2316,6 @@ def compact_pq_layout(spark: SparkSession, path: str) -> None:
         return
     codes, _cbs, _meta = read_pq_layout(spark, path)  # tombstones applied
     _compact_swap(spark, path, [("codes", codes, None, None, False)])
-
-
-def prune_pq_layout_generations(spark: SparkSession, path: str) -> None:
-    """Reclaim superseded code generations once in-flight readers of
-    the old generation have drained."""
-    prune_index_generations(path, ("codes",))
 
 
 def write_ivf_pq_layout(
@@ -2509,12 +2495,6 @@ def compact_ivf_pq_layout(spark: SparkSession, path: str) -> None:
     _compact_swap(
         spark, path, [("codes", codes, ("cell",), "cell", False)]
     )
-
-
-def prune_ivf_pq_layout_generations(spark: SparkSession, path: str) -> None:
-    """Reclaim superseded code generations once in-flight readers of
-    the old generation have drained."""
-    prune_index_generations(path, ("codes",))
 
 
 def write_ivf_pq_residual_layout(

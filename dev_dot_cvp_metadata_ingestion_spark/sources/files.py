@@ -26,7 +26,7 @@ skip directories before any read.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -36,46 +36,31 @@ from .rules import RuleSet
 _LINE_SPLIT = r"\r\n|\r|\n"
 
 
-def split_lines(text: Column) -> Column:
-    """posexplode of a wholetext ``value`` into its non-blank lines, as
-    (pos, line) with a 0-based ``pos``: the line split shared by the
-    batch (:func:`file_lines`) and streaming wholetext reads."""
-    return F.posexplode(
-        F.filter(F.split(text, _LINE_SPLIT), lambda x: F.trim(x) != "")
-    ).alias("pos", "line")
-
-
-def file_lines(
-    spark: SparkSession,
-    path: str,
-    *,
-    recursive: bool = True,
-) -> DataFrame:
-    """S3+S4: one row per non-blank line of every file under ``path``
-    (gz transparently decompressed), with file provenance columns:
+def wholetext_lines(text: DataFrame) -> DataFrame:
+    """S3+S4 over a ``wholetext`` read, batch or streaming: one row per
+    non-blank line of every file, with file provenance columns:
     (file_path, file_size, file_mtime, line_no, line).
 
     line_no is the 1-based position among the file's non-blank lines —
-    the reference's serial_id fallback (validator.py:398-400). Read with
-    ``wholetext`` (one row per file) + posexplode of the split lines:
-    within-file order is then structurally guaranteed, unlike numbering
-    split-file partitions with monotonically_increasing_id, where
-    bin-packing can reorder a large file's splits. No shuffle at all;
-    the memory bound is the largest single file — the same bound the
-    reference's per-object Lambda model assumes. For unbounded object
-    sizes use :func:`file_lines_chunked`, which reads split blocks in
-    parallel and bounds memory by the block size instead.
+    the reference's serial_id fallback (validator.py:398-400). Each file
+    is one row; posexplode of its split lines makes within-file order
+    structurally guaranteed, unlike numbering split-file partitions with
+    monotonically_increasing_id, where bin-packing can reorder a large
+    file's splits. No shuffle at all; the memory bound is the largest
+    single file — the same bound the reference's per-object Lambda
+    model assumes. A replayed micro-batch reproduces the same numbers.
     """
-    # NOTE: wholetext must be passed as the .text() kwarg — in pyspark 4
-    # a prior .option("wholetext", ...) is not picked up by .text()
     return (
-        spark.read.option("recursiveFileLookup", str(recursive).lower())
-        .text(path, wholetext=True)
-        .select(
+        text.select(
             F.col("_metadata.file_path").alias("file_path"),
             F.col("_metadata.file_size").alias("file_size"),
             F.col("_metadata.file_modification_time").alias("file_mtime"),
-            split_lines(F.col("value")),
+            F.posexplode(
+                F.filter(
+                    F.split(F.col("value"), _LINE_SPLIT),
+                    lambda x: F.trim(x) != "",
+                )
+            ).alias("pos", "line"),
         )
         .select(
             "file_path",
@@ -87,12 +72,22 @@ def file_lines(
     )
 
 
-def file_lines_chunked(
-    spark: SparkSession,
-    path: str,
-    *,
-    recursive: bool = True,
-) -> DataFrame:
+def file_lines(spark: SparkSession, path: str) -> DataFrame:
+    """:func:`wholetext_lines` of every file under ``path`` (gz
+    transparently decompressed). For unbounded object sizes use
+    :func:`file_lines_chunked`, which reads split blocks in parallel
+    and bounds memory by the block size instead.
+    """
+    # NOTE: wholetext must be passed as the .text() kwarg — in pyspark 4
+    # a prior .option("wholetext", ...) is not picked up by .text()
+    return wholetext_lines(
+        spark.read.option("recursiveFileLookup", "true").text(
+            path, wholetext=True
+        )
+    )
+
+
+def file_lines_chunked(spark: SparkSession, path: str) -> DataFrame:
     """Chunk-safe S3+S4: same output as :func:`file_lines` — one row
     per non-blank line with 1-based per-file ``line_no`` — WITHOUT
     ``wholetext``. Files larger than ``spark.sql.files.
@@ -127,7 +122,7 @@ def file_lines_chunked(
     from pyspark.sql.functions import broadcast
 
     raw = (
-        spark.read.option("recursiveFileLookup", str(recursive).lower())
+        spark.read.option("recursiveFileLookup", "true")
         .text(path)
         .select(
             F.col("_metadata.file_path").alias("file_path"),
@@ -194,7 +189,6 @@ def file_lines_sniffed(
     spark: SparkSession,
     path: str,
     *,
-    recursive: bool = True,
     max_object_bytes: int | None = 1 << 31,
 ) -> DataFrame:
     """S3 magic-byte fallback (cvp_bucket_event_lambda_handler.py:28-30):
@@ -216,7 +210,7 @@ def file_lines_sniffed(
     """
     bin_df = (
         spark.read.format("binaryFile")
-        .option("recursiveFileLookup", str(recursive).lower())
+        .option("recursiveFileLookup", "true")
         .load(path)
         .select("path", "length", "modificationTime", "content")
     )

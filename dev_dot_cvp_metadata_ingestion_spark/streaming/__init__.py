@@ -1,1 +1,1 @@
-from .stream import stream_cv_pipeline, stream_file_metadata  # noqa: F401
+from .stream import stream_cv_pipeline  # noqa: F401

@@ -3,23 +3,22 @@
 The reference is event-driven: one S3 ObjectCreated → one Lambda run.
 Here the file-source stream replaces SNS discovery:
 
-* ``readStream`` on a directory finds new files; ``maxFilesPerTrigger=1``
+* ``readStream`` on a directory finds new files; one file per trigger
   reproduces the per-file batch granularity, ``Trigger.AvailableNow``
   drains a backlog then stops (used for tests / catch-up runs).
 * All grouping in the reference is WITHIN one file, so ``foreachBatch``
   running the batch operators per micro-batch is exactly
   semantics-preserving (no watermark needed for parity; every batch
-  holds whole files).
+  holds whole files). The records are built by the batch path's own
+  functions (``wholetext_lines``, ``cv_records``).
 * Checkpointing gives at-least-once with an idempotent sink —
   equivalent to the reference's retry-and-reindex behavior
-  (bucket_event_lambda_handler.py:99), with ``dropDuplicates`` on
-  (file_path, etag) available as the documented improvement.
+  (bucket_event_lambda_handler.py:99); :func:`dedup_stream` drops a
+  second delivery of the same object.
 
 Scale: each micro-batch is an independent batch plan over a bounded
 file set; state never accumulates across files, so the stream runs
-indefinitely with O(1) state. A future stateful extension (per-bundle
-session windows with ``applyInPandasWithState``) would only be needed
-if bundles crossed file boundaries — they don't (SURVEY §2.9).
+indefinitely with O(1) state.
 """
 
 from __future__ import annotations
@@ -29,10 +28,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructType
 
-from ..operators.validation import REC, validate
-from ..sources.files import split_lines
+from ..operators.validation import validate
+from ..plans.pipeline import cv_records, require_json
+from ..sources.files import wholetext_lines
 from ..sources.rules import RuleSet
 
 
@@ -44,31 +43,22 @@ def stream_cv_pipeline(
     sink: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
     *,
-    max_files_per_trigger: int = 1,
     available_now: bool = True,
 ) -> StreamingQuery:
-    """Stream NDJSON CV files through the validation pipeline;
-    ``sink(batch_results_df, batch_id)`` receives the long-format
-    validation results of each micro-batch.
+    """Stream NDJSON CV files through the validation pipeline, one file
+    per micro-batch; ``sink(batch_results_df, batch_id)`` receives the
+    long-format validation results of each micro-batch.
 
-    ``record_uid`` is the 1-based non-blank line number within the
-    file — same as the batch pipeline (and the reference's serial
-    fallback, validator.py:398-400): derived structurally from a
-    wholetext read + posexplode, so a replayed micro-batch reproduces
-    identical uids (monotonically_increasing_id would not —
-    SPARK-23207 class). Each line parses to the VARIANT ``rec``, so a
-    field that first appears in a later file reads as present there."""
-    stream = (
-        spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
-        .text(input_dir, wholetext=True, recursiveFileLookup=True)
-        .select(
-            F.col("_metadata.file_path").alias("file_path"),
-            split_lines(F.col("value")),
-        )
-        .select(
-            "file_path",
-            (F.col("pos") + 1).alias("record_uid"),
-            F.try_parse_json("line").alias(REC),
+    Records are the batch pipeline's (:func:`cv_records` over
+    :func:`wholetext_lines`), so a replayed micro-batch reproduces
+    identical ``record_uid`` values, and a field that first appears in
+    a later file reads as present there."""
+    require_json(ruleset)
+    records = cv_records(
+        wholetext_lines(
+            spark.readStream.option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .text(input_dir, wholetext=True)
         )
     )
 
@@ -77,7 +67,7 @@ def stream_cv_pipeline(
         sink(results, batch_id)
 
     writer = (
-        stream.writeStream.foreachBatch(process)
+        records.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
     )
     if available_now:
@@ -121,801 +111,5 @@ def idempotent_parquet_sink(out_dir: str):
             .partitionBy("batch_id")
             .parquet(out_dir)
         )
-
-    return sink
-
-
-def stream_file_metadata(
-    spark: SparkSession,
-    input_dir: str,
-    schema: StructType,
-    sink_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Generic path §3.2 as a stream: per-file metadata rows appended to
-    a parquet table keyed by (file_path) — the ES-index replacement."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .json(input_dir)
-        .select(
-            F.col("_metadata.file_path").alias("file_path"),
-            F.col("_metadata.file_size").alias("ContentLength"),
-            (F.col("_metadata.file_size") / F.lit(1024**2)).alias("SizeMiB"),
-            F.date_format(
-                F.col("_metadata.file_modification_time"), "yyyy-MM-dd'T'HH:mm:ss"
-            ).alias("LastModified"),
-        )
-        .dropDuplicates(["file_path"])
-    )
-    return (
-        stream.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def merge_upsert_sink(
-    path: str,
-    *,
-    key_cols: list[str],
-    order_cols: list[str],
-    partition_col: str,
-):
-    """foreachBatch sink that folds each micro-batch into a partitioned
-    parquet table via ``merge_latest_partitioned`` — streaming CDC-style
-    upsert: the table always holds the LATEST version of every key,
-    and each batch's merge cost scales with that batch's partition
-    footprint, not the table (static partition filter on read, dynamic
-    partition overwrite on write).
-
-    Replay-safe by construction: the merge is last-writer-wins on
-    ``order_cols``, so a re-delivered batch (failure between sink and
-    checkpoint commit — Spark's at-least-once foreachBatch contract)
-    re-merges to the identical table state. No batch_id bookkeeping
-    needed, unlike ``idempotent_parquet_sink``'s append-shaped
-    variant; the trade is that ``order_cols`` must totally order the
-    versions of a key across the whole stream.
-
-    The first batch bootstraps the table with a plain partitioned
-    write (there is nothing to merge into yet). Existence is detected
-    through the Hadoop FileSystem API resolved from the session's
-    hadoopConfiguration — NOT ``os.path`` — so the sink behaves
-    identically for local, s3a:// and hdfs:// table paths (ADVICE r7:
-    an os.path check is false forever on object stores, which would
-    silently turn every micro-batch into a truncating overwrite). A
-    directory with no committed parquet data file (a partially-written
-    bootstrap) also counts as absent."""
-    from ..sources.catalog import merge_latest_partitioned, table_exists
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        if not table_exists(spark, path):
-            # bootstrap still needs the WITHIN-batch argmax — the first
-            # batch may already carry several versions of a key
-            latest = (
-                df.groupBy(*key_cols)
-                .agg(
-                    F.max_by(
-                        F.struct(*df.columns), F.struct(*order_cols)
-                    ).alias("_row")
-                )
-                .select("_row.*")
-            )
-            (
-                latest.write.mode("overwrite")
-                .partitionBy(partition_col)
-                .parquet(path)
-            )
-            return
-        merge_latest_partitioned(
-            spark,
-            path,
-            df,
-            key_cols=key_cols,
-            order_cols=order_cols,
-            partition_col=partition_col,
-        )
-
-    return sink
-
-
-def stream_corpus_ingest(
-    docs: DataFrame,
-    quality_threshold: float = 0.2,
-    lateness: str = "1 hour",
-) -> DataFrame:
-    """Incremental training-corpus ingestion: the streaming front half
-    of the batch curation pipeline, built entirely from bounded-state
-    built-ins. Per-document hygiene (PII scrub, quality/language
-    scoring) is map-side; a fixed quality gate drops junk (the batch
-    pipeline's per-language QUARTILE gate needs corpus-wide statistics
-    and stays batch — the documented divergence, exactly the
-    stream-vs-batch split a production ingest runs); exact dedup keeps
-    each content fingerprint's FIRST arrival via
-    ``dropDuplicatesWithinWatermark``, whose state is bounded by the
-    watermark horizon, not stream history.
-
-    ``docs`` must be a STREAMING frame with (doc_id long, text string,
-    lang string, source string, ingest_ts timestamp). Returns the
-    curated append stream; sink it with ``merge_upsert_sink`` (keyed
-    on fingerprint) for a continuously-current corpus table or
-    ``idempotent_parquet_sink`` for an append log. At 100 TB/day the
-    plan is one watermarked dedup shuffle on the 16-byte fingerprint;
-    everything else rides the scan."""
-    from ..functions.text import (
-        content_fingerprint,
-        lang_id,
-        pii_scrub,
-        quality_score,
-    )
-
-    scrubbed = pii_scrub(F.col("text"))
-    scored = docs.select(
-        "doc_id",
-        scrubbed.alias("text"),
-        "source",
-        "ingest_ts",
-        content_fingerprint(scrubbed).alias("fingerprint"),
-        quality_score(scrubbed).alias("quality"),
-        lang_id(scrubbed).alias("lang_detected"),
-    )
-    gated = scored.filter(F.col("quality") >= quality_threshold)
-    return gated.withWatermark(
-        "ingest_ts", lateness
-    ).dropDuplicatesWithinWatermark(["fingerprint"])
-
-
-def lsh_dedup_ingest_sink(
-    index_path: str,
-    corpus_path: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    n: int = 3,
-    threshold: float = 0.3,
-):
-    """foreachBatch sink for continuous NEAR-dup-gated corpus
-    ingestion over a persisted LSH index: each micro-batch is (1)
-    self-deduplicated — any doc with a near-dup of smaller id in the
-    batch is dropped (the deterministic min-id-neighbor rule, NOT a
-    connected-components representative: a batch is small enough that
-    the simpler rule's extra drops on chains are acceptable and
-    replay-stable); (2) probed against the index with
-    ``lsh_probe_index`` and dropped if it near-matches ANYTHING
-    previously admitted; (3) survivors are appended to the corpus
-    (per-``batch_id`` dynamic-partition overwrite) and to the index
-    (``append_lsh_index``). The streaming complement of
-    ``stream_corpus_ingest``'s exact-fingerprint dedup: state is the
-    INDEX TABLE, not stream state, so it is unbounded-horizon (no
-    watermark cutoff) yet costs no executor memory.
-
-    Replay-safe without batch bookkeeping: every step is a
-    deterministic function of (batch, index-before-this-batch), and a
-    re-delivered batch whose index append already committed sees its
-    OWN rows in the index only as self-pairs, which the gate excludes
-    (``doc_id_index != doc_id_probe`` — ids must be globally unique
-    across shards, the standing append contract), so it recomputes the
-    identical survivor set and overwrites its corpus partition with
-    identical content. The one replay artifact is a duplicated index
-    append for that batch — harmless to correctness (the probe's
-    candidate set is distinct and the gate is an anti-join) and
-    bounded at one batch per failure; compact by rebuilding with
-    ``write_lsh_index`` if it ever matters.
-
-    At 100 TB the per-batch cost is: minhash the BATCH (not the
-    corpus), one broadcast-probe over the index's fixed-width rows,
-    and appends sized by the batch — the corpus is never re-read."""
-    from ..operators.dedup import lsh_near_duplicates, lsh_probe_index
-    from ..sources.catalog import (
-        append_lsh_index,
-        read_lsh_index,
-        table_exists,
-        write_lsh_index,
-    )
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        batch = df.persist()
-        try:
-            pairs = lsh_near_duplicates(
-                batch, id_col, text_col, num_hashes, n, threshold
-            )
-            losers = pairs.select(
-                F.col("doc_id_b").alias(id_col)
-            ).distinct()
-            survivors = batch.join(losers, [id_col], "left_anti")
-            bootstrap = not table_exists(spark, f"{index_path}/meta")
-            if bootstrap:
-                novel = survivors.persist()
-            else:
-                bands, shingles, params = read_lsh_index(spark, index_path)
-                hits = (
-                    lsh_probe_index(
-                        bands,
-                        shingles,
-                        survivors,
-                        id_col,
-                        text_col,
-                        threshold=threshold,
-                        **params,
-                    )
-                    .filter(F.col("doc_id_index") != F.col("doc_id_probe"))
-                    .select(F.col("doc_id_probe").alias(id_col))
-                    .distinct()
-                )
-                novel = survivors.join(hits, [id_col], "left_anti").persist()
-            try:
-                # a zero-survivor batch before the corpus exists would
-                # bootstrap it as a footer-less directory (unreadable
-                # until the first real batch); in dynamic mode an empty
-                # frame touches no partitions anyway, so skipping is
-                # exactly equivalent — same empty-input contract as the
-                # layout writers
-                skip_corpus = novel.isEmpty() and not table_exists(
-                    spark, corpus_path
-                )
-                # corpus first, index second: a failure in between
-                # replays to an identical overwrite of this partition
-                # (index unchanged => same novel set); the reverse
-                # order would replay novel as empty and wipe it
-                if not skip_corpus:
-                    (
-                        novel.withColumn("batch_id", F.lit(batch_id))
-                        .write.mode("overwrite")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .partitionBy("batch_id")
-                        .parquet(corpus_path)
-                    )
-                if bootstrap:
-                    # meta/ is written last inside write_lsh_index, so
-                    # a half-written bootstrap re-runs as bootstrap
-                    write_lsh_index(
-                        novel,
-                        index_path,
-                        id_col=id_col,
-                        text_col=text_col,
-                        num_hashes=num_hashes,
-                        n=n,
-                    )
-                else:
-                    append_lsh_index(novel, index_path, id_col, text_col)
-            finally:
-                novel.unpersist()
-        finally:
-            batch.unpersist()
-
-    return sink
-
-
-def pair_graph_ingest_sink(
-    graph_path: str,
-    index_path: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    n: int = 3,
-    threshold: float = 0.3,
-    n_label_parts: int = 16,
-):
-    """foreachBatch sink for KEEP-everything near-dup ACCOUNTING: where
-    ``lsh_dedup_ingest_sink`` drops near-duplicates at the door, this
-    one admits every doc and maintains the near-dup PAIR GRAPH — and
-    its incremental cluster labels — as tables, so cluster monitoring
-    over a growing corpus never re-runs connected components
-    (VERDICT r13 "What's missing #3", closed end-to-end from the
-    stream). Per micro-batch:
-
-    1. within-batch pairs: ``lsh_near_duplicates`` over the BATCH only;
-    2. batch-vs-corpus pairs: ``lsh_probe_index`` against the
-       persisted LSH index (corpus text never re-read, probe-side
-       broadcasts only);
-    3. ``append_pair_graph`` folds nodes + pairs in and merges the
-       touched clusters' labels through the contracted-label CC
-       (batch-scale — ``sources/catalog.py``);
-    4. ``append_lsh_index`` makes the batch probe-able by the next.
-
-    Because LSH pair collision is pairwise, (1) ∪ (2) equals exactly
-    the pairs a full rebuild over (corpus ∪ batch) would add, so the
-    maintained labels stay ≡ a full CC recompute after every batch
-    (pinned in tests/test_stream_pair_graph.py). Replay: labels
-    maintenance is a no-op on a re-delivered batch (every endpoint
-    already maps to its merged label); the duplicated pairs/nodes and
-    index rows follow the standing caller-owned-id append contract,
-    same as the dedup-gate sink's one-batch replay artifact.
-
-    First batch bootstraps all three tables (graph, labels, index);
-    meta/ is written last inside each writer, so a half-written
-    bootstrap re-runs as bootstrap."""
-    from ..operators.dedup import lsh_near_duplicates, lsh_probe_index
-    from ..sources.catalog import (
-        append_lsh_index,
-        append_pair_graph,
-        read_lsh_index,
-        table_exists,
-        write_cluster_labels,
-        write_lsh_index,
-        write_pair_graph,
-    )
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        batch = df.select(id_col, text_col).persist()
-        try:
-            if batch.isEmpty():
-                return
-            if not table_exists(spark, f"{index_path}/meta"):
-                write_pair_graph(
-                    batch, graph_path, id_col, text_col,
-                    num_hashes=num_hashes, n=n, threshold=threshold,
-                )
-                write_cluster_labels(
-                    spark, graph_path, n_parts=n_label_parts
-                )
-                write_lsh_index(
-                    batch, index_path, id_col=id_col, text_col=text_col,
-                    num_hashes=num_hashes, n=n,
-                )
-                return
-            within = lsh_near_duplicates(
-                batch, id_col, text_col, num_hashes, n, threshold
-            ).select(
-                F.col(f"{id_col}_a").alias("doc_id_a"),
-                F.col(f"{id_col}_b").alias("doc_id_b"),
-                "jaccard",
-            )
-            bands, shingles, params = read_lsh_index(spark, index_path)
-            cross = (
-                lsh_probe_index(
-                    bands, shingles, batch, id_col, text_col,
-                    threshold=threshold, **params,
-                )
-                .filter(F.col("doc_id_index") != F.col("doc_id_probe"))
-                .select(
-                    F.least("doc_id_probe", "doc_id_index").alias(
-                        "doc_id_a"
-                    ),
-                    F.greatest("doc_id_probe", "doc_id_index").alias(
-                        "doc_id_b"
-                    ),
-                    "jaccard",
-                )
-            )
-            append_pair_graph(
-                spark,
-                graph_path,
-                batch.select(F.col(id_col).alias("doc_id")),
-                within.unionByName(cross),
-            )
-            append_lsh_index(batch, index_path, id_col, text_col)
-        finally:
-            batch.unpersist()
-
-    return sink
-
-
-def drift_monitor_sink(counts_path: str, report_path: str):
-    """foreachBatch sink for CONTINUOUS distribution-drift monitoring
-    during corpus ingestion: after every micro-batch the accumulated
-    per-source unigram distribution is re-audited against the whole
-    accumulated corpus, and the per-source total-variation report
-    (exact ppm — operators/drift.py, the SAME relation the batch
-    ``corpus_source_drift`` query computes) is appended under the
-    batch id. The report table is the drift TRAJECTORY: "src3 started
-    drifting at batch 41" is one filter away, and the latest batch_id
-    partition always equals what the batch query would say about
-    everything ingested so far (pinned in tests/test_stream_drift.py).
-
-    Exactly-once without batch bookkeeping: the batch's word-count
-    DELTA and its report rows are both written with dynamic partition
-    overwrite keyed on batch_id, so an at-least-once re-delivery
-    (failure between sink and checkpoint commit) rewrites identical
-    partitions instead of double-counting — additive state made
-    replay-idempotent by partitioning, the same device as
-    ``idempotent_parquet_sink``. Scale shape: the delta write is the
-    batch's own vocab (map-side combined); the report pass is one
-    vocab-sized aggregate over the accumulated deltas plus the
-    config-sized drift joins — compact the delta partitions
-    periodically if batch count grows unbounded (a groupBy-sum
-    rewrite, noted here rather than hidden)."""
-    from ..functions.text import tokens
-    from ..operators.drift import source_drift_from_counts, word_counts
-    from ..sources.catalog import _count_delta_dir, read_word_counts
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        delta = word_counts(df, tokens(F.col("text"))).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            # resolved per batch: a compaction between batches flips
-            # the layout to a new generation dir and the sink follows
-            .parquet(_count_delta_dir(counts_path))
-        )
-        acc = read_word_counts(spark, counts_path)
-        report = source_drift_from_counts(acc).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        (
-            report.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(report_path)
-        )
-
-    return sink
-
-
-def anomaly_monitor_sink(counts_path: str, report_path: str):
-    """foreachBatch sink for CONTINUOUS count-anomaly monitoring of an
-    event stream: after every micro-batch the accumulated per-hour
-    per-type window counts are re-scored with the three-sigma integer
-    predicate (operators/anomaly.py — the SAME relation the batch
-    ``events_window_anomaly`` query computes), and the per-window
-    report is written under the batch id. The report table is the
-    anomaly TRAJECTORY — "the error spike first flagged at batch 17"
-    is one filter away — and the latest batch_id partition always
-    equals what the batch query would say about everything ingested so
-    far (pinned in tests/test_stream_anomaly.py).
-
-    Same exactly-once device as ``drift_monitor_sink``: the batch's
-    window-count DELTA and its report rows are both written with
-    dynamic partition overwrite keyed on batch_id, so an
-    at-least-once re-delivery rewrites identical partitions instead of
-    double-counting. Scale shape: the delta is the batch's own
-    windows (map-side combined); the report pass is one
-    windows-relation-sized aggregate over the accumulated deltas plus
-    the |event_types|-row broadcast moments join — compact the delta
-    partitions periodically if batch count grows unbounded (same note
-    as the drift sink)."""
-    from ..operators.anomaly import window_anomalies_from_counts
-
-    return _count_monitor_sink(
-        counts_path, report_path, window_anomalies_from_counts
-    )
-
-
-def cusum_monitor_sink(counts_path: str, report_path: str):
-    """foreachBatch sink for CONTINUOUS level-shift monitoring: the
-    CUSUM sibling of ``anomaly_monitor_sink`` — after every
-    micro-batch the accumulated per-hour per-type window counts are
-    re-scored with the one-sided CUSUM reflection form
-    (operators/anomaly.py:cusum_from_counts, the SAME relation the
-    batch ``events_cusum_alarm`` query computes), so a sustained small
-    elevation that no single batch's three-sigma view can see
-    accumulates across batches and alarms mid-stream. Latest batch_id
-    partition ≡ the batch query over everything ingested so far, and
-    re-delivery is idempotent (both writes are batch_id-keyed dynamic
-    partition overwrites over additive count state) — pinned in
-    tests/test_stream_anomaly.py. Same compaction note as the other
-    count monitors."""
-    from ..operators.anomaly import cusum_from_counts
-
-    return _count_monitor_sink(counts_path, report_path, cusum_from_counts)
-
-
-def _count_monitor_sink(counts_path: str, report_path: str, scorer):
-    """Shared window-count monitor skeleton: write the batch's
-    window-count DELTA under its batch_id (dynamic partition
-    overwrite), re-aggregate the accumulated deltas, score with
-    ``scorer``, and write the report under the same batch_id — the
-    additive-state-made-idempotent device all the count monitors
-    share."""
-    from ..operators.anomaly import window_counts
-    from ..sources.catalog import _count_delta_dir, read_window_counts
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        delta = window_counts(df).withColumn("batch_id", F.lit(batch_id))
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            # resolved per batch: a compaction between batches flips
-            # the layout to a new generation dir and the sink follows
-            .parquet(_count_delta_dir(counts_path))
-        )
-        acc = read_window_counts(spark, counts_path)
-        report = scorer(acc).withColumn("batch_id", F.lit(batch_id))
-        (
-            report.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(report_path)
-        )
-
-    return sink
-
-
-def bm25_search_sink(index_path: str, results_path: str, k: int = 10):
-    """foreachBatch sink for CONTINUOUS retrieval over the persisted
-    text index (sources/catalog.py:write_text_index) — the retrieval
-    sibling of ``lsh_dedup_ingest_sink``: a stream of query terms
-    (q_id, term) arrives in micro-batches, each batch is scored with
-    ``bm25_probe_index`` (partition-pruned postings read, shared
-    ``_bm25_rank`` tail — so streaming results are pinned to the
-    batch query by construction), and the per-batch top-``k`` rows
-    land in ``results_path`` partitioned by batch_id.
-
-    Replay-safe without bookkeeping: scoring is a pure function of
-    (batch, index), and the per-``batch_id`` dynamic-partition
-    overwrite makes a re-delivered batch rewrite its own partition
-    with identical content (Spark's at-least-once foreachBatch
-    contract → exactly-once for readers). If ``append_text_index``
-    grows the index between a batch's failure and its replay, the
-    replayed batch scores against the bigger index — the same
-    one-batch-bounded artifact the LSH ingest sink documents, and for
-    search it is benign (fresher results, not corruption).
-
-    At 100 TB the per-batch cost is the probed buckets' postings
-    files + config-scale broadcasts — the corpus text is never read,
-    and there is NO executor state: the index table IS the state
-    (unbounded horizon, zero memory)."""
-    from ..operators.retrieval import bm25_probe_index
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        batch = df.persist()
-        try:
-            if batch.isEmpty():
-                return
-            ranked = bm25_probe_index(spark, index_path, batch, k=k)
-            (
-                ranked.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(results_path)
-            )
-        finally:
-            batch.unpersist()
-
-    return sink
-
-
-def hybrid_search_sink(
-    text_index_path: str,
-    vec_layout_path: str,
-    results_path: str,
-    k: int = 10,
-):
-    """foreachBatch sink for CONTINUOUS HYBRID retrieval — the capstone
-    of the search sinks: each micro-batch carries queries in both
-    forms ((q_id, term) rows with the query's embedding repeated per
-    row), and the batch is answered entirely from the two persisted
-    layouts via ``hybrid_probe_topk`` — bucket-pruned BM25 postings
-    probe + cell-pruned residual IVF-PQ codes probe + exact-integer
-    RRF — with the per-batch top-``k`` landing under batch_id.
-
-    Same replay contract as ``bm25_search_sink``: scoring is a pure
-    function of (batch, layouts), and the batch_id-keyed
-    dynamic-partition overwrite makes re-delivery rewrite identical
-    rows. If either layout is grown between failure and replay, the
-    replayed batch scores against the fresher layout — the documented
-    one-batch-bounded artifact, benign for search. No executor state:
-    the two layout tables ARE the state.
-
-    At 100 TB the per-batch cost is the query terms' postings buckets
-    + the probed cells' code files + config-scale broadcasts — neither
-    the corpus text nor an embedding float is ever read."""
-    from ..operators.retrieval import hybrid_probe_topk
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        batch = df.persist()
-        try:
-            if batch.isEmpty():
-                return
-            terms = batch.select("q_id", "term")
-            vecs = (
-                batch.groupBy("q_id")
-                .agg(F.min_by("embedding", "term").alias("embedding"))
-                .select(F.col("q_id").alias("vec_id"), "embedding")
-            )
-            ranked = hybrid_probe_topk(
-                spark, text_index_path, vec_layout_path, terms, vecs, k=k
-            )
-            (
-                ranked.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(results_path)
-            )
-        finally:
-            batch.unpersist()
-
-    return sink
-
-
-def spelling_monitor_sink(
-    counts_path: str,
-    results_path: str,
-    min_dict_count: int = 10,
-    max_edit_distance: int = 1,
-):
-    """foreachBatch sink for CONTINUOUS out-of-vocabulary monitoring —
-    the hygiene sibling of the search sinks: document micro-batches
-    (doc_id, text) arrive, each batch's tokens are split against the
-    PERSISTED word-count relation (the dictionary the drift sink
-    already maintains at ``counts_path`` — no second vocabulary
-    state), and every unseen token is resolved to its best
-    dictionary word within ``max_edit_distance`` (1 by default; 2 is
-    the standard SymSpell configuration) via the deletion-key join
-    (operators/retrieval.py:symspell_corrections). Per-batch
-    rows (typo, correction, corr_count, n_occurrences) land under
-    batch_id — the live "typo storm / OCR regression / new-jargon"
-    feed a crawl-ingest pipeline watches.
-
-    Replay contract as the search sinks: resolution is a pure
-    function of (batch, dictionary), and the batch_id-keyed
-    dynamic-partition overwrite makes re-delivery rewrite identical
-    rows. If the dictionary grew between failure and replay, the
-    replayed batch resolves against the fresher dictionary — the
-    documented one-batch-bounded artifact, benign here (a word
-    graduating into the dictionary stops being flagged). No executor
-    state: the count layout IS the dictionary.
-
-    Per-batch cost at 100 TB: the batch's own tokenize + one
-    aggregated read of the config-scale count relation + the
-    deletion-key join, which is linear in both vocabularies."""
-    from ..functions.text import ascii_lower, tokens
-    from ..operators.retrieval import symspell_corrections
-    from ..sources.catalog import read_word_counts
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        batch = df.persist()
-        try:
-            if batch.isEmpty():
-                return
-            dic = (
-                read_word_counts(spark, counts_path)
-                .groupBy("word")
-                .agg(F.sum("c_sw").alias("corr_count"))
-                .filter(
-                    (F.col("corr_count") >= min_dict_count)
-                    & (F.length("word") >= 3)
-                )
-            )
-            toks = batch.select(
-                F.explode(tokens(ascii_lower(F.col("text")))).alias("tok")
-            ).filter(F.length("tok") >= 3)
-            occ = toks.groupBy(F.col("tok").alias("typo")).agg(
-                F.count(F.lit(1)).alias("n_occurrences")
-            )
-            unseen = occ.join(
-                dic.select(F.col("word").alias("typo")), "typo", "left_anti"
-            )
-            resolved = symspell_corrections(
-                unseen.select("typo"), dic,
-                max_edit_distance=max_edit_distance,
-            ).join(unseen, "typo")
-            (
-                resolved.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(results_path)
-            )
-        finally:
-            batch.unpersist()
-
-    return sink
-
-
-def media_dedup_ingest_sink(
-    index_path: str,
-    media_path: str,
-    *,
-    threshold: float = 0.5,
-    fake: bool = True,
-):
-    """foreachBatch sink for continuous near-dup-gated MEDIA ingestion
-    over the persisted frame-fingerprint index — the sequence-media
-    sibling of ``lsh_dedup_ingest_sink``: each micro-batch of media
-    rows (doc_id, text payload stand-in) is (1) frame-sampled ONCE
-    (operators/multimodal.py:sample_frames), (2) self-deduplicated by
-    frame-set Jaccard inside the batch (min-id-neighbor rule —
-    replay-stable, chain over-drops accepted as documented on the LSH
-    sink), (3) probed against the index with ``frame_probe_pairs``
-    and dropped on any match to previously admitted media, and (4)
-    survivors land in the media table (batch_id dynamic-partition
-    overwrite) and the index (``append_frame_index``). State is the
-    INDEX TABLE — unbounded horizon, zero executor memory.
-
-    Replay contract: every step is a deterministic function of
-    (batch, index-before-this-batch); a re-delivered batch whose index
-    append committed sees its own rows only as self-pairs
-    (doc_id == probe_id — excluded; ids globally unique is the
-    standing append contract), so it recomputes the identical
-    survivor set and overwrites its partition with identical rows.
-    The one artifact — a duplicated index append for that batch — is
-    SCORE-NEUTRAL here because ``read_frame_index`` deduplicates both
-    tables at read (and compaction physically heals it), a stronger
-    guarantee than the LSH sink needs to document.
-
-    Per-batch cost at 100 TB: frame-hash the BATCH (Arrow map), one
-    bucket-pruned posting probe, appends sized by the batch — corpus
-    media never re-read."""
-    from ..operators.dedup import (
-        fingerprint_set_jaccard_pairs,
-        frame_probe_pairs,
-    )
-    from ..operators.multimodal import attach_binary, sample_frames
-    from ..sources.catalog import (
-        append_frame_index,
-        table_exists,
-        write_frame_index,
-    )
-
-    def sink(df: DataFrame, batch_id: int) -> None:
-        spark = df.sparkSession
-        batch = df.persist()
-        try:
-            frames = (
-                sample_frames(
-                    attach_binary(batch, "doc_id", "text"), fake=fake
-                )
-                .select("doc_id", "frame_md5")
-                .localCheckpoint()
-            )
-            self_pairs = fingerprint_set_jaccard_pairs(
-                frames,
-                id_col="doc_id",
-                fp_col="frame_md5",
-                threshold=threshold,
-            )
-            losers = self_pairs.select(
-                F.col("doc_id_b").alias("doc_id")
-            ).distinct()
-            survivors = batch.join(losers, ["doc_id"], "left_anti")
-            surv_frames = frames.join(losers, ["doc_id"], "left_anti")
-            bootstrap = not table_exists(spark, f"{index_path}/meta")
-            if bootstrap:
-                novel = survivors.persist()
-                novel_frames = surv_frames
-            else:
-                hits = (
-                    frame_probe_pairs(
-                        spark, index_path, surv_frames, threshold=threshold
-                    )
-                    .filter(F.col("doc_id") != F.col("probe_id"))
-                    .select(F.col("probe_id").alias("doc_id"))
-                    .distinct()
-                )
-                novel = survivors.join(hits, ["doc_id"], "left_anti").persist()
-                novel_frames = surv_frames.join(hits, ["doc_id"], "left_anti")
-            try:
-                skip_corpus = novel.isEmpty() and not table_exists(
-                    spark, media_path
-                )
-                # media first, index second — same crash ordering as the
-                # LSH sink (reversed, a replay would see novel as dup
-                # and wipe its partition)
-                if not skip_corpus:
-                    (
-                        novel.withColumn("batch_id", F.lit(batch_id))
-                        .write.mode("overwrite")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .partitionBy("batch_id")
-                        .parquet(media_path)
-                    )
-                if bootstrap:
-                    write_frame_index(novel_frames, index_path)
-                else:
-                    append_frame_index(novel_frames, index_path)
-            finally:
-                novel.unpersist()
-        finally:
-            batch.unpersist()
 
     return sink

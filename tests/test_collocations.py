@@ -1,13 +1,17 @@
 """PMI-lift collocation mining: a planted always-together pair ranks
 first, independent frequent pairs are filtered by the positive-PMI
 fence, and the full top-50 output matches an exact-integer Python
-replica of the lift formula."""
+replica of the lift formula. Event-basket association rules are
+checked the same way against an exact replica."""
 
 from __future__ import annotations
 
 import os
 import tempfile
 from collections import Counter
+
+import pytest
+from pyspark.sql import functions as F
 
 from dev_dot_cvp_metadata_ingestion_spark.plans import registry
 
@@ -71,3 +75,62 @@ def test_planted_collocation_ranks_first(spark):
     # every surviving pair is either the planted one or a fixed
     # filler-sequence bigram whose lift the replica also produced
     assert all(g in want for g in got)
+
+
+@pytest.mark.slow
+def test_association_rules_planted_cooccurrence(spark):
+    """Users who 'add_to_cart' overwhelmingly also 'purchase' while
+    'browse' is independent background: the cart->purchase rule must
+    carry high confidence and lift > 1e6; the browse pairs hover at
+    lift ~= 1e6. Exact metrics vs a Python replica."""
+    rows = []
+    eid = 0
+    baskets = {}
+    for u in range(40):
+        types = {"browse"}
+        if u % 2 == 0:
+            types |= {"add_to_cart", "purchase"}  # always together
+        if u % 5 == 0:
+            types.add("search")
+        baskets[u] = types
+        for t in sorted(types):
+            rows.append((eid, f"2024-06-01 10:{eid % 60:02d}:00", u, t))
+            eid += 1
+    ev = spark.createDataFrame(
+        rows, "event_id long, ts string, user_id long, event_type string"
+    ).withColumn("ts", F.to_timestamp("ts"))
+    with tempfile.TemporaryDirectory() as d:
+        ev.write.parquet(os.path.join(d, "events.parquet"))
+        got = {
+            (r.ante, r.cons): (
+                r.c_xy, r.c_ante, r.c_cons,
+                r.support_ppm, r.confidence_ppm, r.lift_ppm,
+            )
+            for r in QUERIES["events_association_rules"](
+                spark, d
+            ).collect()
+        }
+    # replica
+    n = len(baskets)
+    ct = Counter(t for ts in baskets.values() for t in ts)
+    cxy = Counter()
+    for ts in baskets.values():
+        st = sorted(ts)
+        for i in range(len(st)):
+            for j in range(i + 1, len(st)):
+                cxy[(st[i], st[j])] += 1
+    want = {}
+    for (x, y), c in cxy.items():
+        if c < 2:
+            continue
+        want[(x, y)] = (
+            c, ct[x], ct[y],
+            c * 10**6 // n,
+            c * 10**6 // ct[x],
+            c * n * 10**6 // (ct[x] * ct[y]),
+        )
+    assert got == want
+    cart = got[("add_to_cart", "purchase")]
+    assert cart[4] == 1_000_000          # confidence: always together
+    assert cart[5] == 2_000_000          # lift = n/c(purchase) = 2
+    assert got[("add_to_cart", "browse")][5] == 1_000_000  # independent

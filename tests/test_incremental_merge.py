@@ -153,87 +153,6 @@ def test_merge_is_idempotent(spark, tmp_path):
     assert got == _oracle(BASE + UPDATES)
 
 
-def test_merge_upsert_sink_streaming_cdc(spark, tmp_path):
-    """Streaming CDC upsert: the table always holds the latest version
-    per key, and a FULL REPLAY of the stream (fresh checkpoint, same
-    files) re-merges to the identical table state — the foreachBatch
-    at-least-once contract absorbed by last-writer-wins semantics."""
-    import time as _time
-
-    from dev_dot_cvp_metadata_ingestion_spark.streaming.stream import (
-        merge_upsert_sink,
-    )
-
-    batches = [
-        [  # batch 0 bootstraps, incl. a within-batch double version
-            ("b", "k1", "2024-01-01", 100, 1, 10),
-            ("b", "k1", "2024-01-01", 120, 2, 12),
-            ("b", "k2", "2024-01-02", 100, 3, 20),
-        ],
-        [
-            ("b", "k1", "2024-01-01", 200, 4, 14),   # newer k1
-            ("b", "k3", "2024-01-03", 100, 5, 30),   # new key+partition
-        ],
-        [
-            ("b", "k2", "2024-01-02", 90, 6, 21),    # older arrival, loses
-        ],
-    ]
-    src = tmp_path / "src"
-    src.mkdir()
-    base = _time.time()
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, SCHEMA).coalesce(1).write.parquet(
-            str(src / f"b{i}")
-        )
-        for f in (src / f"b{i}").rglob("*.parquet"):
-            os.utime(f, (base + 10 * i, base + 10 * i))
-
-    table = str(tmp_path / "table")
-    sink = merge_upsert_sink(
-        table,
-        key_cols=["bucket", "key"],
-        order_cols=["last_modified", "seq"],
-        partition_col="dt",
-    )
-
-    def run(ckpt):
-        stream = (
-            spark.readStream.schema(SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(str(src))
-        )
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", str(tmp_path / ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300)
-
-    def table_rows():
-        return sorted(
-            tuple(r)
-            for r in spark.read.parquet(table)
-            .select(
-                "bucket",
-                "key",
-                F.col("dt").cast("string").alias("dt"),
-                "last_modified",
-                "seq",
-                "size",
-            )
-            .collect()
-        )
-
-    run("ckpt1")
-    got = table_rows()
-    assert got == _oracle([r for b in batches for r in b])
-
-    run("ckpt2")  # full replay from scratch: table must not change
-    assert table_rows() == got
-
-
 def test_table_exists_hadoop_fs(spark, tmp_path):
     """ADVICE r7: existence detection goes through the Hadoop
     FileSystem API, and a directory with no committed parquet data

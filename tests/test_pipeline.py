@@ -256,6 +256,26 @@ def test_csv_records(spark, tmp_path):
     assert ("42", "vsl_mph") not in bad
 
 
+def test_pipeline_refuses_csv_rule_file(spark, tmp_path):
+    """A ``DataType = csv`` rule file is refused by name: parsing its
+    lines as JSON would report every field missing and count the
+    header as a message."""
+    csv_dir = tmp_path / "csv"
+    csv_dir.mkdir()
+    (csv_dir / "vsl.csv").write_text(
+        "deviceid,utc,local,blank,vsl_mph\n"
+        "42,2019-01-01T00:00:00Z,2019-01-01T00:00:00,x,55.5\n"
+    )
+    ruleset = parse_rules_ini(open(fixture_rules_path("csvconfig_2.ini")).read())
+    with pytest.raises(ValueError, match="DataType = csv"):
+        run_cv_pipeline(spark, str(csv_dir), ruleset)
+    with pytest.raises(ValueError, match="DataType = csv"):
+        stream_cv_pipeline(
+            spark, str(csv_dir), ruleset, None, lambda df, batch_id: None,
+            str(tmp_path / "ckpt"),
+        ).stop()
+
+
 def test_message_metrics_shapes(spark):
     """A5: the four CloudWatch counter shapes fold per-file puts into
     grouped sums (cvp_bucket_event_lambda_handler.py:177-221)."""
@@ -340,6 +360,37 @@ def test_cli_list_queries_covers_registry(capsys):
     out = capsys.readouterr().out.splitlines()
     names = [line.split()[0] for line in out if line.strip()]
     assert names == list(registry.ordered_queries())
+
+
+def test_cvp_entry_points_load_only_cvp_modules():
+    """The CLI, the batch and stream pipelines and the metadata operator
+    load the CVP modules and nothing else: no table catalog, corpus
+    operator or query plan module rides along."""
+    pkg = "dev_dot_cvp_metadata_ingestion_spark"
+    entry = ["__main__", "plans.pipeline", "streaming.stream",
+             "operators.metadata"]
+    code = (
+        "import importlib, json, sys\n"
+        f"for m in {entry!r}:\n"
+        f"    importlib.import_module('{pkg}.' + m)\n"
+        f"print(json.dumps(sorted(m for m in sys.modules"
+        f" if m.split('.')[0] == '{pkg}')))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True,
+        text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    loaded = {m.removeprefix(pkg).lstrip(".") for m in json.loads(proc.stdout)}
+    assert loaded == {
+        "", "__main__",
+        "operators", "operators.metadata", "operators.sequential",
+        "operators.validation",
+        "plans", "plans.pipeline", "plans.registry",
+        "sources", "sources.files", "sources.rules",
+        "streaming", "streaming.stream",
+    }
 
 
 @pytest.fixture(scope="module")

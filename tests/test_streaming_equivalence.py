@@ -1,23 +1,16 @@
 """Query-level batch-vs-stream equivalence at sf0.01 (SURVEY §2.9).
 
-Two claims, both at real query scale (10k events), not fixture scale:
+At real query scale (10k events), not fixture scale:
 
 * the registered ``cv_sequential_checks`` result decomposes over
   micro-batches: streaming the same records file-by-file and running
   the batch sequential plan per micro-batch (the foreachBatch
   pattern stream.py uses) unions to EXACTLY the batch query output —
-  all of W1-W8, including bundle-size dedup and all-pass synthesis;
-* the stateful cross-batch operator (streaming/stateful.py) over the
-  same records SPLIT MID-FILE into micro-batches matches an
-  independent pandas oracle of the per-(file, bundle) transition
-  checks — state carries correctly at 600-group scale.
+  all of W1-W8, including bundle-size dedup and all-pass synthesis.
 """
 
 from __future__ import annotations
 
-import os
-
-import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -28,9 +21,6 @@ from dev_dot_cvp_metadata_ingestion_spark.operators.sequential import (
 from dev_dot_cvp_metadata_ingestion_spark.plans.cvp import (
     _events_seq_spec,
     _events_with_file,
-)
-from dev_dot_cvp_metadata_ingestion_spark.streaming.stateful import (
-    stateful_sequential_checks,
 )
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -148,98 +138,3 @@ def test_streaming_dedup_matches_batch_distinct(spark, tmp_path):
     ]
     assert len(expected) < n  # the corpus really contains duplicates
     assert sorted(got) == sorted(expected)
-
-
-def _pandas_transition_oracle(pdf: pd.DataFrame) -> set[tuple]:
-    """Independent oracle for the stateful operator: per (file, bid)
-    group ordered by sn, the four transition checks."""
-    out: set[tuple] = set()
-    for (fname, bid), g in pdf.groupby(["file", "bid"]):
-        g = g.sort_values("sn")
-        key = f"{fname}/{bid}"
-        prev = None
-        for row in g.itertuples(index=False):
-            if prev is not None:
-                if row.bs > 1 and row.rid != prev.rid + 1:
-                    out.add((
-                        key, row.sn, "metadata.serialId.recordId",
-                        "Detected incorrectly incremented recordId. "
-                        f"Expected recordId '{prev.rid + 1}' but got '{row.rid}'",
-                    ))
-                if row.sn != prev.sn + 1:
-                    out.add((
-                        key, row.sn, "metadata.serialId.serialNumber",
-                        "Detected incorrectly incremented serialNumber. "
-                        f"Expected serialNumber '{prev.sn + 1}' but got '{row.sn}'",
-                    ))
-                if row.gen < prev.gen:
-                    out.add((
-                        key, row.sn, "metadata.recordGeneratedAt",
-                        "Detected non-chronological recordGeneratedAt.",
-                    ))
-                if row.recv < prev.recv:
-                    out.add((
-                        key, row.sn, "metadata.odeReceivedAt",
-                        "Detected non-chronological odeReceivedAt.",
-                    ))
-            prev = row
-    return out
-
-
-def test_stateful_stream_matches_batch_oracle(spark, events, tmp_path):
-    """Mid-file micro-batch splits: per-(file, bundle) state must carry
-    across batches so the union of outputs equals the batch oracle."""
-    flat = events.select(
-        F.col("file").alias("stream_key"),
-        F.col("user_id").cast("long").alias("bid"),
-        F.col("event_id").cast("long").alias("sn"),
-        F.get_json_object("props", "$.k").cast("long").alias("rid"),
-        (F.col("user_id") % 4 + 1).cast("long").alias("bs"),
-        F.unix_timestamp(F.date_trunc("second", F.col("ts"))).alias("gen_epoch"),
-        F.unix_timestamp(F.date_trunc("second", F.col("ts"))).alias("recv_epoch"),
-    )
-    pdf = flat.toPandas().rename(columns={"stream_key": "file"})
-    pdf = pdf.assign(gen=pdf["gen_epoch"], recv=pdf["recv_epoch"])
-    expected = _pandas_transition_oracle(pdf)
-
-    # 4 micro-batches, each a contiguous sn range WITHIN every group —
-    # every (file, bid) group is split across all four batches
-    src = tmp_path / "stateful_src"
-    src.mkdir()
-    n_chunks = 4
-    lo, hi = pdf["sn"].min(), pdf["sn"].max() + 1
-    step = (hi - lo + n_chunks - 1) // n_chunks
-    for i in range(n_chunks):
-        chunk = flat.filter(
-            (F.col("sn") >= lo + i * step) & (F.col("sn") < lo + (i + 1) * step)
-        ).coalesce(1)
-        path = src / f"chunk_{i}"
-        chunk.write.parquet(str(path))
-        # file-source processes oldest-mtime first: pin arrival order
-        for root, _dirs, fnames in os.walk(path):
-            for fn in fnames:
-                os.utime(os.path.join(root, fn), (1000000 + i * 100,) * 2)
-
-    stream = (
-        spark.readStream.schema(flat.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(src))
-    )
-    errors = stateful_sequential_checks(stream)
-    q = (
-        errors.writeStream.format("memory")
-        .queryName("stateful_eq")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_b"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300), "availableNow drain timed out"
-
-    got = {
-        (r.bundle_key, r.serial_number, r.field_path, r.details)
-        for r in spark.sql("select * from stateful_eq").collect()
-    }
-    assert len(expected) > 1000  # real query scale
-    assert got == expected

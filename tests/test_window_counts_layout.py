@@ -1,10 +1,9 @@
 """Persisted window-count relation (the monitor family's shared front
 half, ninth build-once layout): every events_* detector probed over
 ``read_window_counts`` must return EXACTLY its registered in-query
-rows; delta appends (the streaming monitors' additive state format)
-must re-aggregate to the batch bootstrap; re-delivered batch ids must
-not double-count; compaction folds deltas with detector outputs
-unchanged."""
+rows; delta appends must re-aggregate to the batch bootstrap;
+re-delivered batch ids must not double-count; compaction folds deltas
+with detector outputs unchanged."""
 
 from __future__ import annotations
 
@@ -135,31 +134,6 @@ def test_compaction_folds_deltas_detectors_unchanged(
     } == before
 
 
-def test_streaming_monitor_state_reads_back(spark, events, tmp_path):
-    """A counts table maintained by the streaming monitor sinks'
-    delta writes (same schema, same partitioning) is readable by
-    read_window_counts with no conversion — the layout IS the
-    streaming state format."""
-    from dev_dot_cvp_metadata_ingestion_spark.streaming.stream import (
-        _count_monitor_sink,
-    )
-
-    counts_p = str(tmp_path / "stream_counts")
-    report_p = str(tmp_path / "stream_report")
-    sink = _count_monitor_sink(
-        counts_p, report_p, window_anomalies_from_counts
-    )
-    halves = [
-        events.filter(F.col("user_id") % 2 == 0),
-        events.filter(F.col("user_id") % 2 == 1),
-    ]
-    for i, h in enumerate(halves):
-        sink(h, i)
-    assert _rows(read_window_counts(spark, counts_p)) == _rows(
-        window_counts(events)
-    )
-
-
 def test_delete_equals_rebuild_without_for_every_detector(
     spark, events, tmp_path
 ):
@@ -242,29 +216,6 @@ def test_compaction_crash_window_leaves_readers_on_old_generation(
     # retrying the compaction completes the swap over the orphan
     compact_window_counts(spark, p)
     assert _rows(read_window_counts(spark, p)) == before
-
-
-def test_streaming_sink_follows_midstream_compaction(
-    spark, events, tmp_path
-):
-    """A compaction between micro-batches flips the layout to a new
-    generation dir; the sink resolves the delta dir per batch, so its
-    next delta lands in the CURRENT generation and nothing is lost."""
-    from dev_dot_cvp_metadata_ingestion_spark.streaming.stream import (
-        _count_monitor_sink,
-    )
-
-    counts_p = str(tmp_path / "mid_counts")
-    report_p = str(tmp_path / "mid_report")
-    sink = _count_monitor_sink(
-        counts_p, report_p, window_anomalies_from_counts
-    )
-    sink(events.filter(F.col("user_id") % 2 == 0), 0)
-    compact_window_counts(spark, counts_p)
-    sink(events.filter(F.col("user_id") % 2 == 1), 1)
-    assert _rows(read_window_counts(spark, counts_p)) == _rows(
-        window_counts(events)
-    )
 
 
 # r16 fast-tier split (VERDICT r15 item 3): this module is in the SLOW

@@ -2,8 +2,7 @@
 front half, tenth build-once layout): distribution drift, exact heavy
 hitters, per-source vocabularies, and source overlaps probed over
 ``read_word_counts`` must return EXACTLY their registered in-query
-rows; delta appends re-aggregate to the bootstrap; the streaming drift
-monitor's bare delta dir reads back with no conversion; the fold
+rows; delta appends re-aggregate to the bootstrap; the fold
 convention rides the meta sidecar."""
 
 from __future__ import annotations
@@ -226,28 +225,6 @@ def test_default_batch_id_is_content_hash(spark, docs, tmp_path):
     delete_from_word_counts(s1, p)
     assert _rows(read_word_counts(spark, p)) == _rows(
         word_counts(base.unionByName(s2), tokens(F.col("text")))
-    )
-
-
-def test_streaming_drift_state_reads_back(spark, docs, tmp_path):
-    """A counts dir maintained by drift_monitor_sink's delta writes
-    reads back through read_word_counts with no conversion."""
-    from dev_dot_cvp_metadata_ingestion_spark.functions.text import tokens
-    from dev_dot_cvp_metadata_ingestion_spark.streaming.stream import (
-        drift_monitor_sink,
-    )
-
-    counts_p = str(tmp_path / "counts")
-    report_p = str(tmp_path / "report")
-    sink = drift_monitor_sink(counts_p, report_p)
-    halves = [
-        docs.filter(F.col("doc_id") % 2 == 0),
-        docs.filter(F.col("doc_id") % 2 == 1),
-    ]
-    for i, h in enumerate(halves):
-        sink(h, i)
-    assert _rows(read_word_counts(spark, counts_p)) == _rows(
-        word_counts(docs, tokens(F.col("text")))
     )
 
 
