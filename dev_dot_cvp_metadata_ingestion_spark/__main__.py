@@ -11,7 +11,9 @@ sequential_results / file_tallies / file_counts parquet tables under
 --output. No pass infers a schema first. --streaming watches --input
 as a file-source stream instead (availableNow drain), writing
 validation_results_stream/ one ``batch_id=N`` partition per
-micro-batch, which a replayed micro-batch overwrites.
+micro-batch, which a replayed micro-batch overwrites. Either way each
+object is read whole into one row, so the largest object must fit in
+one task's memory.
 
 Registry access (every operator from COVERAGE.md, same callables the
 driver runs):
@@ -87,12 +89,6 @@ def main(argv: list[str] | None = None) -> int:
         action="store_true",
         help="run as a file-source stream (availableNow) instead of batch",
     )
-    p.add_argument(
-        "--chunked",
-        action="store_true",
-        help="block-split reads: bound executor memory by maxPartitionBytes "
-        "instead of the largest single object (multi-GB-object corpora)",
-    )
     p.add_argument("--cores", type=int, default=None)
     args = p.parse_args(argv)
 
@@ -136,9 +132,7 @@ def _pipeline_main(spark, args) -> int:
             )
         )
     else:
-        result = run_cv_pipeline(
-            spark, args.input, ruleset, chunked=args.chunked
-        )
+        result = run_cv_pipeline(spark, args.input, ruleset)
         result, observations = observe_pipeline(result)
         paths = write_tables(result, args.output)
         progress = log_progress(observations)

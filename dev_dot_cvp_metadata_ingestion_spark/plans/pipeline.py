@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..operators.sequential import SequentialSpec, sequential_results
 from ..operators.validation import REC, skip_flag_exprs, validate
-from ..sources.files import file_lines, file_lines_chunked
+from ..sources.files import file_lines
 from ..sources.rules import RuleSet
 
 
@@ -89,28 +89,29 @@ def cv_records(lines: DataFrame) -> DataFrame:
     )
 
 
+def file_counts(records: DataFrame) -> DataFrame:
+    """A1: per-file record counts (``file_path``, ``MessageCount``)."""
+    return records.groupBy("file_path").agg(
+        F.count(F.lit(1)).alias("MessageCount")
+    )
+
+
 def run_cv_pipeline(
     spark: SparkSession,
     input_dir: str,
     ruleset: RuleSet,
     schema=None,  # unused; perfbench/run.py still passes it positionally
-    *,
-    chunked: bool = False,
 ) -> PipelineResult:
     """Batch pipeline over a directory of NDJSON CV files; records are
-    built by :func:`cv_records`, as the stream builds them.
-
-    ``chunked=True`` reads via :func:`file_lines_chunked`, bounding
-    executor memory by the block-split size instead of the largest
-    single object — the setting for corpora with multi-GB objects;
-    output is identical.
+    built by :func:`cv_records` over :func:`file_lines`, as the stream
+    builds them. Each object is read whole, so the largest object must
+    fit in one task (see :func:`file_lines`).
 
     ``records`` and ``validation`` come back persisted; call
     :meth:`PipelineResult.unpersist` when done with the result.
     """
     require_json(ruleset)
-    reader = file_lines_chunked if chunked else file_lines
-    records = cv_records(reader(spark, input_dir)).persist(
+    records = cv_records(file_lines(spark, input_dir)).persist(
         StorageLevel.MEMORY_AND_DISK
     )
 
@@ -146,10 +147,6 @@ def run_cv_pipeline(
         )
     )
 
-    file_counts = records.groupBy("file_path").agg(
-        F.count(F.lit(1)).alias("MessageCount")
-    )
-
     # A2 tallies (cvp_bucket_event_lambda_handler.py:115-153)
     tallies = validation.groupBy("file_path").agg(
         F.count_distinct("record_uid").alias("num_messages_total"),
@@ -167,7 +164,7 @@ def run_cv_pipeline(
         validation=validation,
         sequential=sequential,
         tallies=tallies,
-        file_counts=file_counts,
+        file_counts=file_counts(records),
         persisted=(records, validation),
     )
 
@@ -203,15 +200,12 @@ def observe_pipeline(
         F.count(F.lit(1)).alias("n_validations"),
         F.sum((~F.col("valid")).cast("long")).alias("n_errors"),
     )
-    file_counts = records.groupBy("file_path").agg(
-        F.count(F.lit(1)).alias("MessageCount")
-    )
     observed = PipelineResult(
         records=records,
         validation=validation,
         sequential=result.sequential,
         tallies=result.tallies,
-        file_counts=file_counts,
+        file_counts=file_counts(records),
         persisted=result.persisted,
     )
     return observed, {"records": obs_records, "validation": obs_validation}

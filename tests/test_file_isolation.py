@@ -6,6 +6,7 @@ read a field that only a later file carries."""
 
 from __future__ import annotations
 
+import gzip
 import json
 from datetime import datetime, timezone
 
@@ -25,6 +26,15 @@ NOW = datetime(2026, 1, 1, tzinfo=timezone.utc)
 PROBES = {
     "probe_location.json": {"metadata": {"receivedMessageDetails": {"locationData": 5}}},
     "probe_metadata.json": {"metadata": "x"},
+}
+# objects the one line reader takes as they are: a gzip object with no
+# extension is not decompressed (its bytes read as unparseable lines),
+# and invalid UTF-8 decodes with replacement characters
+RAW_PROBES = {
+    "probe_gzip_no_ext": gzip.compress(
+        "".join(json.dumps(r) + "\n" for r in FIXTURES[:5]).encode(), mtime=0
+    ),
+    "probe_not_utf8.json": b'{"metadata": {"recordType": "bsm\xff\xfe"}}\n',
 }
 
 
@@ -64,12 +74,14 @@ def test_each_file_gets_its_solo_rows_in_a_sweep(spark, tmp_path):
         _write(sweep, name, records)
     for name, record in PROBES.items():
         _write(sweep, name, [record])
+    for name, payload in RAW_PROBES.items():
+        (sweep / name).write_bytes(payload)
 
     got = _rows(spark, str(sweep))
     for name in files:
         assert got[name] == _rows(spark, str(tmp_path / f"solo_{name}"))[name], name
-    # the probes are validated too: every rule path reads as missing
-    assert all(name in got for name in PROBES)
+    # the probes are validated too, each on its own rows
+    assert all(name in got for name in [*PROBES, *RAW_PROBES])
 
 
 def test_stream_reads_a_field_first_seen_in_a_later_file(spark, tmp_path):

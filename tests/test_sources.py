@@ -12,7 +12,6 @@ from dev_dot_cvp_metadata_ingestion_spark.plans.pipeline import run_cv_pipeline
 from dev_dot_cvp_metadata_ingestion_spark.sources.files import (
     audit_csv_headers,
     file_lines,
-    file_lines_sniffed,
 )
 from dev_dot_cvp_metadata_ingestion_spark.sources.rules import (
     fixture_rules_path,
@@ -63,45 +62,16 @@ def test_gzip_transparent_read(spark, tmp_path):
     }
 
 
-def test_gzip_magic_byte_fallback(spark, tmp_path):
-    # the reference sniffs 1f8b regardless of name
-    # (cvp_bucket_event_lambda_handler.py:28-30): a gzip object WITHOUT
-    # the .gz extension must still decompress via the sniffed source
-    d = tmp_path / "sniff"
-    d.mkdir()
-    lines_txt = [f"line {i}" for i in range(7)]
-    payload = ("\n".join(lines_txt) + "\n\n").encode()
-    (d / "plain.log").write_bytes(payload)
-    (d / "hidden_gzip").write_bytes(gzip.compress(payload))  # no extension
-
-    out = file_lines_sniffed(spark, str(d))
-    rows = out.collect()
-    by_file = {}
-    for r in rows:
-        by_file.setdefault(r.file_path.split("/")[-1], []).append(
-            (r.line_no, r.line)
-        )
-    for fname in ("plain.log", "hidden_gzip"):
-        got = sorted(by_file[fname])
-        assert got == [(i + 1, f"line {i}") for i in range(7)], fname
-    # provenance: file_size is the on-disk (compressed) size
-    sizes = {r.file_path.split("/")[-1]: r.file_size for r in rows}
-    assert sizes["hidden_gzip"] == len(gzip.compress(payload))
-
-
 def test_file_lines_ordering_and_numbering(spark, tmp_path):
     # line_no numbers NON-BLANK lines 1..n in file order (serial_id
-    # fallback, validator.py:398-400), identical in both sources
+    # fallback, validator.py:398-400)
     d = tmp_path / "ord"
     d.mkdir()
     (d / "f.log").write_text("a\n\nb\r\nc\n   \nd\n")
     # empty and whitespace-only lines are skipped and not counted
     expect = [(1, "a"), (2, "b"), (3, "c"), (4, "d")]
-    for src in (file_lines, file_lines_sniffed):
-        got = sorted(
-            (r.line_no, r.line) for r in src(spark, str(d)).collect()
-        )
-        assert got == expect, src.__name__
+    got = sorted((r.line_no, r.line) for r in file_lines(spark, str(d)).collect())
+    assert got == expect
 
 
 def test_header_audit(spark, tmp_path):
@@ -113,6 +83,12 @@ def test_header_audit(spark, tmp_path):
     (d / "bad.csv").write_text(
         "device,utc,wrong,blank,vsl_mph\n1,2019,2019,x,50\n"
     )
+    # a header shorter than the rule list: each missing position warns
+    (d / "short.csv").write_text("DeviceID,utc\n1,2019\n")
+    # the header is the first NON-BLANK line, as S4 hands S6 its lines
+    (d / "blank_first.csv").write_text(
+        "\n  \nDeviceID,utc,local,blank,speed\n1,2019,2019,x,50\n"
+    )
     ruleset = parse_rules_ini(open(fixture_rules_path("csvconfig_2.ini")).read())
     audits = audit_csv_headers(spark, str(d), ruleset)
     rows = {
@@ -123,52 +99,11 @@ def test_header_audit(spark, tmp_path):
     assert not any(f == "good.csv" for f, _ in rows)
     assert rows[("bad.csv", 0)] == ("device", "deviceid")
     assert rows[("bad.csv", 2)] == ("wrong", "local")
-    assert len(rows) == 2
-
-
-def test_file_lines_chunked_matches_wholetext(spark, tmp_path):
-    """A file larger than maxPartitionBytes splits into multiple block
-    partitions; the chunked reader must still produce exactly the
-    wholetext reader's (line_no, line) pairs."""
-    from dev_dot_cvp_metadata_ingestion_spark.sources.files import (
-        file_lines_chunked,
-    )
-
-    d = tmp_path / "big"
-    d.mkdir()
-    with open(d / "big.ndjson", "w") as fh:
-        for i in range(50_000):
-            fh.write(json.dumps({"i": i, "pad": "x" * 40}) + "\n")
-            if i % 977 == 0:
-                fh.write("\n")  # blank lines must not consume numbers
-    with open(d / "small.ndjson", "w") as fh:
-        for i in range(5):
-            fh.write(json.dumps({"i": i}) + "\n")
-
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(256 * 1024))
-    try:
-        chunked = file_lines_chunked(spark, str(d))
-        # precondition: the big file really is read as >1 block
-        n_blocks = (
-            chunked.sparkSession.read.text(str(d))
-            .select(F.col("_metadata.file_block_start").alias("bs"),
-                    F.col("_metadata.file_path").alias("fp"))
-            .where(F.col("fp").endswith("big.ndjson"))
-            .select("bs").distinct().count()
-        )
-        assert n_blocks > 1
-        got = {
-            (r.file_path.rsplit("/", 1)[-1], r.line_no): r.line
-            for r in chunked.collect()
-        }
-        want = {
-            (r.file_path.rsplit("/", 1)[-1], r.line_no): r.line
-            for r in file_lines(spark, str(d)).collect()
-        }
-        assert got == want
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+    assert {p: rows[("short.csv", p)] for p in (2, 3, 4)} == {
+        2: (None, "local"), 3: (None, "blank"), 4: (None, "vsl_mph"),
+    }
+    assert rows[("blank_first.csv", 4)] == ("speed", "vsl_mph")
+    assert len(rows) == 6
 
 
 def test_load_table_events_ts_encodings(spark, tmp_path):
