@@ -10,6 +10,7 @@ computation, no collect-to-driver bottleneck, no sink I/O noise).
 from __future__ import annotations
 
 import json
+import math
 import os
 import re
 import sys
@@ -42,6 +43,36 @@ HEADLINE = [
 # class of query can hide order-of-magnitude surprises until timed.
 def _extended(qs: dict) -> list[str]:
     return [name for name in qs if name not in HEADLINE]
+
+
+ZIPF_VOCAB = 20_000
+ZIPF_DOC_LEN = 60
+
+
+def zipf_corpus(spark, n_docs: int):
+    """Deterministic Zipf (s=1) corpus with no RNG: token j of doc d is
+    'w<rank>', where rank = floor(exp(u * ln V)) and u is a 32-bit
+    uniform drawn from md5(d:j). V = 20,000 words, 60 tokens a doc."""
+    from pyspark.sql import functions as F
+
+    lnv = math.log(ZIPF_VOCAB)
+
+    def tok(j: int):
+        h = F.md5(
+            F.concat_ws(":", F.col("doc_id").cast("string"), F.lit(str(j)))
+        )
+        u = F.conv(F.substring(h, 1, 8), 16, 10).cast("double") / float(
+            1 << 32
+        )
+        rank = F.least(
+            F.floor(F.exp(u * F.lit(lnv))).cast("long"), F.lit(ZIPF_VOCAB)
+        )
+        return F.concat(F.lit("w"), rank.cast("string"))
+
+    return spark.range(n_docs).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(" ", *[tok(j) for j in range(ZIPF_DOC_LEN)]).alias("text"),
+    )
 
 
 def main() -> None:
@@ -92,8 +123,8 @@ def main() -> None:
     # sf* documents tables carry a ~32-word synthetic vocabulary, so
     # text-index pruning looks useless and pair-family volumes look
     # enormous there — fixture artifacts, not operator properties. A
-    # deterministic Zipf corpus (V=20k, s=1 — tools/bench_realistic_
-    # text.py's generator, no RNG) sized to the bench sf gives the
+    # deterministic Zipf corpus (V=20k, s=1, ``zipf_corpus`` above, no
+    # RNG) sized to the bench sf gives the
     # retrieval trio and one pair-family query per-round numbers over
     # web-text-shaped term statistics; row counts are reported so the
     # pair volume itself is a tracked metric.
@@ -111,7 +142,6 @@ def main() -> None:
         bm25_topk,
         phrase_search_topk,
     )
-    from tools.bench_realistic_text import zipf_corpus
 
     n_docs = max(2_000, int(200_000 * sf)) if sf > 0 else 20_000
     tmp = tempfile.mkdtemp(prefix="bench_zipf_")
@@ -138,14 +168,15 @@ def main() -> None:
         )
         # tf-idf weight relation for the capped weighted-jaccard row
         # (r14: the one pair family whose UNcapped join bends quadratic
-        # under exactly this Zipf head — tools/bench_sf1_pairs.py —
+        # under exactly this Zipf head — 7f66565:tools/bench_sf1_pairs.py —
         # so the capped form gets a standing realistic number).
         # r15 MEASUREMENT FIX (r14 VERDICT "What's wrong #2"): the row
         # previously timed a query returning 0 rows (threshold 0.5
         # over the random Zipf corpus admits no pairs), so a bug that
         # silently emptied the FOUND relation would read as a speedup.
         # The input now plants deterministic mirror copies (doc 33k+1
-        # = copy of doc 33k, the tools/bench_sf1_pairs.py device) and
+        # = copy of doc 33k, the 7f66565:tools/bench_sf1_pairs.py device)
+        # and
         # blocks by doc_id div 33 so each mirror group shares a block
         # — realistic_rows carries a stable non-zero pair count
         # (~n_docs/33). Timing is therefore NOT comparable to the r14

@@ -135,15 +135,17 @@ def _pipeline_main(spark, args) -> int:
         result = run_cv_pipeline(spark, args.input, ruleset)
         result, observations = observe_pipeline(result)
         paths = write_tables(result, args.output)
+        result.unpersist()
         progress = log_progress(observations)
+        # read back what was written: collecting result.tallies would
+        # compute the tallies a second time
         tallies = {
             r["file_path"]: {
                 "total": r["num_messages_total"],
                 "errors": r["num_errors"],
             }
-            for r in result.tallies.collect()
+            for r in spark.read.parquet(paths["file_tallies"]).collect()
         }
-        result.unpersist()
         print(
             json.dumps(
                 {

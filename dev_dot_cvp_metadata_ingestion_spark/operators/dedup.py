@@ -1426,7 +1426,7 @@ def ngram_jaccard_pairs(
     # corpus the driver measured it 2.3× SLOWER and anti-scaling (10.58
     # s @32c vs 5.64 s @8c) — the sort pass buys nothing on posting
     # keys and loses badly where grams are dense. Re-A/B'd on BOTH
-    # corpora (tools/ab_ngram_join.py): realistic 32c hash 2.83 /
+    # corpora (7f66565:tools/ab_ngram_join.py): realistic 32c hash 2.83 /
     # merge 3.44 / unhinted 4.14; realistic 8c hash 5.17 / merge 5.77
     # (32c < 8c restored); sf0.1 hash 1.81 ≈ merge 1.77 — the r15
     # sf0.1 win is retained. AQE skew-split applies to shuffled-hash
@@ -2118,7 +2118,7 @@ def fingerprint_set_jaccard_pairs_capped(
     similarity rides on boilerplate media). Candidate volume is
     bounded by Σ_{{df≤cap}} df² ≤ cap × posting volume — linear at
     fixed cap regardless of skew (measured flat in
-    ``tools/bench_frame_skew.py`` as a planted ubiquitous frame's df
+    ``7f66565:tools/bench_frame_skew.py`` as a planted ubiquitous frame's df
     grows 4×). Returns the same (id_a, id_b, shared, size_a, size_b,
     jaccard) schema as the uncapped form."""
     p = (
@@ -2212,14 +2212,15 @@ def weighted_jaccard_pairs_capped(
     fingerprint cap's device applied to WEIGHTED overlap. The uncapped
     shared-term self-join fans out Σ_t df_block(t)² per block, which a
     realistic Zipf head makes quadratic in block size (measured: 22×
-    time at 10× docs in ``tools/bench_sf1_pairs.py`` — the superlinear
-    surprise the sf1 spot-check exists to catch); here a term whose
-    per-block document frequency exceeds ``max_doc_freq`` generates NO
-    candidates, but every found pair is still scored EXACTLY: hot
-    terms rejoin as small per-doc (term → w) maps (bounded by the
-    block's hot vocabulary — the Zipf HEAD, tiny by definition) and
-    ``map_zip_with`` adds their Σ min back, totals come from the full
-    weight relation, so wjaccard is never approximated. A pair is
+    time at 10× docs in ``7f66565:tools/bench_sf1_pairs.py`` — the
+    superlinear surprise the sf1 spot-check exists to catch); here a
+    term whose per-block document frequency exceeds ``max_doc_freq``
+    generates NO candidates, but every found pair is still scored
+    EXACTLY: hot terms rejoin as small per-doc (term → w) maps
+    (bounded by the block's hot vocabulary — the Zipf HEAD, tiny by
+    definition) and ``map_zip_with`` adds their Σ min back, totals
+    come from the full weight relation, so wjaccard is never
+    approximated. A pair is
     missed only if every term it shares is ubiquitous in its block —
     precisely the stopword-only matches idf down-weights anyway.
     Candidate volume ≤ cap × posting volume, linear at fixed cap.

@@ -375,7 +375,7 @@ def link_prediction(
     — the stop-gram cap's argument). Capped-hinge accounting is the
     companion :func:`hub_cap_report`. With the cap, candidate volume
     is ≤ max_degree × Σ deg — linear in the edge volume at fixed cap
-    regardless of skew (measured flat in ``tools/bench_graph_skew.py``
+    regardless of skew (measured flat in ``7f66565:tools/bench_graph_skew.py``
     as the planted hub quadruples). A capped hinge still APPEARS as an
     endpoint of other nodes' wedges and keeps its true degree in
     deg_a/deg_b — only evidence routed THROUGH it is dropped. The
@@ -718,7 +718,7 @@ def clustering_coefficients(
     wedge intermediate is Σ out-deg² = O(m^1.5) worst case instead of
     Σ deg²: a mirror-farm hub of degree h contributes wedges only
     from its SMALL out-neighbourhood, not C(h, 2) — measured flat in
-    ``tools/bench_graph_skew.py`` as the planted hub quadruples,
+    ``7f66565:tools/bench_graph_skew.py`` as the planted hub quadruples,
     while the naive hinge join grows ~h². Everything shuffles on
     node/pair keys; nothing collected. Returns (id_col, degree,
     triangles, clustering_ppm), one row per node, unordered."""

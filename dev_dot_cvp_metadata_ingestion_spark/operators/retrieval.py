@@ -524,7 +524,7 @@ def rake_keywords(
     ).withColumn("pid", F.sum("is_stop").over(w))
     # members fans out three ways (occ, the plen join, word scores)
     # and its lineage is the corpus tokenize — materialize once
-    # (4 -> 1 corpus scans, audited via tools/plan_audit.py)
+    # (4 -> 1 corpus scans, audited via 7f66565:tools/plan_audit.py)
     members = (
         seg.filter(F.col("is_stop") == 0)
         .select("doc_id", "pid", "pos", "word")
@@ -608,7 +608,7 @@ def phrase_search_topk(
     uniformly-distributed (q_id, doc_id[, start]) — a stop-grade
     phrase term inflates VOLUME linearly but never concentrates a
     key, the same flat-under-skew analysis as bm25_topk
-    (tools/bench_bm25_skew.py). Per-query top-k is the salted
+    (7f66565:tools/bench_bm25_skew.py). Per-query top-k is the salted
     two-phase rank. n_occurrences < 2^31 keeps the double rank
     carrier exact trivially."""
     from ..functions.text import tokens

@@ -79,7 +79,7 @@ def _events_with_file(
     # (1.809 → 2.499 s) — its first heavy stages already exchange by
     # file, so the round-robin is a pure extra shuffle before the real
     # exchange (the exact shape the r15 revenue_by_nation A/B
-    # rejected). Re-A/B'd per consumer (tools/ab_cv_rebalance.py,
+    # rejected). Re-A/B'd per consumer (7f66565:tools/ab_cv_rebalance.py,
     # interleaved min-of-3 at 32c): identity wins or ties on
     # results/tallies/message_metrics/error_histogram/now_token/
     # chunked/gated (e.g. tallies 1.47 vs 1.98, chunked 3.40 vs 3.88);

@@ -1028,7 +1028,7 @@ def _curated_plan(
     r16 before-plan; at 100 TB that is 3+ corpus tokenize passes),
     while the checkpoint pays one tokenize plus one node-local
     materialization. Measured min-of-3 interleaved at sf0.1/32c
-    (tools/ab_curated_pin.py): curated 3.11→2.10, funnel 3.66→1.95,
+    (7f66565:tools/ab_curated_pin.py): curated 3.11→2.10, funnel 3.66→1.95,
     examples 3.58→2.15, shards 3.07→2.10, packed 3.18→1.99.
     ``curate_documents_scoped`` still passes its persist-pin (the
     scoped production pattern with explicit unpersist)."""
@@ -4881,7 +4881,7 @@ def documents_substring_scrubbed(
 
 def _scrub_plan_over(d: DataFrame) -> DataFrame:
     """Substring-scrub plan over a documents frame (doc_id, text) —
-    split out so the skew bench (tools/bench_segment_skew.py) can run
+    split out so the skew bench (7f66565:tools/bench_segment_skew.py) can run
     it over generated corpora."""
     toks = d.select("doc_id", tokens(F.col("text")).alias("t"))
     n = F.size("t")
@@ -5114,54 +5114,6 @@ def corpus_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-
-
-@register("text_bpe_merges")
-def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Learn the first 8 BPE merges from the documents corpus
-    (operators/bpe.py) — tokenizer TRAINING as k declarative rounds
-    over the (word, freq) vocabulary relation. No SQL oracle: the
-    per-round data-dependent argmax-then-rewrite is the iterative
-    class the driver contract exempts; instead the merge sequence is
-    pinned field-for-field against an independent plain-Python BPE
-    implementation in tests/test_bpe.py (and the rows-only driver
-    check covers schema/stability)."""
-    from ..operators.bpe import bpe_merges
-
-    d = load_table(spark, sf_dir, "documents")
-    return bpe_merges(d, k=8)
-
-
-@register("text_bpe_merges_batched")
-def text_bpe_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched BPE training at a realistic merge count: 64 merges in
-    ~4 counting rounds (16 symbol-disjoint winners per round) instead
-    of 64 one-merge jobs — the scale path past ``bpe_merges``'s k ≤ 50
-    plan-growth guard. Same no-oracle class as ``text_bpe_merges``
-    (iterative data-dependent argmax); pinned row-for-row against an
-    independent plain-Python implementation of the identical batched
-    schedule in tests/test_bpe.py, where the batched-vs-sequential
-    divergence semantics are documented."""
-    from ..operators.bpe import bpe_merges_batched
-
-    d = load_table(spark, sf_dir, "documents")
-    return bpe_merges_batched(d, k=64, batch=16)
-
-
-@register("text_bpe_subwords")
-def text_bpe_subwords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The train→apply round trip: learn 8 BPE merges, segment the
-    corpus with them (the learned merge list compiles into one chained
-    fold expression — model parameters become plan constants exactly
-    like the INI rule schemas), and return the top-20 subwords by
-    corpus frequency with fold-derived ranks (no global window).
-    Python-reference-pinned in tests/test_bpe.py; rows-only driver
-    check (the result depends on the learned merges, which SQL can't
-    re-derive)."""
-    from ..operators.bpe import bpe_subword_vocabulary
-
-    d = load_table(spark, sf_dir, "documents")
-    return bpe_subword_vocabulary(d, k=8, top=20)
 
 
 @register(
@@ -6489,7 +6441,7 @@ def embedding_pca_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the full scale argument. No DuckDB oracle: the eigensolve is
     not SQL-expressible; correctness is pinned by the exact
     Python-replica parity + partition-invariance suite
-    (tests/test_pca.py), following the BPE no-oracle convention."""
+    (tests/test_pca.py)."""
     e = load_table(spark, sf_dir, "embeddings")
     return pca_project(e, "vec_id", "embedding", k=4)
 
@@ -9468,7 +9420,7 @@ def dedup_video_frame_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFram
     stay at 1.0 and the mutated copies keep their (n-1)-of-(n+1)
     partial scores, both with the ubiquitous frame correctly counted
     in sizes and intersections — skew insurance with zero scoring
-    approximation, measured flat in ``tools/bench_frame_skew.py``."""
+    approximation, measured flat in ``7f66565:tools/bench_frame_skew.py``."""
     from ..operators.dedup import fingerprint_set_jaccard_pairs_capped
     from ..operators.multimodal import attach_binary, sample_frames
 
@@ -10128,7 +10080,7 @@ def dedup_tfidf_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale note: this exact form's shared-term self-join fans out
     Σ_t df_block(t)² — quadratic in block size under a realistic Zipf
-    head (measured 22× time at 10× docs, tools/bench_sf1_pairs.py);
+    head (measured 22× time at 10× docs, 7f66565:tools/bench_sf1_pairs.py);
     it stays registered as the oracle-exact baseline, and
     ``dedup_tfidf_weighted_jaccard_capped`` is the linear scale
     path."""
@@ -10257,7 +10209,7 @@ def dedup_tfidf_weighted_jaccard_capped(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """``dedup_tfidf_weighted_jaccard`` with the stop-TERM cap — the
-    sf1 spot-check's fix (tools/bench_sf1_pairs.py measured the
+    sf1 spot-check's fix (7f66565:tools/bench_sf1_pairs.py measured the
     uncapped shared-term join at 22× time for 10× docs under a Zipf
     vocabulary; per-block df of the Zipf HEAD ≈ block size, so Σ df²
     bends quadratic). A term hot in its block (per-block df > 10)

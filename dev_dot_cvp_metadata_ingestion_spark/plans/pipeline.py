@@ -16,10 +16,10 @@ no file can change another file's verdicts.
 
 The input is read and parsed, and the rules evaluated, once: ``records``
 and ``validation`` are persisted (lazily, MEMORY_AND_DISK), so the four
-table writes and the tally collect read the cache instead of re-running
-the lineage from the files. The only shuffles are the per-file window
-(sequential) and the per-file aggregates. ``PipelineResult.unpersist``
-releases the cache once the caller is done with the frames.
+table writes read the cache instead of re-running the lineage from the
+files. The only shuffles are the per-file window (sequential) and the
+per-file aggregates. ``PipelineResult.unpersist`` releases the cache
+once the caller is done with the frames.
 """
 
 from __future__ import annotations

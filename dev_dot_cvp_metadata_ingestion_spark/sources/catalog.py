@@ -69,12 +69,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for the SQL API)."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def table_exists(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` holds at least one committed parquet data
     file, resolved through the Hadoop FileSystem API (works for
@@ -966,7 +960,7 @@ def prune_pair_graph_generations(spark: SparkSession, path: str) -> None:
 # merge still SCANS the corpus-sized labels table twice per batch (the
 # endpoint-mapping build and the member relabel — the layout is
 # partitioned by hash(doc_id) only, so there is no cluster-keyed
-# access path to prune either scan). tools/bench_incremental_cc.py
+# access path to prune either scan). 7f66565:tools/bench_incremental_cc.py
 # accordingly measures append time growing with the corpus (~1.7× per
 # corpus doubling — the scan term) while staying 6× and widening under
 # a full recompute (whose CC join work grows much faster);

@@ -24,9 +24,6 @@ AT_RISK = [
     "embedding_kmeans",            # iterative; seeds from corpus
     "ann_ivf_kmeans_topk",         # learned quantizer + probe
     "embedding_label_propagation", # knn join + vote argmax
-    "text_bpe_merges",             # per-round argmax collect loop
-    "text_bpe_merges_batched",     # candidate-window collect loop
-    "text_bpe_subwords",           # train->apply round trip
     "dedup_clusters",              # iterative label propagation
     "dedup_semantic_keep",         # kmeans blocking
     "corpus_profile",              # percentiles per group

@@ -45,8 +45,6 @@ SENSITIVE = [
     "documents_lm_score",    # 3-shuffle train-then-score pipeline
     "corpus_source_overlap", # posting-list pair sweep
     "text_bigram_lm",        # count shuffle + per-context rank
-    "text_bpe_merges",       # iterative argmax rounds (tie-breaks!)
-    "text_bpe_merges_batched",  # snapshot-ranked greedy batch rounds
     "documents_contamination_bloom",  # bitmap bit_or + semi-join probes
     "documents_budget_selected",   # histogram refinement + tie window
     "documents_paragraph_dedup",   # min_by firsts + merge join

@@ -410,10 +410,10 @@ def hive_dir(tmp_path_factory):
 )
 def test_cli_runs_on_hive_style_input(spark, hive_dir, tmp_path, mode, table):
     """The CLI, batch and --streaming, over a year=/month= tree writes
-    the same validation rows the batch pipeline computes. A streamed
-    micro-batch replayed after a crash between its sink and its
-    checkpoint commit rewrites its rows instead of appending them
-    again."""
+    the same validation rows the batch pipeline computes; the batch
+    form prints the per-file tallies it wrote. A streamed micro-batch
+    replayed after a crash between its sink and its checkpoint commit
+    rewrites its rows instead of appending them again."""
     out = str(tmp_path / "out")
     argv = ["--input", hive_dir, "--config", CONFIG, "--output", out,
             "--cores", "2"]
@@ -429,6 +429,7 @@ def test_cli_runs_on_hive_style_input(spark, hive_dir, tmp_path, mode, table):
             cwd=root, capture_output=True, text=True, timeout=600,
         )
         assert proc.returncode == 0, proc.stderr[-4000:]
+        return proc.stdout
 
     key = lambda r: (  # noqa: E731
         r.file_path.split("/")[-1], r.record_uid, r.field_path, r.valid,
@@ -437,15 +438,28 @@ def test_cli_runs_on_hive_style_input(spark, hive_dir, tmp_path, mode, table):
     def written():
         return sorted(map(key, spark.read.parquet(f"{out}/{table}").collect()))
 
-    run_cli()
+    stdout = run_cli()
     got = written()
     ruleset = parse_rules_ini(open(CONFIG).read())
-    expected = sorted(
-        map(key, run_cv_pipeline(spark, hive_dir, ruleset).validation.collect())
-    )
+    res = run_cv_pipeline(spark, hive_dir, ruleset)
+    expected = sorted(map(key, res.validation.collect()))
     assert got == expected
     assert ("p1.json", 3, "metadata.receivedMessageDetails.locationData.latitude",
             False) in got
+
+    if mode == "batch":
+        def files(rows):
+            return {
+                r.file_path: {"total": r.num_messages_total,
+                              "errors": r.num_errors}
+                for r in rows
+            }
+
+        printed = json.loads(stdout.strip().splitlines()[-1])["files"]
+        tallies = files(spark.read.parquet(f"{out}/file_tallies").collect())
+        assert printed == tallies
+        assert tallies == files(res.tallies.collect())
+        assert len(tallies) == 2
 
     if mode == "streaming":
         # the last micro-batch's commit is lost: the restart replays it

@@ -67,9 +67,13 @@ def test_file_lines_ordering_and_numbering(spark, tmp_path):
     # fallback, validator.py:398-400)
     d = tmp_path / "ord"
     d.mkdir()
-    (d / "f.log").write_text("a\n\nb\r\nc\n   \nd\n")
-    # empty and whitespace-only lines are skipped and not counted
-    expect = [(1, "a"), (2, "b"), (3, "c"), (4, "d")]
+    (d / "f.log").write_text(
+        "a\n\nb\r\nc\n   \n\t\n \t \nd\n\x0c\n\te \n"
+    )
+    # empty and whitespace-only lines (any str.isspace() character, as
+    # the reference's strip() tests them) are skipped and not counted;
+    # a line with content keeps its whitespace
+    expect = [(1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "\te ")]
     got = sorted((r.line_no, r.line) for r in file_lines(spark, str(d)).collect())
     assert got == expect
 
