@@ -575,30 +575,6 @@ def validate(
     return reduce(DataFrame.unionByName, outs)
 
 
-def validation_summary(
-    df: DataFrame, ruleset: RuleSet, file_col: str
-) -> DataFrame:
-    """Per-file A2 tallies computed from the WIDE verdicts — no explode,
-    no distinct-counting: one projection computing the per-record
-    invalid count, then a single hash aggregate on the file column.
-    Output: (file, records, num_validations, num_errors,
-    num_error_messages) — the explode-based ``validate`` + regroup path
-    produces identical numbers at rule-count× the row volume.
-    """
-    field = _Fields()
-    details = [rule_details(r, field) for r in ruleset.rules]
-    inv = " + ".join(f"CAST(({d}) IS NOT NULL AS INT)" for d in details)
-    per_record = field.project(
-        with_rec(df, ruleset).selectExpr(f"{_ident(file_col)} AS file", REC)
-    ).selectExpr("file", f"({inv}) AS inv_cnt")
-    return per_record.groupBy("file").agg(
-        F.count(F.lit(1)).alias("records"),
-        (F.count(F.lit(1)) * len(ruleset.rules)).alias("num_validations"),
-        F.sum("inv_cnt").alias("num_errors"),
-        F.sum((F.col("inv_cnt") > 0).cast("long")).alias("num_error_messages"),
-    )
-
-
 # ------------------------------------------------------- list rules
 
 

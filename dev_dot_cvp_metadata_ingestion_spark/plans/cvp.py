@@ -28,6 +28,7 @@ from ..operators.sequential import SequentialSpec, sequential_results
 from ..operators.validation import validate
 from ..sources.catalog import load_table
 from ..sources.rules import parse_rules_ini
+from .pipeline import file_tallies
 from .registry import register
 
 # ------------------------------------------------------------------ events
@@ -557,37 +558,37 @@ def cv_validation_tallies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2/A7: per-file tallies exactly as the reference accumulates them
     (cvp_bucket_event_lambda_handler.py:115-153) — the sequential
     result counts as one extra 'message' whose validations are the
-    sequential check rows. Computed from the WIDE verdicts
-    (validation_summary): one projection + one hash aggregate, no
-    explode, no distinct-count."""
+    sequential check rows."""
     return _tallies_df(spark, sf_dir)
 
 
 def _tallies_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-file tally frame shared by the A2 query and the A5 counters."""
-    from ..operators.validation import validation_summary
-
+    """Per-file tally frame shared by the A2 query and the A5 counters:
+    the pipeline's :func:`file_tallies` over the long validation rows,
+    plus the appended sequential message."""
     d = _events_with_file(spark, sf_dir)
-    f = validation_summary(d, _events_ruleset(), "file")
+    f = file_tallies(
+        validate(d, _events_ruleset(), ["file", "event_id"])
+        .withColumnsRenamed({"file": "file_path", "event_id": "record_uid"})
+    )
     # seq_rows is the error rows, or the one all-pass row
     s = (
         sequential_results(d, _events_seq_spec())
-        .groupBy("file")
+        .groupBy(F.col("file").alias("file_path"))
         .agg(
             F.count(F.lit(1)).alias("seq_rows"),
             F.count_if(~F.col("valid")).alias("seq_errors"),
         )
     )
     seq_err_msg = F.when(F.col("seq_errors") > 0, F.lit(1)).otherwise(F.lit(0))
-    return f.join(s, "file").select(
-        "file",
-        (F.col("records") + 1).alias("num_messages_total"),
+    n_err_msg = F.col("num_error_messages") + seq_err_msg
+    return f.join(s, "file_path").select(
+        F.col("file_path").alias("file"),
+        (F.col("num_messages_total") + 1).alias("num_messages_total"),
         (F.col("num_validations") + F.col("seq_rows")).alias("num_validations"),
         (F.col("num_errors") + F.col("seq_errors")).alias("num_errors"),
-        (F.col("num_error_messages") + seq_err_msg).alias("num_error_messages"),
-        (
-            F.col("records") + 1 - (F.col("num_error_messages") + seq_err_msg)
-        ).alias("num_valid_messages"),
+        n_err_msg.alias("num_error_messages"),
+        (F.col("num_messages_total") + 1 - n_err_msg).alias("num_valid_messages"),
     )
 
 
@@ -953,77 +954,6 @@ def url_decoded_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "events_hourly_windows",
-    oracle="""
-    SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type,
-           count(*) AS n_events,
-           CAST(CAST(sum(CAST(value AS DECIMAL(18,4))) AS DECIMAL(38,6)) AS DOUBLE)
-             AS total_value
-    FROM events
-    GROUP BY 1, 2
-    ORDER BY 1, 2
-    """,
-)
-def events_hourly_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window aggregation (the batch shape of a streaming
-    windowed agg, SURVEY §2.9): per-hour per-type counts and sums."""
-    ev = load_table(spark, sf_dir, "events")
-    from pyspark.sql.types import DecimalType
-
-    return (
-        ev.groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DecimalType(18, 4)))
-            .cast(DecimalType(38, 6))
-            .cast("double")
-            .alias("total_value"),
-        )
-    )
-
-
-@register(
-    "events_props_map",
-    oracle="""
-    SELECT event_type,
-           count(*) AS n_events,
-           CAST(sum(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k,
-           count(*) FILTER (WHERE CAST(props->>'$.k' AS BIGINT) >= 50)
-             AS n_high_k
-    FROM events
-    GROUP BY event_type
-    ORDER BY event_type
-    """,
-)
-def events_props_map(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Map-typed semi-structured access: props JSON parsed into a
-    map<string,long> column, aggregated via element_at — the
-    schema-on-read path for ragged key-value payloads (vs
-    get_json_object's per-key extraction)."""
-    from pyspark.sql.types import LongType, MapType, StringType
-
-    ev = load_table(spark, sf_dir, "events")
-    m = F.from_json("props", MapType(StringType(), LongType()))
-    k = F.element_at(m, "k")
-    return (
-        ev.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("k").alias("sum_k"),
-            F.sum((F.col("k") >= 50).cast("long")).alias("n_high_k"),
-        )
-        .orderBy("event_type")
-    )
-
-
 def _rules_catalog_oracle() -> str:
     """The 43 expected rules_catalog rows as a static VALUES literal,
     generated from fixtures/config_2.ini by tools/gen_rules_oracle.py
@@ -1192,70 +1122,3 @@ def csv_rule_validation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unsorted long form — see cv_validation_results (the sort was
     # 5 s of this query's 9.2 s at sf0.1)
     return validate(rec, ruleset, ["rec_id"])
-
-
-@register(
-    "events_asof_last_signup",
-    oracle="""
-    WITH signups AS (
-      SELECT user_id, ts, event_id FROM events WHERE event_type = 'signup'
-    )
-    SELECT e.event_id, e.user_id,
-           s.event_id AS signup_event_id,
-           strftime(s.ts, '%Y-%m-%d %H:%M:%S.%f') AS signup_ts
-    FROM events e
-    ASOF LEFT JOIN signups s
-      ON e.user_id = s.user_id AND e.ts >= s.ts
-    ORDER BY e.event_id
-    """,
-)
-def events_asof_last_signup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (point-in-time lookup): each event matched to the
-    user's most recent signup at or before it — the union-and-fill
-    composition in operators/joins.py (one shuffle on user_id)."""
-    from ..operators.joins import asof_join
-
-    ev = load_table(spark, sf_dir, "events")
-    signups = ev.filter(F.col("event_type") == "signup").select(
-        "user_id", "ts", "event_id"
-    )
-    joined = asof_join(
-        ev, signups, key_cols=["user_id"], ts_col="ts",
-        value_cols=["event_id", "ts"], suffix="_s",
-    )
-    return joined.select(
-        "event_id",
-        "user_id",
-        F.col("event_id_s").alias("signup_event_id"),
-        F.date_format("ts_s", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("signup_ts"),
-    )
-
-
-@register(
-    "orders_status_pivot",
-    oracle="""
-    SELECT o_orderpriority,
-           count(*) FILTER (WHERE o_orderstatus = 'O') AS n_open,
-           count(*) FILTER (WHERE o_orderstatus = 'F') AS n_filled,
-           count(*) FILTER (WHERE o_orderstatus = 'P') AS n_partial
-    FROM orders
-    GROUP BY o_orderpriority
-    ORDER BY o_orderpriority
-    """,
-)
-def orders_status_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot surface (SURVEY §2.4 engine-side): order counts by
-    priority × status as a wide table."""
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        o.groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["O", "F", "P"])
-        .count()
-        .select(
-            "o_orderpriority",
-            F.coalesce("O", F.lit(0)).alias("n_open"),
-            F.coalesce("F", F.lit(0)).alias("n_filled"),
-            F.coalesce("P", F.lit(0)).alias("n_partial"),
-        )
-        .orderBy("o_orderpriority")
-    )

@@ -4,7 +4,7 @@ the reference's per-file Lambda: directory in → four tables out.
     records     = scan (S3-S4) + provenance + the VARIANT ``rec`` [persisted]
     validation  = rule validation (one compiled SQL select)    [persisted]
     sequential  = ordering checks over records (per-file windows)
-    tallies     = per-file A2 aggregates over validation
+    tallies     = per-file A2 aggregates over validation (file_tallies)
     file_counts = per-file record counts (A1) over records
 
 The metadata documents and CloudWatch counter shapes (A4-A6) come from
@@ -96,6 +96,25 @@ def file_counts(records: DataFrame) -> DataFrame:
     )
 
 
+def file_tallies(validation: DataFrame) -> DataFrame:
+    """A2: per-file tallies over the long validation rows
+    (cvp_bucket_event_lambda_handler.py:115-153): ``file_path``,
+    ``num_messages_total``, ``num_validations``, ``num_errors``,
+    ``num_error_messages`` and ``num_valid_messages``. Every verdict
+    row counts, list-rule rows included."""
+    return validation.groupBy("file_path").agg(
+        F.count_distinct("record_uid").alias("num_messages_total"),
+        F.count(F.lit(1)).alias("num_validations"),
+        F.sum((~F.col("valid")).cast("long")).alias("num_errors"),
+        F.count_distinct(
+            F.when(~F.col("valid"), F.col("record_uid"))
+        ).alias("num_error_messages"),
+    ).withColumn(
+        "num_valid_messages",
+        F.col("num_messages_total") - F.col("num_error_messages"),
+    )
+
+
 def run_cv_pipeline(
     spark: SparkSession,
     input_dir: str,
@@ -147,23 +166,11 @@ def run_cv_pipeline(
         )
     )
 
-    # A2 tallies (cvp_bucket_event_lambda_handler.py:115-153)
-    tallies = validation.groupBy("file_path").agg(
-        F.count_distinct("record_uid").alias("num_messages_total"),
-        F.count(F.lit(1)).alias("num_validations"),
-        F.sum((~F.col("valid")).cast("long")).alias("num_errors"),
-        F.count_distinct(
-            F.when(~F.col("valid"), F.col("record_uid"))
-        ).alias("num_error_messages"),
-    ).withColumn(
-        "num_valid_messages",
-        F.col("num_messages_total") - F.col("num_error_messages"),
-    )
     return PipelineResult(
         records=records,
         validation=validation,
         sequential=sequential,
-        tallies=tallies,
+        tallies=file_tallies(validation),
         file_counts=file_counts(records),
         persisted=(records, validation),
     )

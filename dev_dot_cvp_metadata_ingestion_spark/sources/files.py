@@ -4,9 +4,11 @@ The reference is fed one S3 object per Lambda invocation; here a
 directory (or glob) of objects IS the source, and every per-file
 behavior becomes a column computed from the hidden ``_metadata`` struct:
 
-* S1 event decode  → file discovery; path from ``_metadata.file_path``
-  (URL-unquote applied, matching unquote_plus at
-  bucket_event_lambda_handler.py:18)
+* S1 event decode  → file discovery by listing; the path is
+  ``_metadata.file_path``, a percent-encoded URI, decoded back to the
+  object's key by :func:`wholetext_lines` (the reference's unquote_plus
+  at bucket_event_lambda_handler.py:18, except that ``+`` stays ``+``:
+  a listed name is not form-encoded)
 * S2 object stats  → ``_metadata.file_size`` / ``file_modification_time``
 * S3 gzip sniff    → Spark's text reader decompresses ``.gz`` by
   extension natively; an extensionless gzip object is NOT decompressed
@@ -20,9 +22,9 @@ behavior becomes a column computed from the hidden ``_metadata`` struct:
   (validator.py:419-442)
 
 Scale: file listing is driver-side but parallelized by Spark's
-InMemoryFileIndex; static-prefix filtering (P4) is applied as a
-``pathGlobFilter``/filter on the path column so partition pruning can
-skip directories before any read.
+InMemoryFileIndex. Static-prefix filtering (P4,
+:func:`static_prefix_filter`) is a filter on the path column of rows
+already read, and no CVP path calls it yet.
 """
 
 from __future__ import annotations
@@ -47,7 +49,8 @@ _NON_BLANK = "[^%s]" % "".join(
 def wholetext_lines(text: DataFrame) -> DataFrame:
     """S3+S4 over a ``wholetext`` read, batch or streaming: one row per
     non-blank line of every file, with file provenance columns:
-    (file_path, file_size, file_mtime, line_no, line).
+    (file_path, file_size, file_mtime, line_no, line). ``file_path`` is
+    the object's path as the listing names it, not percent-encoded.
 
     line_no is the 1-based position among the file's non-blank lines —
     the reference's serial_id fallback (validator.py:398-400). Each file
@@ -58,9 +61,12 @@ def wholetext_lines(text: DataFrame) -> DataFrame:
     single file — the same bound the reference's per-object Lambda
     model assumes. A replayed micro-batch reproduces the same numbers.
     """
+    # _metadata.file_path percent-encodes the key; '+' is escaped first
+    # because url_decode would read it as a space
+    path = F.replace(F.col("_metadata.file_path"), F.lit("+"), F.lit("%2B"))
     return (
         text.select(
-            F.col("_metadata.file_path").alias("file_path"),
+            F.url_decode(path).alias("file_path"),
             F.col("_metadata.file_size").alias("file_size"),
             F.col("_metadata.file_modification_time").alias("file_mtime"),
             F.posexplode(

@@ -13,8 +13,11 @@ Here the file-source stream replaces SNS discovery:
   functions (``wholetext_lines``, ``cv_records``).
 * Checkpointing gives at-least-once with an idempotent sink —
   equivalent to the reference's retry-and-reindex behavior
-  (bucket_event_lambda_handler.py:99); :func:`dedup_stream` drops a
-  second delivery of the same object.
+  (bucket_event_lambda_handler.py:99). The file source's log records
+  every path it has taken, so a second delivery of the same object
+  starts no micro-batch. That holds for a rewrite with new content
+  too: unlike the reference, which runs again on every ObjectCreated
+  event, the stream never validates the new bytes.
 
 Scale: each micro-batch is an independent batch plan over a bounded
 file set; state never accumulates across files, so the stream runs
@@ -73,24 +76,6 @@ def stream_cv_pipeline(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def dedup_stream(
-    stream: DataFrame,
-    keys: list[str],
-    ts_col: str,
-    lateness: str = "1 hour",
-) -> DataFrame:
-    """Streaming dedup with bounded state: drop re-deliveries of the
-    same key (e.g. S3 duplicate ObjectCreated events — the improvement
-    over the reference's blind re-index on retry,
-    bucket_event_lambda_handler.py:99). State per key is retained only
-    within the watermark horizon, so memory is bounded by arrival-time
-    spread, not stream history — ``dropDuplicates`` without a
-    watermark would grow state forever."""
-    return stream.withWatermark(ts_col, lateness).dropDuplicatesWithinWatermark(
-        keys
-    )
 
 
 def idempotent_parquet_sink(out_dir: str):

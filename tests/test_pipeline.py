@@ -23,7 +23,10 @@ from dev_dot_cvp_metadata_ingestion_spark.sources.rules import (
     fixture_rules_path,
     parse_rules_ini,
 )
-from dev_dot_cvp_metadata_ingestion_spark.streaming.stream import stream_cv_pipeline
+from dev_dot_cvp_metadata_ingestion_spark.streaming.stream import (
+    idempotent_parquet_sink,
+    stream_cv_pipeline,
+)
 
 CONFIG = fixture_rules_path()
 
@@ -117,6 +120,60 @@ def test_streaming_matches_batch(spark, ndjson_dir, tmp_path):
         for r in batch.validation.collect()
     )
     assert sorted(collected) == expected
+
+
+def test_stream_takes_each_object_once(spark, tmp_path):
+    """A second drain on the same checkpoint takes only the objects the
+    file source has not logged: an object delivered again with the same
+    bytes and a newer mtime starts no micro-batch, so each file's rows
+    appear once under the idempotent sink."""
+    ruleset = parse_rules_ini(open(CONFIG).read())
+    src = tmp_path / "src"
+    src.mkdir()
+
+    def put(name, n):
+        with open(src / name, "w") as fh:
+            for i in range(n):
+                fh.write(json.dumps(_record(i, bad_lat=(i == 1))) + "\n")
+
+    out = str(tmp_path / "out")
+
+    def drain():
+        q = stream_cv_pipeline(
+            spark, str(src), ruleset, None, idempotent_parquet_sink(out),
+            str(tmp_path / "ckpt"), available_now=True,
+        )
+        assert q.awaitTermination(120), "availableNow drain timed out"
+        return {
+            r.batch_id: r.file_path.split("/")[-1]
+            for r in spark.read.parquet(out)
+            .select("batch_id", "file_path").distinct().collect()
+        }
+
+    put("a.json", 3)
+    put("b.json", 2)
+    first = drain()
+    assert sorted(first.values()) == ["a.json", "b.json"]
+
+    again = src / "a.json"
+    again.write_bytes(again.read_bytes())
+    mtime = again.stat().st_mtime + 60
+    os.utime(again, (mtime, mtime))
+    put("c.json", 4)
+    second = drain()
+    assert {b: f for b, f in second.items() if b not in first} == {
+        max(first) + 1: "c.json"
+    }
+
+    key = lambda r: (  # noqa: E731
+        r.file_path.split("/")[-1], r.record_uid, r.field_path, r.valid,
+    )
+    got = sorted(map(key, spark.read.parquet(out).collect()))
+    batch = run_cv_pipeline(spark, str(src), ruleset)
+    try:
+        assert got == sorted(map(key, batch.validation.collect()))
+    finally:
+        batch.unpersist()
 
 
 def test_plan_build_launches_no_job(spark, ndjson_dir):

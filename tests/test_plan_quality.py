@@ -132,24 +132,6 @@ def test_bucketed_join_no_shuffle(spark):
         spark.sql("DROP TABLE IF EXISTS b_orders")
 
 
-def test_salted_join_matches_plain_join(spark):
-    from dev_dot_cvp_metadata_ingestion_spark.operators.joins import salted_join
-    from dev_dot_cvp_metadata_ingestion_spark.sources.catalog import load_table
-
-    li = load_table(spark, SF_SMOKE, "lineitem").select("l_orderkey", "l_quantity")
-    orders = load_table(spark, SF_SMOKE, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    plain = li.join(orders, "l_orderkey").groupBy().agg(
-        F.count(F.lit(1)).alias("n"), F.sum("o_totalprice").alias("s")
-    ).collect()[0]
-    salted = salted_join(li, orders, "l_orderkey", n_salts=8).groupBy().agg(
-        F.count(F.lit(1)).alias("n"), F.sum("o_totalprice").alias("s")
-    ).collect()[0]
-    assert plain.n == salted.n
-    assert abs(plain.s - salted.s) < 1e-6 * abs(plain.s)
-
-
 def test_documents_split_is_map_side(spark):
     # the split assignment must be a pure projection over the scan —
     # the only exchange allowed is the final presentation sort
@@ -259,26 +241,6 @@ def test_topk_k_guard_is_a_real_exception(spark):
         topk_ranked(df, cos_col="cos", id_col="doc_id", k=10_001)
 
 
-def test_salted_join_maptype_safe(spark):
-    """VERDICT r4 item 6: salting hashes only hash-safe columns, so a
-    MapType column on the big side must not break analysis (F.hash
-    rejects maps) and must not change the join result."""
-    from dev_dot_cvp_metadata_ingestion_spark.operators.joins import salted_join
-
-    big = spark.range(100).select(
-        (F.col("id") % 3).alias("k"),
-        F.col("id").alias("v"),
-        F.create_map(F.lit("a"), F.col("id")).alias("m"),
-    )
-    small = spark.createDataFrame([(0, "x"), (1, "y")], ["k", "tag"])
-    out = salted_join(big, small, "k", n_salts=4)
-    plain = big.join(small, "k")
-    assert out.count() == plain.count()
-    assert sorted(r.v for r in out.select("v").collect()) == sorted(
-        r.v for r in plain.select("v").collect()
-    )
-
-
 def test_fingerprints_hash_derived_once(spark):
     """The winnowing pipeline must compute the gram-hash array exactly
     once per row. Two past regressions pinned here: (1) a fused Column
@@ -328,7 +290,7 @@ PER_ROW_OUTPUT = [
     "documents_lm_score", "text_bigram_lm", "documents_classifier_score",
     "embedding_kmeans", "cv_validation_results", "cv_validation_tallies",
     "cv_error_histogram", "file_metadata_docs", "file_metrics_counters",
-    "url_decoded_keys", "events_hourly_windows", "events_asof_last_signup",
+    "url_decoded_keys",
     "cv_message_metrics", "csv_rule_validation", "cv_sequential_checks",
     "documents_perplexity_buckets", "documents_repeated_substrings",
     "documents_substring_dup_stats", "documents_substring_scrubbed",

@@ -1,5 +1,5 @@
-"""Source-layer tests: gzip transparency (S3), header audit (S6),
-NDJSON provenance (S2/S5)."""
+"""Source-layer tests: gzip transparency and decoded object keys
+(S1/S3), header audit (S6), NDJSON provenance (S2/S5)."""
 
 from __future__ import annotations
 
@@ -27,15 +27,25 @@ def test_gzip_transparent_read(spark, tmp_path):
     (d / "plain.json").write_bytes(payload)
     with gzip.open(d / "compressed.json.gz", "wb") as fh:
         fh.write(payload)
+    # keys with a space, a '+', an escape-like '%41' and a non-ASCII
+    # letter come out as the listing names them, not percent-encoded
+    odd = ["dir=x y/a b+c%41.json", "é dir/x%2By+z.json"]
+    for name in odd:
+        (d / name).parent.mkdir()
+        (d / name).write_bytes(payload)
+    names = ["plain.json", "compressed.json.gz", *odd]
+
+    def key(file_path):
+        return file_path.split(f"{d}/", 1)[1]
 
     lines = file_lines(spark, str(d))
     per_file = {
-        r.file_path.split("/")[-1]: r.n
+        key(r.file_path): r.n
         for r in lines.groupBy("file_path")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    assert per_file == {"plain.json": 5, "compressed.json.gz": 5}
+    assert per_file == {name: 5 for name in names}
 
     ruleset = parse_rules_ini(
         "[_settings]\nDataType = json\nSequential = False\n\n"
@@ -44,7 +54,7 @@ def test_gzip_transparent_read(spark, tmp_path):
     result = run_cv_pipeline(spark, str(d), ruleset)
     try:
         got = {
-            (r.file_path.split("/")[-1], r.record_uid, r.a, r.b)
+            (key(r.file_path), r.record_uid, r.a, r.b)
             for r in result.records.selectExpr(
                 "file_path",
                 "record_uid",
@@ -56,9 +66,7 @@ def test_gzip_transparent_read(spark, tmp_path):
         result.unpersist()
     # identical record content from both codecs
     assert got == {
-        (name, i + 1, i, f"x{i}")
-        for name in ("plain.json", "compressed.json.gz")
-        for i in range(5)
+        (name, i + 1, i, f"x{i}") for name in names for i in range(5)
     }
 
 

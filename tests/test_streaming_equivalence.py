@@ -72,69 +72,3 @@ def test_cv_sequential_checks_stream_equals_batch(spark, events, tmp_path):
     )
     assert len(expected) > 1000  # real query scale, not a fixture
     assert sorted(collected) == expected
-
-
-def test_streaming_dedup_matches_batch_distinct(spark, tmp_path):
-    """Corpus dedup decomposes over micro-batches: streaming the sf0.01
-    documents in 4 chunks through dropDuplicatesWithinWatermark on the
-    content fingerprint yields exactly the batch distinct-fingerprint
-    set — cross-batch re-deliveries of a fingerprint are dropped by
-    state, same-batch duplicates by the batch plan."""
-    from dev_dot_cvp_metadata_ingestion_spark.functions.text import (
-        content_fingerprint,
-    )
-    from dev_dot_cvp_metadata_ingestion_spark.sources.catalog import load_table
-    from dev_dot_cvp_metadata_ingestion_spark.streaming.stream import (
-        dedup_stream,
-    )
-
-    base = load_table(spark, SF_DIR, "documents")
-    # sf0.01 has no exact duplicates — re-deliver every document once
-    # (shifted ids, identical text) so each fingerprint arrives twice,
-    # in DIFFERENT micro-batches (originals fill chunks 0-1, copies
-    # chunks 2-3): the dedup must happen in cross-batch state
-    n0 = base.count()
-    docs = base.unionByName(
-        base.withColumn("doc_id", F.col("doc_id") + 2 * n0)
-    ).select(
-        "doc_id",
-        content_fingerprint(F.col("text")).alias("fingerprint"),
-        F.timestamp_micros(F.col("doc_id")).alias("ts"),
-    )
-    src = tmp_path / "dedup_docs"
-    src.mkdir()
-    n = docs.count()
-    hi = 3 * n0  # ids span [0, n0) and [2*n0, 3*n0)
-    step = (hi + 3) // 4
-    for i in range(4):
-        docs.filter(
-            (F.col("doc_id") >= i * step) & (F.col("doc_id") < (i + 1) * step)
-        ).coalesce(1).write.parquet(str(src / f"chunk_{i}"))
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(src))
-    )
-    out = dedup_stream(stream, ["fingerprint"], "ts", lateness="1 hour")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_docs_eq")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_c"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300), "availableNow drain timed out"
-
-    got = [
-        r.fingerprint
-        for r in spark.sql("select fingerprint from dedup_docs_eq").collect()
-    ]
-    expected = [
-        r.fingerprint
-        for r in docs.select("fingerprint").distinct().collect()
-    ]
-    assert len(expected) < n  # the corpus really contains duplicates
-    assert sorted(got) == sorted(expected)

@@ -100,36 +100,3 @@ def test_idempotent_sink_absorbs_replay(spark, tmp_path):
     back = spark.read.parquet(out)
     assert back.count() == 3
     assert back.filter(F.col("batch_id") == 0).count() == 2
-
-
-def test_dedup_stream_drops_cross_batch_redeliveries(spark, tmp_path):
-    from dev_dot_cvp_metadata_ingestion_spark.streaming.stream import (
-        dedup_stream,
-    )
-
-    src = tmp_path / "dedup_src"
-    src.mkdir()
-    # batch 0: two distinct keys; batch 1: re-delivery of key "a"
-    # (same event, later arrival) plus a new key
-    _write_batch(spark, src, 0, [(0, 10, "a"), (0, 11, "b")])
-    _write_batch(spark, src, 1, [(0, 12, "a"), (0, 13, "c")])
-
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(str(src))
-    )
-    out = dedup_stream(stream, ["event_type"], "ts", lateness="1 hour")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_d"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300), "availableNow drain timed out"
-
-    rows = [r.event_type for r in spark.sql("select * from dedup_out").collect()]
-    assert sorted(rows) == ["a", "b", "c"]  # the re-delivered "a" dropped

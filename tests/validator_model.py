@@ -1,13 +1,12 @@
 """Plain-Python model of the reference's field validation (SURVEY §1.2,
-§2.2 P5-P13; odevalidator/validator.py:83-400) and of its S3 event
-decode (SURVEY §2.1 S1, §2.8; bucket_event_lambda_handler.py:14-26).
+§2.2 P5-P13; odevalidator/validator.py:83-400).
 
 It is written in the reference's imperative shape, one record at a
 time: parse the INI into one Field per section (validator.py:262-292),
 expand every ``.list`` section over the record's actual list elements
 (validator.py:304-378), then ask each Field for its verdict
 (validator.py:83-243). It never imports the engine, so tests can pin
-``operators.validation`` and ``sources.events`` to it.
+``operators.validation`` to it.
 
 Message strings follow the module docstring of
 ``operators/validation.py`` and SURVEY §1.2/§2.2; the conditional
@@ -31,7 +30,6 @@ import re
 from configparser import ConfigParser, ExtendedInterpolation, SectionProxy
 from datetime import datetime, timedelta, timezone
 from decimal import Decimal, InvalidOperation
-from urllib.parse import unquote_plus
 
 import dateutil.parser
 
@@ -41,14 +39,6 @@ TYPE_TIMESTAMP = "timestamp"
 TYPE_CHOICE = "choice"
 
 VALID = (True, "")
-
-
-def decode_event(event: dict) -> tuple[str, str]:
-    """S1: the SNS message wraps an S3 event; its first record names the
-    bucket and the URL-quoted key (bucket_event_lambda_handler.py:14-26)."""
-    message = json.loads(event["Records"][0]["Sns"]["Message"])
-    s3 = message["Records"][0]["s3"]
-    return s3["bucket"]["name"], unquote_plus(s3["object"]["key"])
 
 
 def field_value(path: str, record):
