@@ -4,42 +4,55 @@ The reference sorts a file's records by serialNumber, groups them into
 bundles = maximal CONTIGUOUS runs of equal bundleId (not groups — a
 bundleId reappearing later starts a new bundle, sequential.py:89-110),
 then checks per-bundle monotonicity and size consistency
-(sequential.py:28-86). Here that becomes pure window algebra:
+(sequential.py:28-86). Here that becomes window SQL. Like the rules
+(operators/validation.py), the checks are SQL text built driver-side in
+pure Python: one ``selectExpr`` projects the fields a
+:class:`SequentialSpec` binds, and one ``spark.sql`` statement over it,
+a chain of CTEs over named ``WINDOW``s, computes W1-W8.
 
-* W1 sort      → Window.partitionBy(file).orderBy(serialNumber)
-* W2 bundling  → lag(bundleId) change-detection + running sum
-* W3/W4        → lag(recordId)/lag(serialNumber) increment checks
+* W1 sort      → every window orders by serial number within ``file``
+* W2 bundling  → lag(bid) change detection + running sum → ``grp``
+* W3/W4        → lag(rid)/lag(sn) increment checks
 * W5           → second-truncated timestamp regression via lag
-* W6           → windowed first/last/count per bundle; the reference's
+* W6           → first/last/count per bundle; the reference's
                  "previous errored bundleSize" dedup is exactly a
                  last-over-preceding-QUALIFYING-rows window (see below)
 * W7 skip-set  → per-record skip flags (from the rule compiler) OR-ed
-                 per file via a window max — the reference's skip set is
-                 per-file state (validator.py:110-112)
+                 per file by a window ``bool_or`` — the reference's skip
+                 set is per-file state (validator.py:110-112)
 * W8 all-pass  → emitted inline: a per-file windowed error count lets
                  the first row of an error-free file emit the synthetic
                  SequentialCheck row (sequential.py:22-25)
 
 Physical shape — ONE pass, by construction: a single hash shuffle on
-``file``; every window partitions by (file) or (file, bundle_grp) — a
-superset of the file clustering, so Spark re-sorts in place without a
-second exchange; all six checks plus the all-pass row are emitted from
-one explode of per-row verdict structs (no unions, no joins, no
-re-evaluated lineage). At 1000 executors this is shuffle-minimal: the
-file with the most records bounds a partition, never the corpus.
+``file``; every window partitions by (file) or (file, grp) — a superset
+of the file clustering, so Spark re-sorts in place without a second
+exchange; all six checks plus the all-pass row are emitted from one
+explode of per-row verdict structs (no unions, no joins). The file with
+the most records bounds a partition, never the corpus.
 
 Replicated message formats (incl. the reference's 'bundlSize' typo,
 sequential.py:43-49, 77, 84). Timestamps render as Python str() of an
 aware UTC datetime ('YYYY-MM-DD HH:MM:SS+00:00') after second
-truncation (sequential.py:32-40).
+truncation (sequential.py:32-40). ``prev + 1`` and ``bundleSize - 1``
+are computed in DECIMAL(20,0), as exactly as Python ints: an id at the
+end of the BIGINT range compares and prints right instead of
+overflowing, which under ANSI mode would abort the whole sweep.
+
+Deviation: a record timestamp that does not parse reads as NULL
+(``try_to_timestamp``), so its W5 comparisons emit nothing; its
+timestamp rule still reports it. In the reference, dateutil raises and
+that object's Lambda fails.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field as dc_field
 
-from pyspark.sql import Column, DataFrame, Window as W
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from ..sources.rules import RuleSet
+from .validation import REC, _lit, skip_flag_exprs
 
 SEQUENTIAL_CHECK = "SequentialCheck"
 
@@ -48,238 +61,243 @@ PATH_SERIAL_NUMBER = "metadata.serialId.serialNumber"
 PATH_GENERATED_AT = "metadata.recordGeneratedAt"
 PATH_RECEIVED_AT = "metadata.odeReceivedAt"
 PATH_BUNDLE_SIZE = "metadata.serialId.bundleSize"
+PATH_BUNDLE_ID = "metadata.serialId.bundleId"
+PATH_LOG_FILE_NAME = "metadata.logFileName"
 
 
 @dataclass
 class SequentialSpec:
-    """Column bindings for the sequential validator."""
+    """SQL expressions, over the input frame's columns, for the fields
+    the sequential validator reads."""
 
-    file: Column
-    bundle_id: Column
-    serial_number: Column
-    record_id: Column
-    bundle_size: Column
-    record_generated_at: Column  # timestamp (already parsed)
-    ode_received_at: Column
-    has_log_file_name: Column  # bool: 'logFileName' present in metadata
-    # per-record skip flags keyed by reference rule path (W7); OR-ed
-    # per file before gating
-    skip_flags: dict[str, Column] = dc_field(default_factory=dict)
+    file: str
+    bundle_id: str
+    serial_number: str
+    record_id: str
+    bundle_size: str
+    record_generated_at: str  # timestamp (already parsed)
+    ode_received_at: str
+    has_log_file_name: str  # boolean: 'logFileName' present in metadata
+    # per-record boolean skip flags keyed by reference rule path (W7);
+    # OR-ed per file before gating
+    skip_flags: dict[str, str] = dc_field(default_factory=dict)
 
 
-def _ts_str(col: Column) -> Column:
+def _get(path: str, type_: str = "bigint") -> str:
+    # NULL when absent, a JSON null, or not of the type
+    return f"try_variant_get({REC}, '$.{path}', '{type_}')"
+
+
+def _timestamp(path: str) -> str:
+    # NULL when the text does not parse (see the module docstring)
+    return f"try_to_timestamp(regexp_replace({_get(path, 'string')}, 'Z$', '+00:00'))"
+
+
+def record_spec(ruleset: RuleSet) -> SequentialSpec:
+    """The bindings for records held in the VARIANT ``rec`` with their
+    object's path in ``file_path`` (plans/pipeline.py:cv_records), and
+    the ruleset's skip flags."""
+    return SequentialSpec(
+        file="file_path",
+        bundle_id=_get(PATH_BUNDLE_ID),
+        serial_number=_get(PATH_SERIAL_NUMBER),
+        record_id=_get(PATH_RECORD_ID),
+        bundle_size=_get(PATH_BUNDLE_SIZE),
+        record_generated_at=_timestamp(PATH_GENERATED_AT),
+        ode_received_at=_timestamp(PATH_RECEIVED_AT),
+        has_log_file_name=f"{_get(PATH_LOG_FILE_NAME, 'string')} IS NOT NULL",
+        skip_flags=skip_flag_exprs(ruleset),
+    )
+
+
+def _exact(expr: str, delta: str) -> str:
+    # BIGINT ± 1 without overflow
+    return f"(CAST({expr} AS DECIMAL(20,0)) {delta})"
+
+
+def _ts_str(col: str) -> str:
     # Python str() of a second-truncated aware-UTC datetime
-    return F.concat(F.date_format(col, "yyyy-MM-dd HH:mm:ss"), F.lit("+00:00"))
+    return f"concat(date_format({col}, 'yyyy-MM-dd HH:mm:ss'), '+00:00')"
 
 
-def _windowed_checks(df: DataFrame, spec: SequentialSpec):
-    """The window stage: returns (d, checks) where ``d`` carries all
-    lag/first/last/count/skip columns plus the per-file error count, and
-    ``checks`` is the list of (field_path, serial_col, emit_cond,
-    details) tuples for W3-W6."""
-    d = df.select(
-        spec.file.alias("file"),
-        spec.bundle_id.cast("long").alias("bid"),
-        spec.serial_number.cast("long").alias("sn"),
-        spec.record_id.cast("long").alias("rid"),
-        spec.bundle_size.cast("long").alias("bs"),
-        F.date_trunc("second", spec.record_generated_at).alias("gen"),
-        F.date_trunc("second", spec.ode_received_at).alias("recv"),
-        spec.has_log_file_name.alias("has_logf"),
+def _message(text: str, *args: str) -> str:
+    return f"format_string({_lit(text)}, {', '.join(args)})"
+
+
+# (field_path, serial number, emit condition, details) for W3-W6
+_CHECKS = [
+    (
+        PATH_RECORD_ID,
+        "sn",
+        f"prev_sn IS NOT NULL AND NOT skip_rid AND bs > 1 "
+        f"AND rid <> {_exact('prev_rid', '+ 1')}",
+        _message(
+            "Detected incorrectly incremented recordId. "
+            "Expected recordId '%s' but got '%d'",
+            f"CAST({_exact('prev_rid', '+ 1')} AS STRING)", "rid",
+        ),
+    ),
+    (
+        PATH_SERIAL_NUMBER,
+        "sn",
+        f"prev_sn IS NOT NULL AND NOT skip_sn AND sn <> {_exact('prev_sn', '+ 1')}",
+        _message(
+            "Detected incorrectly incremented serialNumber. "
+            "Expected serialNumber '%s' but got '%d'",
+            f"CAST({_exact('prev_sn', '+ 1')} AS STRING)", "sn",
+        ),
+    ),
+    (
+        PATH_GENERATED_AT,
+        "sn",
+        "prev_sn IS NOT NULL AND NOT skip_gen AND gen < prev_gen",
+        _message(
+            "Detected non-chronological recordGeneratedAt. Previous "
+            "timestamp was '%s' but current timestamp is '%s'",
+            _ts_str("prev_gen"), _ts_str("gen"),
+        ),
+    ),
+    (
+        PATH_RECEIVED_AT,
+        "sn",
+        "prev_sn IS NOT NULL AND NOT skip_recv AND recv < prev_recv",
+        _message(
+            "Detected non-chronological odeReceivedAt. Previous "
+            "timestamp was '%s' but current timestamp is '%s'",
+            _ts_str("prev_recv"), _ts_str("recv"),
+        ),
+    ),
+    (
+        PATH_BUNDLE_SIZE,
+        "last_sn",
+        "qual_full AND (prev_qbs_full IS NULL OR prev_qbs_full <> bs)",
+        _message(
+            "bundleSize doesn't match number of records. "
+            "Number of records: '%d' != bundlSize: '%d'",
+            "cnt", "bs",
+        ),
+    ),
+    (
+        PATH_BUNDLE_SIZE,
+        "last_sn",
+        "qual_tail AND (prev_qbs_tail IS NULL OR prev_qbs_tail <> bs)",
+        _message(
+            "bundleSize doesn't match last recordId. "
+            "Last recordId: '%d' != (bundleSize-1: '%s')",
+            "last_rid", f"CAST({_exact('bs', '- 1')} AS STRING)",
+        ),
+    ),
+]
+
+
+def _verdict(path: str, sn: str, valid: str, emit: str, details: str) -> str:
+    return (
+        f"named_struct('field_path', {_lit(path)}, 'serial_number', {sn}, "
+        f"'valid', {valid}, 'emit', {emit}, 'details', {details})"
+    )
+
+
+# W7: the checks a skip flag can gate, by the short name of its columns
+_SKIPPABLE = {
+    PATH_RECORD_ID: "rid",
+    PATH_SERIAL_NUMBER: "sn",
+    PATH_GENERATED_AT: "gen",
+    PATH_RECEIVED_AT: "recv",
+    PATH_BUNDLE_SIZE: "bs",
+}
+
+
+def _sequential_sql() -> str:
+    """The W1-W8 statement over the view ``{d}`` of the fields that
+    :func:`sequential_results` projects."""
+    # W7: any record meeting a skip condition disables that check for
+    # the whole file
+    file_skips = ",\n    ".join(
+        f"coalesce(bool_or(flag_{c}) OVER wf_all, false) AS skip_{c}"
+        for c in _SKIPPABLE.values()
+    )
+    err_cnt = " + ".join(
+        f"CAST(coalesce({cond}, false) AS INT)" for _, _, cond, _ in _CHECKS
+    )
+    verdicts = ",\n    ".join([
         *[
-            flag.cast("boolean").alias(f"_skip_{i}")
-            for i, flag in enumerate(spec.skip_flags.values())
+            _verdict(path, f"CASE WHEN {cond} THEN {sn} END", "false", cond, details)
+            for path, sn, cond, details in _CHECKS
         ],
-    )
-    skip_names = {p: f"_skip_{i}" for i, p in enumerate(spec.skip_flags)}
-
-    w_file = W.partitionBy("file").orderBy("sn")
-    w_file_all = W.partitionBy("file").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-
-    # W2: contiguous-run bundling
-    prev_bid = F.lag("bid").over(w_file)
-    d = d.withColumn(
-        "grp",
-        F.sum(
-            (prev_bid.isNull() | (prev_bid != F.col("bid"))).cast("int")
-        ).over(w_file.rowsBetween(W.unboundedPreceding, W.currentRow)),
-    ).withColumn("rn_file", F.row_number().over(w_file))
-
-    # W7: per-file skip gating (any record meeting a skip condition
-    # disables that check for the whole file)
-    def file_skip(path: str) -> Column:
-        name = skip_names.get(path)
-        if name is None:
-            return F.lit(False)
-        return F.coalesce(
-            F.max(F.col(name).cast("int")).over(w_file_all) == 1, F.lit(False)
-        )
-
-    # W3-W6 run per bundle: every window below partitions by
-    # (file, grp), a superset of the file clustering above
-    w_b = W.partitionBy("file", "grp").orderBy("sn")
-    w_b_all = W.partitionBy("file", "grp").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    w_b_before = W.partitionBy("file", "grp").orderBy("sn").rowsBetween(
-        W.unboundedPreceding, -1
-    )
-
-    d = (
-        d.withColumn("prev_rid", F.lag("rid").over(w_b))
-        .withColumn("prev_sn", F.lag("sn").over(w_b))
-        .withColumn("prev_gen", F.lag("gen").over(w_b))
-        .withColumn("prev_recv", F.lag("recv").over(w_b))
-        .withColumn("first_rid", F.first("rid").over(w_b_all))
-        .withColumn("last_rid", F.last("rid").over(w_b_all))
-        .withColumn("first_bs", F.first("bs").over(w_b_all))
-        .withColumn("last_sn", F.last("sn").over(w_b_all))
-        .withColumn("cnt", F.count(F.lit(1)).over(w_b_all))
-        .withColumn("skip_rid", file_skip(PATH_RECORD_ID))
-        .withColumn("skip_sn", file_skip(PATH_SERIAL_NUMBER))
-        .withColumn("skip_gen", file_skip(PATH_GENERATED_AT))
-        .withColumn("skip_recv", file_skip(PATH_RECEIVED_AT))
-        .withColumn("skip_bs", file_skip(PATH_BUNDLE_SIZE))
-    )
-
-    # W6 qualification (sequential.py:61-86). The reference emits one
-    # error per run of equal bundleSize among qualifying records: its
-    # prev_bundle_size tracker always equals the bundleSize of the
-    # previous QUALIFYING record, so the dedup is a last() over the
-    # preceding qualifying rows.
-    is_full_shape = (F.col("first_rid") == 0) & (
-        F.col("last_rid") == F.col("first_bs") - 1
-    )
-    qual_full = (
-        is_full_shape
-        & F.col("has_logf")
-        & (F.col("cnt") != F.col("bs"))
-        & ~F.col("skip_bs")
-    )
-    qual_tail = (
-        (F.col("first_rid") != 0)
-        & (F.col("last_rid") != F.col("bs") - 1)
-        & ~F.col("skip_bs")
-    )
-    d = (
-        d.withColumn("qual_full", qual_full)
-        .withColumn("qual_tail", qual_tail)
-        .withColumn(
-            "prev_qbs_full",
-            F.last(F.when(F.col("qual_full"), F.col("bs")), ignorenulls=True).over(
-                w_b_before
-            ),
-        )
-        .withColumn(
-            "prev_qbs_tail",
-            F.last(F.when(F.col("qual_tail"), F.col("bs")), ignorenulls=True).over(
-                w_b_before
-            ),
-        )
-    )
-
-    has_prev = F.col("prev_sn").isNotNull()
-    checks: list[tuple[str, Column, Column, Column]] = [
-        # (field_path, serial_number, emit condition, details)
-        (
-            PATH_RECORD_ID,
-            F.col("sn"),
-            has_prev
-            & ~F.col("skip_rid")
-            & (F.col("bs") > 1)
-            & (F.col("rid") != F.col("prev_rid") + 1),
-            F.format_string(
-                "Detected incorrectly incremented recordId. "
-                "Expected recordId '%d' but got '%d'",
-                F.col("prev_rid") + 1,
-                F.col("rid"),
-            ),
-        ),
-        (
-            PATH_SERIAL_NUMBER,
-            F.col("sn"),
-            has_prev & ~F.col("skip_sn") & (F.col("sn") != F.col("prev_sn") + 1),
-            F.format_string(
-                "Detected incorrectly incremented serialNumber. "
-                "Expected serialNumber '%d' but got '%d'",
-                F.col("prev_sn") + 1,
-                F.col("sn"),
-            ),
-        ),
-        (
-            PATH_GENERATED_AT,
-            F.col("sn"),
-            has_prev & ~F.col("skip_gen") & (F.col("gen") < F.col("prev_gen")),
-            F.format_string(
-                "Detected non-chronological recordGeneratedAt. Previous "
-                "timestamp was '%s' but current timestamp is '%s'",
-                _ts_str(F.col("prev_gen")),
-                _ts_str(F.col("gen")),
-            ),
-        ),
-        (
-            PATH_RECEIVED_AT,
-            F.col("sn"),
-            has_prev & ~F.col("skip_recv") & (F.col("recv") < F.col("prev_recv")),
-            F.format_string(
-                "Detected non-chronological odeReceivedAt. Previous "
-                "timestamp was '%s' but current timestamp is '%s'",
-                _ts_str(F.col("prev_recv")),
-                _ts_str(F.col("recv")),
-            ),
-        ),
-        (
-            PATH_BUNDLE_SIZE,
-            F.col("last_sn"),
-            F.col("qual_full")
-            & (
-                F.col("prev_qbs_full").isNull()
-                | (F.col("prev_qbs_full") != F.col("bs"))
-            ),
-            F.format_string(
-                "bundleSize doesn't match number of records. "
-                "Number of records: '%d' != bundlSize: '%d'",
-                F.col("cnt"),
-                F.col("bs"),
-            ),
-        ),
-        (
-            PATH_BUNDLE_SIZE,
-            F.col("last_sn"),
-            F.col("qual_tail")
-            & (
-                F.col("prev_qbs_tail").isNull()
-                | (F.col("prev_qbs_tail") != F.col("bs"))
-            ),
-            F.format_string(
-                "bundleSize doesn't match last recordId. "
-                "Last recordId: '%d' != (bundleSize-1: '%d')",
-                F.col("last_rid"),
-                F.col("bs") - 1,
-            ),
-        ),
-    ]
-    d = d.withColumn(
-        "file_err_cnt", F.sum(_row_error_count(checks)).over(w_file_all)
-    )
-    return d, checks
+        _verdict(SEQUENTIAL_CHECK, "CAST(NULL AS BIGINT)", "true",
+                 "file_err_cnt = 0 AND rn_file = 1", "''"),
+    ])
+    return f"""
+-- W2: contiguous-run bundling. W3-W6 run per bundle: every window on
+-- (file, grp) is a superset of the file clustering
+WITH runs AS (
+  SELECT *, lag(bid) OVER wf AS prev_bid, row_number() OVER wf AS rn_file
+  FROM {{d}}
+  WINDOW wf AS (PARTITION BY file ORDER BY sn)
+),
+g AS (
+  SELECT *,
+    sum(CAST(prev_bid IS NULL OR prev_bid <> bid AS INT)) OVER wf_run AS grp
+  FROM runs
+  WINDOW wf_run AS (PARTITION BY file ORDER BY sn
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+),
+b AS (
+  SELECT *,
+    lag(rid) OVER wb AS prev_rid, lag(sn) OVER wb AS prev_sn,
+    lag(gen) OVER wb AS prev_gen, lag(recv) OVER wb AS prev_recv,
+    first(rid) OVER wb_all AS first_rid, last(rid) OVER wb_all AS last_rid,
+    first(bs) OVER wb_all AS first_bs, last(sn) OVER wb_all AS last_sn,
+    count(1) OVER wb_all AS cnt,
+    {file_skips}
+  FROM g
+  WINDOW wb AS (PARTITION BY file, grp ORDER BY sn),
+         wb_all AS (PARTITION BY file, grp ORDER BY sn
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING),
+         wf_all AS (PARTITION BY file
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+),
+-- W6 qualification (sequential.py:61-86). The reference emits one
+-- error per run of equal bundleSize among qualifying records: its
+-- prev_bundle_size tracker always equals the bundleSize of the
+-- previous QUALIFYING record, so the dedup is a last() over the
+-- preceding qualifying rows.
+qual AS (
+  SELECT *,
+    first_rid = 0 AND last_rid = {_exact("first_bs", "- 1")} AND has_logf
+      AND cnt <> bs AND NOT skip_bs AS qual_full,
+    first_rid <> 0 AND last_rid <> {_exact("bs", "- 1")} AND NOT skip_bs AS qual_tail
+  FROM b
+),
+q AS (
+  SELECT *,
+    last(CASE WHEN qual_full THEN bs END, true) OVER wb_before AS prev_qbs_full,
+    last(CASE WHEN qual_tail THEN bs END, true) OVER wb_before AS prev_qbs_tail
+  FROM qual
+  WINDOW wb_before AS (PARTITION BY file, grp ORDER BY sn
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+),
+-- W8's per-file count of EMITTED errors: a NULL condition counts as
+-- not emitted, so it cannot make the sum NULL and let an erroring file
+-- also emit the all-pass row
+e AS (
+  SELECT *, sum({err_cnt}) OVER wf_all AS file_err_cnt
+  FROM q
+  WINDOW wf_all AS (PARTITION BY file
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+)
+SELECT file, v.serial_number, v.field_path, v.valid, v.details
+FROM (
+  SELECT file, explode(array(
+    {verdicts}
+  )) AS v
+  FROM e
+)
+WHERE v.emit
+"""
 
 
-def _row_error_count(checks) -> Column:
-    """Per-row EMITTED-error count: the sum of the W3-W6 emit flags.
-    Each flag is null-coalesced to false BEFORE the cast — the emit
-    filter already treats NULL as not-emitted, and one NULL condition
-    (e.g. a NULL bundleSize making ``bs > 1`` NULL) must not poison
-    the row's whole sum to NULL, which would silently drop the row's
-    OTHER emitted errors from file_err_cnt and let an erroring file
-    also emit the W8 all-pass row (r14 session review finding)."""
-    err = None
-    for _, _, cond, _ in checks:
-        c = F.coalesce(cond, F.lit(False)).cast("int")
-        err = c if err is None else err + c
-    return err
+_SEQUENTIAL_SQL = _sequential_sql()
 
 
 def sequential_results(df: DataFrame, spec: SequentialSpec) -> DataFrame:
@@ -293,38 +311,23 @@ def sequential_results(df: DataFrame, spec: SequentialSpec) -> DataFrame:
     row (W8). A file's result-row count is therefore its error count,
     or 1 when it has none — validate_queue's count
     (sequential.py:22-25)."""
-    d, checks = _windowed_checks(df, spec)
-
-    # W8: the first row of an error-free file emits the all-pass row —
-    # inline, so the whole operator is one explode with no unions/joins
-    verdicts = F.array(
+    # the spec's SQL, which carries INI values, goes in as expressions,
+    # never into the formatted statement. spark.sql drops the view it
+    # makes of ``fields`` when done, and dropping a view uncaches the
+    # plan it names: a view of ``df`` itself would uncache a persisted
+    # ``df``.
+    fields = df.selectExpr(
+        f"{spec.file} AS file",
+        f"CAST({spec.bundle_id} AS BIGINT) AS bid",
+        f"CAST({spec.serial_number} AS BIGINT) AS sn",
+        f"CAST({spec.record_id} AS BIGINT) AS rid",
+        f"CAST({spec.bundle_size} AS BIGINT) AS bs",
+        f"date_trunc('SECOND', {spec.record_generated_at}) AS gen",
+        f"date_trunc('SECOND', {spec.ode_received_at}) AS recv",
+        f"{spec.has_log_file_name} AS has_logf",
         *[
-            F.struct(
-                F.lit(path).alias("field_path"),
-                F.when(cond, sn).alias("serial_number"),
-                F.lit(False).alias("valid"),
-                cond.alias("emit"),
-                details.alias("details"),
-            )
-            for path, sn, cond, details in checks
+            f"CAST({spec.skip_flags.get(path, 'false')} AS BOOLEAN) AS flag_{c}"
+            for path, c in _SKIPPABLE.items()
         ],
-        F.struct(
-            F.lit(SEQUENTIAL_CHECK).alias("field_path"),
-            F.lit(None).cast("long").alias("serial_number"),
-            F.lit(True).alias("valid"),
-            ((F.col("file_err_cnt") == 0) & (F.col("rn_file") == 1)).alias("emit"),
-            F.lit("").alias("details"),
-        ),
     )
-    return (
-        d.select("file", F.explode(verdicts).alias("v"))
-        .filter(F.col("v.emit"))
-        .select(
-            "file",
-            F.col("v.serial_number").alias("serial_number"),
-            F.col("v.field_path").alias("field_path"),
-            F.col("v.valid").alias("valid"),
-            F.col("v.details").alias("details"),
-        )
-    )
-
+    return df.sparkSession.sql(_SEQUENTIAL_SQL, d=fields)

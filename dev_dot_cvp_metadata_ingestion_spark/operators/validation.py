@@ -56,7 +56,7 @@ from dataclasses import replace
 from datetime import datetime, timedelta
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
@@ -187,8 +187,8 @@ class _Fields:
     missing or a JSON null) and ``v`` its VARIANT. Bound, each distinct
     path's text is read once per record and ``field.once(expr)`` is
     computed once per record, in projections under the verdicts (see
-    :meth:`project`); unbound (the skip flags, which leave as Columns),
-    both stay where they are tested."""
+    :meth:`project`); unbound (the skip flags, SQL text that the
+    sequential operator reads), both stay where they are tested."""
 
     def __init__(self, bases: frozenset[str] = frozenset(), bound: bool = True):
         self.bases, self.bound = bases, bound
@@ -287,6 +287,8 @@ def _type_check_details(rule: Rule, x: _Val, field) -> str:
             # decimal rule passes any present non-empty value
             return "NULL"
         d = field.once(_decimal(x))
+        # %d of the Decimal: truncated toward zero, exactly
+        whole = f"CAST(CASE WHEN {d} < 0 THEN ceil({d}) ELSE floor({d}) END AS STRING)"
         branches = [(
             f"({d} IS NULL)",  # present value that won't cast
             "format_string('failure to perform decimal validation on %s', "
@@ -299,8 +301,8 @@ def _type_check_details(rule: Rule, x: _Val, field) -> str:
             if limit is not None:
                 branches.append((
                     f"({d} {op} CAST({format(limit, 'f')}BD AS {_DEC}))",
-                    f"format_string('Value \\'%d\\' is {word} limit \\'%d\\'', "
-                    f"CAST({d} AS BIGINT), {int(limit)})",
+                    f"format_string('Value \\'%s\\' is {word} limit \\'%d\\'', "
+                    f"{whole}, {int(limit)})",
                 ))
         return _case(branches)
     if rule.type == TYPE_TIMESTAMP:
@@ -496,8 +498,8 @@ def rule_details(rule: Rule, field, path_label: str | None = None) -> str:
     return _case(chain, uncond) if chain else uncond
 
 
-def skip_flag_exprs(ruleset: RuleSet) -> dict[str, Column]:
-    """Per-record boolean columns: rule path → 'this record meets a
+def skip_flag_exprs(ruleset: RuleSet) -> dict[str, str]:
+    """Per-record boolean SQL expressions: rule path → 'this record meets a
     skipSequentialValidation condition for that path'
     (validator.py:110-112). The sequential operator ORs them per file —
     the reference's skip set is per-file state.
@@ -508,7 +510,7 @@ def skip_flag_exprs(ruleset: RuleSet) -> dict[str, Column]:
     timestamp paths against that set (sequential.py:42-56), so a
     list-rule skip condition can never gate anything. The flags read
     ``rec``."""
-    out: dict[str, Column] = {}
+    out: dict[str, str] = {}
     for rule in ruleset.rules:
         flags = [
             _condition_met(c, rule, _Fields(bound=False))
@@ -516,7 +518,7 @@ def skip_flag_exprs(ruleset: RuleSet) -> dict[str, Column]:
             if _is_skip_condition(c)
         ]
         if flags:
-            out[rule.path] = F.expr(f"coalesce({' OR '.join(flags)}, false)")
+            out[rule.path] = f"coalesce({' OR '.join(flags)}, false)"
     return out
 
 

@@ -100,14 +100,14 @@ def _events_with_file(
 
 def _events_seq_spec() -> SequentialSpec:
     return SequentialSpec(
-        file=F.col("file"),
-        bundle_id=F.col("user_id"),
-        serial_number=F.col("event_id"),
-        record_id=F.get_json_object("props", "$.k").cast("long"),
-        bundle_size=F.col("user_id") % 4 + 1,
-        record_generated_at=F.col("ts"),
-        ode_received_at=F.col("ts"),
-        has_log_file_name=F.col("event_type") != "error",
+        file="file",
+        bundle_id="user_id",
+        serial_number="event_id",
+        record_id="CAST(get_json_object(props, '$.k') AS BIGINT)",
+        bundle_size="user_id % 4 + 1",
+        record_generated_at="ts",
+        ode_received_at="ts",
+        has_log_file_name="event_type <> 'error'",
     )
 
 

@@ -3,7 +3,8 @@ the reference's per-file Lambda: directory in → four tables out.
 
     records     = scan (S3-S4) + provenance + the VARIANT ``rec`` [persisted]
     validation  = rule validation (one compiled SQL select)    [persisted]
-    sequential  = ordering checks over records (per-file windows)
+    sequential  = ordering checks over records (one compiled SQL
+                  statement of per-file windows)
     tallies     = per-file A2 aggregates over validation (file_tallies)
     file_counts = per-file record counts (A1) over records
 
@@ -12,7 +13,13 @@ operators/metadata.py over the file listing and these tallies.
 
 Each line is parsed once, into one VARIANT column that the rules and
 the sequential fields read by JSON path: no pass infers a schema, and
-no file can change another file's verdicts.
+no file can change another file's verdicts. Which JSON paths feed the
+sequential checks is known to operators/sequential.py alone
+(``record_spec``).
+
+Every frame reaches the JVM as SQL text built in pure Python, so the
+whole build is about a hundred py4j calls however many rules the INI
+declares.
 
 The input is read and parsed, and the rules evaluated, once: ``records``
 and ``validation`` are persisted (lazily, MEMORY_AND_DISK), so the four
@@ -31,8 +38,8 @@ from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.sequential import SequentialSpec, sequential_results
-from ..operators.validation import REC, skip_flag_exprs, validate
+from ..operators.sequential import record_spec, sequential_results
+from ..operators.validation import REC, validate
 from ..sources.files import file_lines
 from ..sources.rules import RuleSet
 
@@ -80,20 +87,18 @@ def cv_records(lines: DataFrame) -> DataFrame:
     NULL, so each of its rules reads "Field missing"; a repeated key
     keeps its last value (``get_spark`` allows duplicate keys).
     """
-    return lines.select(
+    return lines.selectExpr(
         "file_path",
         "file_size",
         "file_mtime",
-        F.col("line_no").alias("record_uid"),
-        F.try_parse_json("line").alias(REC),
+        "line_no AS record_uid",
+        f"try_parse_json(line) AS {REC}",
     )
 
 
 def file_counts(records: DataFrame) -> DataFrame:
     """A1: per-file record counts (``file_path``, ``MessageCount``)."""
-    return records.groupBy("file_path").agg(
-        F.count(F.lit(1)).alias("MessageCount")
-    )
+    return records.groupBy("file_path").agg(F.expr("count(1) AS MessageCount"))
 
 
 def file_tallies(validation: DataFrame) -> DataFrame:
@@ -102,16 +107,22 @@ def file_tallies(validation: DataFrame) -> DataFrame:
     ``num_messages_total``, ``num_validations``, ``num_errors``,
     ``num_error_messages`` and ``num_valid_messages``. Every verdict
     row counts, list-rule rows included."""
-    return validation.groupBy("file_path").agg(
-        F.count_distinct("record_uid").alias("num_messages_total"),
-        F.count(F.lit(1)).alias("num_validations"),
-        F.sum((~F.col("valid")).cast("long")).alias("num_errors"),
-        F.count_distinct(
-            F.when(~F.col("valid"), F.col("record_uid"))
-        ).alias("num_error_messages"),
-    ).withColumn(
-        "num_valid_messages",
-        F.col("num_messages_total") - F.col("num_error_messages"),
+    return validation.sparkSession.sql(
+        """
+        SELECT *, num_messages_total - num_error_messages AS num_valid_messages
+        FROM (
+          SELECT file_path,
+                 count(DISTINCT record_uid) AS num_messages_total,
+                 count(1) AS num_validations,
+                 sum(CAST(NOT valid AS BIGINT)) AS num_errors,
+                 count(DISTINCT CASE WHEN NOT valid THEN record_uid END)
+                   AS num_error_messages
+          FROM {v} GROUP BY file_path
+        )
+        """,
+        # a view of the columns read, not of ``validation``: dropping a
+        # view of a persisted frame uncaches it (see sequential_results)
+        v=validation.selectExpr("file_path", "record_uid", "valid"),
     )
 
 
@@ -138,26 +149,8 @@ def run_cv_pipeline(
         StorageLevel.MEMORY_AND_DISK
     )
 
-    # NULL when absent, a JSON null, or not of the type
-    meta = lambda p, t="bigint": F.expr(  # noqa: E731
-        f"try_variant_get({REC}, '$.metadata.{p}', '{t}')"
-    )
-    ts = lambda p: F.to_timestamp(  # noqa: E731
-        F.regexp_replace(meta(p, "string"), "Z$", "+00:00")
-    )
-    spec = SequentialSpec(
-        file=F.col("file_path"),
-        bundle_id=meta("serialId.bundleId"),
-        serial_number=meta("serialId.serialNumber"),
-        record_id=meta("serialId.recordId"),
-        bundle_size=meta("serialId.bundleSize"),
-        record_generated_at=ts("recordGeneratedAt"),
-        ode_received_at=ts("odeReceivedAt"),
-        has_log_file_name=meta("logFileName", "string").isNotNull(),
-        skip_flags=skip_flag_exprs(ruleset),
-    )
     sequential = (
-        sequential_results(records, spec)
+        sequential_results(records, record_spec(ruleset))
         if ruleset.sequential
         else spark.createDataFrame(
             [],
@@ -199,13 +192,13 @@ def observe_pipeline(
     obs_validation = Observation("cv_validation")
     records = result.records.observe(
         obs_records,
-        F.count(F.lit(1)).alias("n_records"),
-        F.approx_count_distinct("file_path").alias("n_files"),
+        F.expr("count(1) AS n_records"),
+        F.expr("approx_count_distinct(file_path) AS n_files"),
     )
     validation = result.validation.observe(
         obs_validation,
-        F.count(F.lit(1)).alias("n_validations"),
-        F.sum((~F.col("valid")).cast("long")).alias("n_errors"),
+        F.expr("count(1) AS n_validations"),
+        F.expr("sum(CAST(NOT valid AS BIGINT)) AS n_errors"),
     )
     observed = PipelineResult(
         records=records,

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from ..operators.validation import _lit
 from .rules import RuleSet
 
 # matches the text reader's record delimiters (\n, \r\n, bare \r)
@@ -63,27 +64,13 @@ def wholetext_lines(text: DataFrame) -> DataFrame:
     """
     # _metadata.file_path percent-encodes the key; '+' is escaped first
     # because url_decode would read it as a space
-    path = F.replace(F.col("_metadata.file_path"), F.lit("+"), F.lit("%2B"))
-    return (
-        text.select(
-            F.url_decode(path).alias("file_path"),
-            F.col("_metadata.file_size").alias("file_size"),
-            F.col("_metadata.file_modification_time").alias("file_mtime"),
-            F.posexplode(
-                F.filter(
-                    F.split(F.col("value"), _LINE_SPLIT),
-                    lambda x: x.rlike(_NON_BLANK),
-                )
-            ).alias("pos", "line"),
-        )
-        .select(
-            "file_path",
-            "file_size",
-            "file_mtime",
-            (F.col("pos") + 1).alias("line_no"),
-            "line",
-        )
-    )
+    return text.selectExpr(
+        "url_decode(replace(_metadata.file_path, '+', '%2B')) AS file_path",
+        "_metadata.file_size AS file_size",
+        "_metadata.file_modification_time AS file_mtime",
+        f"posexplode(filter(split(value, {_lit(_LINE_SPLIT)}), "
+        f"x -> x RLIKE {_lit(_NON_BLANK)})) AS (pos, line)",
+    ).selectExpr("file_path", "file_size", "file_mtime", "pos + 1 AS line_no", "line")
 
 
 def file_lines(spark: SparkSession, path: str) -> DataFrame:

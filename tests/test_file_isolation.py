@@ -1,8 +1,9 @@
 """File isolation: under one Lambda per object, no file could change
 another file's verdicts. Each record is parsed on its own into a
 VARIANT, so a sweep must give every file the rows it gets alone, even
-next to files whose values have other JSON types, and a stream must
-read a field that only a later file carries."""
+next to files whose values have other JSON types or whose values no
+BIGINT or timestamp holds, and a stream must read a field that only a
+later file carries."""
 
 from __future__ import annotations
 
@@ -17,15 +18,33 @@ from dev_dot_cvp_metadata_ingestion_spark.sources.rules import (
 )
 from dev_dot_cvp_metadata_ingestion_spark.streaming.stream import stream_cv_pipeline
 
-from .test_validation_parity import FIXTURES
+from .test_validation_parity import FIXTURES, make_record
 
 NOW = datetime(2026, 1, 1, tzinfo=timezone.utc)
 
 # the first widens locationData to a string if a schema is inferred
-# over the sweep; the second makes metadata a string
+# over the sweep; the second makes metadata a string. The rest hold
+# values that a cast or BIGINT arithmetic would fail on, which under
+# ANSI mode aborts the whole query: a timestamp that does not parse,
+# recordId + 1 and bundleSize - 1 past the BIGINT range, and a decimal
+# whose %d rendering is past it.
 PROBES = {
-    "probe_location.json": {"metadata": {"receivedMessageDetails": {"locationData": 5}}},
-    "probe_metadata.json": {"metadata": "x"},
+    "probe_location.json": [{"metadata": {"receivedMessageDetails": {"locationData": 5}}}],
+    "probe_metadata.json": [{"metadata": "x"}],
+    "probe_bad_timestamp.json": [make_record(**{"metadata.recordGeneratedAt": "garbage"})],
+    "probe_record_id_max.json": [
+        make_record(**{"metadata.serialId.recordId": 2**63 - 1,
+                       "metadata.serialId.bundleSize": 2}),
+        make_record(**{"metadata.serialId.recordId": 1,
+                       "metadata.serialId.serialNumber": 1,
+                       "metadata.serialId.bundleSize": 2}),
+    ],
+    "probe_bundle_size_min.json": [
+        make_record(**{"metadata.serialId.bundleSize": -(2**63)}),
+    ],
+    "probe_decimal_huge.json": [
+        make_record(**{"metadata.receivedMessageDetails.locationData.speed": 1e20}),
+    ],
 }
 # objects the one line reader takes as they are: a gzip object with no
 # extension is not decompressed (its bytes read as unparseable lines),
@@ -72,8 +91,8 @@ def test_each_file_gets_its_solo_rows_in_a_sweep(spark, tmp_path):
     for name, records in files.items():
         _write(tmp_path / f"solo_{name}", name, records)
         _write(sweep, name, records)
-    for name, record in PROBES.items():
-        _write(sweep, name, [record])
+    for name, records in PROBES.items():
+        _write(sweep, name, records)
     for name, payload in RAW_PROBES.items():
         (sweep / name).write_bytes(payload)
 

@@ -6,13 +6,21 @@ joins broadcast, and the sequential operator shuffles exactly once.
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+from dev_dot_cvp_metadata_ingestion_spark.plans.pipeline import run_cv_pipeline
+from dev_dot_cvp_metadata_ingestion_spark.sources.rules import (
+    fixture_rules_path,
+    load_rules_file,
+)
 
 from .conftest import SF_SMOKE
+from .test_pipeline import _record
 
 QUERIES = entrymod.queries()
 
@@ -42,12 +50,26 @@ def test_dimension_joins_broadcast(spark):
     assert plan.count("BroadcastHashJoin") >= 3  # customer, nation, region
 
 
-def test_sequential_single_shuffle(spark):
+def test_sequential_single_shuffle(spark, tmp_path):
     # one hash-partitioning exchange on file; bundle windows reuse the
-    # clustering (file is a prefix of (file, grp))
+    # clustering (file is a prefix of (file, grp)) — in the registry
+    # query and in the pipeline's sequential table alike
     plan = plan_of("cv_sequential_checks", spark)
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 1, f"expected 1 shuffle, plan has {n_exchanges}"
+
+    (tmp_path / "a.json").write_text(
+        "".join(json.dumps(_record(i)) + "\n" for i in range(3))
+    )
+    ruleset = load_rules_file(fixture_rules_path())
+    ruleset.sequential = True
+    res = run_cv_pipeline(spark, str(tmp_path), ruleset)
+    try:
+        plan = res.sequential._jdf.queryExecution().executedPlan().toString()
+    finally:
+        res.unpersist()
+    n_exchanges = plan.count("Exchange hashpartitioning")
+    assert n_exchanges == 1, f"expected 1 shuffle, pipeline has {n_exchanges}"
 
 
 def test_validation_no_python_udf(spark):

@@ -11,6 +11,7 @@ group)."""
 
 from __future__ import annotations
 
+import json
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -19,8 +20,10 @@ from pyspark.sql import functions as F
 
 from dev_dot_cvp_metadata_ingestion_spark.operators.sequential import (
     SequentialSpec,
+    record_spec,
     sequential_results,
 )
+from dev_dot_cvp_metadata_ingestion_spark.sources.rules import parse_rules_ini
 
 from .sequential_model import validate_file
 
@@ -104,15 +107,15 @@ SKIP_PATH = "metadata.serialId.serialNumber"
 
 def _spec(with_skip: bool) -> SequentialSpec:
     return SequentialSpec(
-        file=F.col("file"),
-        bundle_id=F.col("bid"),
-        serial_number=F.col("sn"),
-        record_id=F.col("rid"),
-        bundle_size=F.col("bs"),
-        record_generated_at=F.col("gen"),
-        ode_received_at=F.col("recv"),
-        has_log_file_name=F.col("logf"),
-        skip_flags={SKIP_PATH: F.col("skipflag")} if with_skip else {},
+        file="file",
+        bundle_id="bid",
+        serial_number="sn",
+        record_id="rid",
+        bundle_size="bs",
+        record_generated_at="gen",
+        ode_received_at="recv",
+        has_log_file_name="logf",
+        skip_flags={SKIP_PATH: "skipflag"} if with_skip else {},
     )
 
 
@@ -256,3 +259,120 @@ def test_null_condition_does_not_poison_error_count(spark):
     # (seq_rows, seq_errors) as cv_validation_tallies counts them
     assert (len(res), sum(not r[3] for r in res)) == (1, 1)
     assert res == _model(rows, with_skip=False)
+
+
+def test_bigint_extremes_match_model(spark):
+    """``prev + 1`` and ``bundleSize - 1`` at the ends of the BIGINT
+    range compare and print as the model's Python ints do, where BIGINT
+    arithmetic would overflow and, under ANSI mode, abort the query."""
+    top, bottom = 2**63 - 1, -(2**63)
+    rows = [
+        ("max_rid", 1, 0, top, 2, T0, T0, True, False),
+        ("max_rid", 1, 1, 1, 2, T0, T0, True, False),
+        ("max_sn", 1, top, 0, 1, T0, T0, True, False),
+        ("max_sn", 1, top, 0, 1, T0, T0, True, False),
+        ("min_bs_full", 1, 0, 0, bottom, T0, T0, True, False),
+        ("min_bs_tail", 1, 0, 1, bottom, T0, T0, True, False),
+    ]
+    df = spark.createDataFrame(rows, SCHEMA)
+    res = _canon(sequential_results(df, _spec(with_skip=False)))
+    assert res == _model(rows, with_skip=False)
+    details = {r[4] for r in res}
+    assert (
+        "Detected incorrectly incremented recordId. "
+        "Expected recordId '9223372036854775808' but got '1'"
+    ) in details
+    assert (
+        "Detected incorrectly incremented serialNumber. Expected "
+        "serialNumber '9223372036854775808' but got '9223372036854775807'"
+    ) in details
+    assert (
+        "bundleSize doesn't match last recordId. Last recordId: '1' != "
+        "(bundleSize-1: '-9223372036854775809')"
+    ) in details
+
+
+def _json_record(sn, rid, bs, gen, note="x"):
+    return {"metadata": {
+        "recordGeneratedAt": gen,
+        "odeReceivedAt": "2019-01-01T00:00:00.000Z",
+        "logFileName": "f.log",
+        "note": note,
+        "serialId": {"bundleId": 1, "bundleSize": bs, "recordId": rid,
+                     "serialNumber": sn},
+    }}
+
+
+def _model_record(rec: dict) -> dict:
+    meta = rec["metadata"]
+    ids = meta["serialId"]
+
+    def ts(text):
+        try:
+            return datetime.fromisoformat(text.replace("Z", "+00:00"))
+        except ValueError:
+            return None
+
+    return dict(sn=ids["serialNumber"], rid=ids["recordId"],
+                bid=ids["bundleId"], bs=ids["bundleSize"],
+                gen=ts(meta["recordGeneratedAt"]),
+                recv=ts(meta["odeReceivedAt"]), logf="logFileName" in meta)
+
+
+# skip values that the spark.sql formatter would read as a field, or
+# refuse, if they reached its text
+BRACE_INI = """
+[_settings]
+DataType = json
+Sequential = True
+
+[metadata.serialId.serialNumber]
+Type = serial
+EqualsValue = {"conditions":[{"ifPart":{"fieldName":"metadata.note","fieldValues":["{d}", "}{"]},"thenPart":{"skipSequentialValidation":"true"}}]}
+"""
+
+
+def test_record_bindings_match_model(spark):
+    """Through ``record_spec``, the pipeline's JSON bindings: an unparseable
+    recordGeneratedAt reads NULL, so W5 compares nothing against it;
+    BIGINT-edge ids are exact; a skip value with braces gates its
+    file."""
+    ruleset = parse_rules_ini(BRACE_INI)
+    files = {
+        "bad_ts": [
+            _json_record(0, 0, 3, "2019-01-01T00:00:09.000Z"),
+            _json_record(1, 1, 3, "garbage"),
+            _json_record(2, 2, 3, "2019-01-01T00:00:01.000Z"),
+        ],
+        "max_rid": [
+            _json_record(0, 2**63 - 1, 2, "2019-01-01T00:00:00.000Z"),
+            _json_record(1, 1, 2, "2019-01-01T00:00:00.000Z"),
+        ],
+        "min_bs": [_json_record(0, 1, -(2**63), "2019-01-01T00:00:00.000Z")],
+        "gap_skipped": [
+            _json_record(0, 0, 2, "2019-01-01T00:00:00.000Z", note="{d}"),
+            _json_record(5, 1, 2, "2019-01-01T00:00:00.000Z"),
+        ],
+        "gap": [
+            _json_record(0, 0, 2, "2019-01-01T00:00:00.000Z", note="{x}"),
+            _json_record(5, 1, 2, "2019-01-01T00:00:00.000Z"),
+        ],
+    }
+    df = spark.createDataFrame(
+        [(f, json.dumps(r)) for f, recs in files.items() for r in recs],
+        "file_path string, line string",
+    ).selectExpr("file_path", "try_parse_json(line) AS rec")
+    got = _canon(sequential_results(df, record_spec(ruleset)))
+    model = []
+    for name, recs in files.items():
+        skips = {SKIP_PATH} if any(
+            r["metadata"]["note"] in ("{d}", "}{") for r in recs
+        ) else set()
+        model += [
+            (name, *row)
+            for row in validate_file([_model_record(r) for r in recs], skips)
+        ]
+    assert got == _sorted(model)
+    assert ("bad_ts", None, "SequentialCheck", True, "") in got
+    assert ("gap_skipped", None, "SequentialCheck", True, "") in got
+    assert any(r[0] == "gap" and not r[3] for r in got)

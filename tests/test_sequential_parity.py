@@ -11,8 +11,6 @@ from datetime import datetime, timedelta, timezone
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from dev_dot_cvp_metadata_ingestion_spark.operators.sequential import (
     SequentialSpec,
     sequential_results,
@@ -79,15 +77,15 @@ def engine_errors(spark, records, skips=()):
         "recv timestamp, logf boolean, skipflag boolean",
     )
     spec = SequentialSpec(
-        file=F.col("file"),
-        bundle_id=F.col("bid"),
-        serial_number=F.col("sn"),
-        record_id=F.col("rid"),
-        bundle_size=F.col("bs"),
-        record_generated_at=F.col("gen"),
-        ode_received_at=F.col("recv"),
-        has_log_file_name=F.col("logf"),
-        skip_flags={p: F.col("skipflag") for p in skips},
+        file="file",
+        bundle_id="bid",
+        serial_number="sn",
+        record_id="rid",
+        bundle_size="bs",
+        record_generated_at="gen",
+        ode_received_at="recv",
+        has_log_file_name="logf",
+        skip_flags={p: "skipflag" for p in skips},
     )
     rows = sequential_results(df, spec).collect()
     return Counter((r.valid, r.details) for r in rows)

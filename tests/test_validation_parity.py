@@ -4,7 +4,8 @@ engine's SQL-text rule compiler produces the same verdicts
 field-for-field.
 
 This is the strongest correctness signal available (the reference ships
-no tests, SURVEY §5). Fixtures cover: valid records, range violations,
+no tests, SURVEY §5). Fixtures cover: valid records, range violations
+(two past the BIGINT range),
 enum misses, missing/empty fields, conditional (matchAgainst /
 startsWithField / existence-style) rules, scalar-EqualsValue no-ops,
 and the sequential skip set.
@@ -15,6 +16,8 @@ from __future__ import annotations
 import json
 
 import pytest
+
+from pyspark.sql import functions as F
 
 from dev_dot_cvp_metadata_ingestion_spark.operators.validation import (
     skip_flag_exprs,
@@ -165,6 +168,9 @@ FIXTURES = [
     tmc_record(**{"metadata.request.ode.verb": "GET"}),  # 14: TMC verb not in [POST,PUT]
     tmc_record(**{"metadata.request.ode.version": 3.0}),  # 15: numeric matchAgainst 3.0∈[3]
     tmc_record(**{"metadata.request.snmp.enable": 2}),  # 16: TMC snmp range violation
+    # 17, 18: %d of a value past the BIGINT range, truncated exactly
+    make_record(**{"metadata.receivedMessageDetails.locationData.speed": 1e20}),
+    make_record(**{"metadata.receivedMessageDetails.locationData.speed": -1.5e19}),
 ]
 
 
@@ -191,7 +197,7 @@ def engine_results(spark, tmp_path_factory):
     df = with_rec(df, ruleset)
     if flags:
         row = df.agg(
-            *[F_max(c).alias(p) for p, c in flags.items()]
+            *[F_max(F.expr(c)).alias(p) for p, c in flags.items()]
         ).collect()[0]
         skips = {p for p in flags if row[p]}
     else:
@@ -200,8 +206,6 @@ def engine_results(spark, tmp_path_factory):
 
 
 def F_max(c):
-    from pyspark.sql import functions as F
-
     return F.max(c.cast("int")) == 1
 
 
@@ -233,3 +237,14 @@ def test_skip_set_matches(reference_results, engine_results):
     _, ref_skips = reference_results
     _, my_skips = engine_results
     assert ref_skips == my_skips
+
+
+def test_decimal_past_bigint_renders_exactly(reference_results, engine_results):
+    speed = "metadata.receivedMessageDetails.locationData.speed"
+    for line_no, details in (
+        (17, "Value '100000000000000000000' is greater than upper limit '163'"),
+        (18, "Value '-15000000000000000000' is less than lower limit '0'"),
+    ):
+        key = (line_no, speed)
+        assert reference_results[0][key] == (False, details)
+        assert engine_results[0][key] == (False, details)

@@ -1,6 +1,7 @@
 """The rule compiler emits SQL text: INI values that reach it must be
 escaped, and building the validation plan must stay a handful of JVM
-round trips however many rules the INI declares."""
+round trips however many rules the INI declares. So must building the
+whole pipeline, whose sequential checks are SQL text too."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import pytest
 from py4j import protocol as proto
 
 from dev_dot_cvp_metadata_ingestion_spark.operators.validation import validate
+from dev_dot_cvp_metadata_ingestion_spark.plans.pipeline import run_cv_pipeline
 from dev_dot_cvp_metadata_ingestion_spark.sources.rules import (
     fixture_rules_path,
     load_rules_file,
@@ -164,15 +166,8 @@ def test_scan_reads_only_the_columns_rules_read(spark, tmp_path):
     assert out.count() == 4
 
 
-def test_plan_build_is_a_handful_of_jvm_calls(spark, tmp_path, monkeypatch):
-    """validate() over the shipped 43-rule INI sends its rules to the
-    JVM as SQL text: at most 100 py4j commands in all."""
-    path = tmp_path / "records.json"
-    path.write_text(json.dumps({"n": 0, **_record(0)}) + "\n")
-    df = spark.read.json(str(path))
-    ruleset = load_rules_file(fixture_rules_path())
-    assert len(ruleset.rules) == 43
-
+def _py4j_commands(spark, monkeypatch, build):
+    """(py4j commands that ``build()`` sends, its result)."""
     client = spark.sparkContext._gateway._gateway_client
     sent = []
     send = client.send_command
@@ -186,7 +181,48 @@ def test_plan_build_is_a_handful_of_jvm_calls(spark, tmp_path, monkeypatch):
         return send(command, *args, **kwargs)
 
     monkeypatch.setattr(client, "send_command", counting)
-    out = validate(df, ruleset, ["n"])
-    monkeypatch.undo()
-    assert len(sent) <= 100, f"{len(sent)} py4j commands to build the plan"
+    try:
+        out = build()
+    finally:
+        monkeypatch.undo()
+    return len(sent), out
+
+
+def test_plan_build_is_a_handful_of_jvm_calls(spark, tmp_path, monkeypatch):
+    """validate() over the shipped 43-rule INI sends its rules to the
+    JVM as SQL text: at most 100 py4j commands in all."""
+    path = tmp_path / "records.json"
+    path.write_text(json.dumps({"n": 0, **_record(0)}) + "\n")
+    df = spark.read.json(str(path))
+    ruleset = load_rules_file(fixture_rules_path())
+    assert len(ruleset.rules) == 43
+
+    sent, out = _py4j_commands(
+        spark, monkeypatch, lambda: validate(df, ruleset, ["n"])
+    )
+    assert sent <= 100, f"{sent} py4j commands to build the plan"
     assert out.count() == 43
+
+
+def test_pipeline_build_is_a_handful_of_jvm_calls(spark, tmp_path, monkeypatch):
+    """run_cv_pipeline with sequential checks on: the lines, records,
+    rules, sequential checks and tallies reach the JVM as SQL text, at
+    most 150 py4j commands in all."""
+    (tmp_path / "in").mkdir()
+    (tmp_path / "in" / "a.json").write_text(
+        "".join(json.dumps(_record(i)) + "\n" for i in range(3))
+    )
+    ruleset = load_rules_file(fixture_rules_path())
+    ruleset.sequential = True
+
+    sent, res = _py4j_commands(
+        spark, monkeypatch,
+        lambda: run_cv_pipeline(spark, str(tmp_path / "in"), ruleset),
+    )
+    try:
+        assert sent <= 150, f"{sent} py4j commands to build the pipeline"
+        assert [tuple(r) for r in res.sequential.select("field_path", "valid").collect()] == [
+            ("SequentialCheck", True)
+        ]
+    finally:
+        res.unpersist()
